@@ -8,6 +8,8 @@ import scala.io.Source
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
+import graft.ops.Corpus
+import graft.query.OracleEngine
 
 /** `gate`: SparkEntry queries over the fixed gate tables, one closed
   * loop in name order. Only this workload runs `ops.*` and the
@@ -43,8 +45,11 @@ object Gate {
     }
   }
 
-  /** Copies the gate tables into a fresh dir and opens each one (reads
-    * its parquet footer).
+  /** Copies the gate tables into a fresh dir, opens each one (reads its
+    * parquet footer), then has `OracleEngine` compute its per-corpus
+    * statistics over the `Corpus.transcripts` view of the tables: the
+    * one-time tokenizing scan the DataFrame oracle keeps per table dir
+    * and every later BM25 oracle query over that dir reuses.
     */
   private def stageTables(spark: SparkSession, dataDir: String, to: String): Unit = {
     val from = new File(s"$dataDir/$Tables")
@@ -53,6 +58,7 @@ object Gate {
       JFiles.copy(f.toPath, new File(to, f.getName).toPath, StandardCopyOption.REPLACE_EXISTING)
       spark.read.parquet(s"$to/${f.getName}").schema
     }
+    OracleEngine.scoreAll(spark, Corpus.transcripts(spark, to), "warm", statsKey = Some(to))
   }
 
   def run(env: Env): Report = {

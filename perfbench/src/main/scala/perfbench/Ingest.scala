@@ -10,7 +10,7 @@ import graft.model.{QuerySpec, Turn}
 import graft.tokenize.Tokenizer
 
 /** `ingest`: an index build at local[4] over a staged seeded corpus,
-  * then appends whose follow-up search must find the new turns. The
+  * then appends whose follow-up searches must each find a new turn. The
   * index layers do nearly all the work; queries run only to prove each
   * append is searchable. Traced runs add a warm local[1] / local[4]
   * build pair for the scaling and per-stage numbers.
@@ -18,7 +18,11 @@ import graft.tokenize.Tokenizer
 object Ingest {
   val BaseConvs = 600L
   val DeltaConvs = 50L
-  val Appends = 1
+  /** Appends a run times; their median (nearest rank) is the run's
+    * `p50_ms`, so one append slowed by a burst of host load does not
+    * set it.
+    */
+  val Appends = 2
   val Cores = 4
   val SetupReps = 3
   /** Builds run with AQE off, as in graft.Bench: fixed shuffle widths
@@ -33,6 +37,11 @@ object Ingest {
     def base: String = s"$dir/base"
     def delta(i: Int): String = s"$dir/delta$i"
   }
+
+  /** Conversation ids of delta `i`, right after the base and the deltas
+    * before it.
+    */
+  private def deltaLo(i: Int): Long = BaseConvs + i * DeltaConvs
 
   private def read(spark: SparkSession, path: String): Dataset[Turn] = {
     import spark.implicits._
@@ -50,8 +59,6 @@ object Ingest {
     }
   }
 
-  private def deltaLo(i: Int): Long = BaseConvs + i * DeltaConvs
-
   /** Writes the base corpus and the deltas as parquet; their turn and
     * text-byte counts come from the generator itself, independent of
     * anything Spark wrote or the index will report.
@@ -62,18 +69,19 @@ object Ingest {
         (0 until TranscriptGen.turnsPerConv(seed, c)).map(t => TranscriptGen.text(seed, c, t)))
       (turns.length.toLong, turns.map(_.length.toLong).sum)
     }
-    val st = Staged(dir, 0, 0, Nil, Nil)
+    val (n, b) = sizes(0, BaseConvs)
+    val deltas = (0 until Appends).map(i => sizes(deltaLo(i), deltaLo(i) + DeltaConvs))
+    val st = Staged(dir, n, b, deltas.map(_._1), deltas.map(_._2))
     TranscriptGen.corpus(spark, BaseConvs, seed).write.mode("overwrite").parquet(st.base)
     (0 until Appends).foreach(i => convRange(spark, seed, deltaLo(i), deltaLo(i) + DeltaConvs)
       .write.mode("overwrite").parquet(st.delta(i)))
-    val (n, b) = sizes(0, BaseConvs)
-    val deltas = (0 until Appends).map(i => sizes(deltaLo(i), deltaLo(i) + DeltaConvs))
-    st.copy(turns = n, textBytes = b, deltaTurns = deltas.map(_._1), deltaBytes = deltas.map(_._2))
+    st
   }
 
-  /** The delta turn a follow-up search must find: the turn of a seeded
-    * delta conversation with the most distinct terms, queried by its
-    * three rarest terms (highest Zipf rank) as an AND query.
+  /** The turn of delta `i` its follow-up search must find: the turn of
+    * a seeded conversation of that delta with the most distinct terms,
+    * queried by its three rarest terms (highest Zipf rank) as an AND
+    * query.
     */
   def probeFor(seed: Long, i: Int): (String, Int, String) = {
     val conv = deltaLo(i) + java.lang.Math.floorMod(TranscriptGen.mix64(seed * 31 + i), DeltaConvs)
@@ -103,7 +111,7 @@ object Ingest {
     val postingsCount =
       if (!tracer.enabled || first.isEmpty) 0L
       else SegmentIO.readDict(spark, idx).agg(sum(col("df"))).collect()(0).getLong(0)
-    val appendRows = if (first.isEmpty) Nil else appends(env, spark, idx, staged)
+    val appended = if (first.isEmpty) Nil else append(env, spark, idx, staged)
     spark.stop()
 
     // ---- traced only: the 1 -> 4 core scaling pair, both sides warm ----
@@ -119,14 +127,17 @@ object Ingest {
 
     val thr = (ms: Double) => staged.turns / (ms / 1e3)
     val buildTurnsPerS = first.map(b => thr(b._1)).getOrElse(0.0)
-    val appendMs = appendRows.map(_._1)
+    val nan = Double.NaN
+    val done = appended.length == Appends
+    def medianOf(f: Append => Double) = if (done) Stats.median(appended.map(f)) else nan
     val e2e = Map(
       "setup_s" -> Stats.median(setups.map(_._2)),
       "throughput_per_s" -> buildTurnsPerS,
-      "p50_ms" -> Stats.medianOrNaN(appendMs))
+      "p50_ms" -> medianOf(_.ms))
     val detail = Map(
       "build_turns_per_s" -> buildTurnsPerS,
-      "append_turns_per_s" -> Stats.medianOrNaN(appendRows.map(r => r._4 / (r._1 / 1e3))),
+      "append_turns_per_s" ->
+        (if (done) staged.deltaTurns.sum / (appended.map(_.ms).sum / 1e3) else nan),
       "index_bytes_per_input_byte" -> indexBytes.values.sum / staged.textBytes.toDouble,
       "input_turns" -> staged.turns.toDouble)
     val layers = collection.mutable.Map[String, Double]()
@@ -134,10 +145,11 @@ object Ingest {
       "IndexBuilder.build_turns_per_s" -> detail("build_turns_per_s"),
       "IndexBuilder.append_turns_per_s" -> detail("append_turns_per_s"),
       "SegmentIO.index_bytes_per_input_byte" -> detail("index_bytes_per_input_byte"),
-      "IndexBuilder.append_s" -> Stats.medianOrNaN(appendRows.map(_._2)),
-      "IndexBuilder.append_rewritten_bytes_per_input_byte" -> Stats.medianOrNaN(appendRows.map(_._3)),
-      "spark.append_jobs" -> counters.totals("append").jobs / math.max(1, appendRows.length).toDouble,
-      "SearchEngine.first_search_after_append_ms" -> Stats.medianOrNaN(appendRows.map(r => r._1 - r._2 * 1e3)))
+      "IndexBuilder.append_s" -> medianOf(_.appendS),
+      "IndexBuilder.append_rewritten_bytes_per_input_byte" ->
+        (if (done) appended.map(_.rewritten).sum / staged.deltaBytes.sum else nan),
+      "spark.append_jobs" -> counters.totals("append").jobs.toDouble / Appends,
+      "SearchEngine.first_search_after_append_ms" -> medianOf(a => a.ms - a.appendS * 1e3))
     indexBytes.foreach { case (t, b) => layers(s"SegmentIO.bytes.$t") = b.toDouble }
     if (postingsCount > 0)
       layers("SegmentIO.postings_bytes_per_posting") = indexBytes("postings").toDouble / postingsCount
@@ -182,14 +194,18 @@ object Ingest {
     built.map(_ => (ops.latencies(kind).last, stages))
   }
 
-  /** The needle check, then the appends, each timed from the
+  /** One append's figures: ms from the appendBuild call until its
+    * follow-up search returned, the appendBuild's own seconds, and the
+    * bytes of index files it wrote or rewrote (traced runs only).
+    */
+  private final case class Append(ms: Double, appendS: Double, rewritten: Double)
+
+  /** The needle check, then the appends in order, each timed from its
     * appendBuild call until its follow-up search returns.
     *
-    * @return per append: (latency ms, appendBuild s, rewritten bytes
-    *         per delta input byte, delta turns)
+    * @return the appends' figures, up to the first that failed
     */
-  private def appends(env: Env, spark: SparkSession, idx: String,
-      staged: Staged): Seq[(Double, Double, Double, Double)] = {
+  private def append(env: Env, spark: SparkSession, idx: String, staged: Staged): Seq[Append] = {
     import env.{ops, tracer, counters}
     val engine = new SearchEngine(spark, idx)
     locally {
@@ -201,9 +217,9 @@ object Ingest {
           s"needle$i ranked ${hits.headOption.map(h => s"${h.conv_id}/${h.turn_idx}")} first")
       }
     }
-    var numDocs = staged.turns
-    (0 until Appends).flatMap { i =>
+    def one(i: Int): Option[Append] = {
       val (conv, turn, query) = probeFor(env.seed, i)
+      val expected = staged.turns + staged.deltaTurns.take(i + 1).sum
       val before = if (tracer.enabled) Files.dataFiles(idx) else Map.empty[String, (Long, Long)]
       tracer.newRequest()
       counters.phase("append")
@@ -217,22 +233,20 @@ object Ingest {
           engine.search(QuerySpec(query, topK = 100, conjunctive = true)))
         (st, resp)
       }) { case (st, resp) =>
-        Verify.that(st.numDocs == numDocs + staged.deltaTurns(i),
-          s"append $i: numDocs ${st.numDocs} != ${numDocs + staged.deltaTurns(i)}")
+        Verify.that(st.numDocs == expected, s"append $i: numDocs ${st.numDocs} != $expected")
         Verify.that(resp.hits.exists(h => h.conv_id == conv && h.turn_idx == turn),
           s"append $i: search '$query' did not find delta turn $conv/$turn")
       }
       counters.phase("check")
-      res.map { case (st, _) =>
-        numDocs = st.numDocs
+      res.map { _ =>
         val rewritten =
           if (!tracer.enabled) 0.0
           else Files.dataFiles(idx).collect {
             case (p, v) if !before.get(p).contains(v) => v._1
           }.sum.toDouble
-        (ops.latencies("append").last, appendS, rewritten / staged.deltaBytes(i),
-          staged.deltaTurns(i).toDouble)
+        Append(ops.latencies("append").last, appendS, rewritten)
       }
     }
+    Iterator.range(0, Appends).map(one).takeWhile(_.nonEmpty).flatten.toSeq
   }
 }

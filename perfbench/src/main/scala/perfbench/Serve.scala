@@ -8,7 +8,7 @@ import graft.api.SearchEngine
 import graft.gen.{QuerySet, TranscriptGen}
 import graft.gen.QuerySet.Q
 import graft.index.{IndexBuilder, SegmentIO, Varbyte}
-import graft.model.{QuerySpec, SearchResponse}
+import graft.model.{QuerySpec, SearchHit, SearchResponse}
 import graft.query.{Bm25, LocalIndex, LocalOracle, Wand}
 import graft.tokenize.Tokenizer
 
@@ -21,14 +21,17 @@ object Serve {
   val Cores = 4
   val SetupReps = 3
   /** Search ops interleave with local ops 1 : LocalPerSearch. */
-  val LocalPerSearch = 100
+  val LocalPerSearch = 63
   val MinLocal = 1000
-  val MinSearch = 10
+  /** Two blocks of [[SearchBlock]]. */
+  val MinSearch = 16
   val WarmLocal = 500
   val LocalChecks = 4
   val OracleChecks = 3
 
-  final case class OpList(local: IndexedSeq[Q], search: IndexedSeq[QuerySpec])
+  /** `searchKinds(i)` is the [[SearchBlock]] kind `search(i)` was drawn as. */
+  final case class OpList(local: IndexedSeq[Q], search: IndexedSeq[QuerySpec],
+      searchKinds: IndexedSeq[String])
 
   private val Roles = Seq(Seq("assistant"), Seq("user", "tool"), Seq("system"))
   private val Tools = Seq(Seq("bash"), Seq("grep", "read"), Seq("web", "write"))
@@ -45,37 +48,76 @@ object Serve {
     Q("generated", terms.mkString(" "), k, conj, minScore)
   }
 
-  /** A search op: a generated query plus seeded shares of residual
-    * filters, rerank and boost/penalize.
+  /** The reference queries the warm-up runs; the timed ops leave them out. */
+  val WarmSearch: Seq[Q] = QuerySet.referenceQueries.take(2)
+
+  /** The warm-up's search ops: the [[WarmSearch]] reference queries, then
+    * one generated op of every other kind and filter, and an AND query,
+    * so no timed op is the first of its kind (a first filter, rerank or
+    * boost costs up to ~3x the steady latency while Spark plans and
+    * compiles it).
     */
-  private def genSearch(r: SplittableRandom): QuerySpec = {
-    val q = genLocal(r)
-    var spec = QuerySpec(q.text, topK = q.k, minScore = q.minScore, conjunctive = q.conjunctive)
-    if (r.nextDouble() < 0.25) spec = r.nextInt(3) match {
-      case 0 => spec.copy(roles = Roles(r.nextInt(Roles.length)))
-      case 1 => spec.copy(tools = Tools(r.nextInt(Tools.length)))
-      case _ =>
-        val from = TranscriptGen.BaseEpochMs + r.nextInt(Convs.toInt / 2) * 3600000L
-        spec.copy(tsAfter = Some(new Timestamp(from)),
-          tsBefore = Some(new Timestamp(from + Convs / 2 * 3600000L)))
-    }
-    if (r.nextDouble() < 0.1) spec = spec.copy(rerank = true)
-    if (r.nextDouble() < 0.15)
-      spec = spec.copy(boostTerms = zipfTerms(r, 1 + r.nextInt(2)),
-        penalizeTerms = if (r.nextBoolean()) zipfTerms(r, 1) else Nil)
-    spec
+  def warmSearch(seed: Long): Seq[QuerySpec] = {
+    val r = new SplittableRandom(seed ^ 0x3b3b)
+    WarmSearch.map(toSpec) ++ (0 until 3).map(f => genSearch(r, "filter", Some(f))) ++
+      Seq("rerank", "boost").map(genSearch(r, _)) :+
+      QuerySpec(zipfTerms(r, 2).mkString(" "), conjunctive = true)
   }
 
-  /** The seed's op list: the 47 reference queries first, then
-    * generated ones; long enough for any run.
+  /** The kinds of search op, one entry per op of a block. Every
+    * `SearchBlock.length` search ops hold exactly these shares, in a
+    * seeded order, so each run's search median sees the same mix.
+    */
+  val SearchBlock: Seq[String] =
+    Seq("reference", "reference", "plain", "plain", "filter", "filter", "rerank", "boost")
+
+  private def toSpec(q: Q): QuerySpec =
+    QuerySpec(q.text, topK = q.k, minScore = q.minScore, conjunctive = q.conjunctive)
+
+  /** A search op of the given kind: a reference query (not one of the
+    * warm-up ones), or a generated query, bare or with a role/tool/ts
+    * filter, rerank, or boost/penalize terms.
+    */
+  private def genSearch(r: SplittableRandom, kind: String, filter: Option[Int] = None): QuerySpec = {
+    val refs = QuerySet.referenceQueries.drop(WarmSearch.length)
+    val spec = toSpec(if (kind == "reference") refs(r.nextInt(refs.length)) else genLocal(r))
+    kind match {
+      case "filter" => filter.getOrElse(r.nextInt(3)) match {
+        case 0 => spec.copy(roles = Roles(r.nextInt(Roles.length)))
+        case 1 => spec.copy(tools = Tools(r.nextInt(Tools.length)))
+        case _ =>
+          val from = TranscriptGen.BaseEpochMs + r.nextInt(Convs.toInt / 2) * 3600000L
+          spec.copy(tsAfter = Some(new Timestamp(from)),
+            tsBefore = Some(new Timestamp(from + Convs / 2 * 3600000L)))
+      }
+      case "rerank" => spec.copy(rerank = true)
+      case "boost" => spec.copy(boostTerms = zipfTerms(r, 1 + r.nextInt(2)),
+        penalizeTerms = if (r.nextBoolean()) zipfTerms(r, 1) else Nil)
+      case _ => spec
+    }
+  }
+
+  /** The seed's op list, long enough for any run: local ops are the 47
+    * reference queries, then generated ones; search ops are blocks of
+    * [[SearchBlock]], each shuffled by the seed.
     */
   def opList(seed: Long, nLocal: Int = 12000): OpList = {
     val r = new SplittableRandom(seed)
     val ref = QuerySet.referenceQueries
     val local = (ref ++ Seq.fill(nLocal - ref.length)(genLocal(r))).toIndexedSeq
-    val search = (ref.map(q => QuerySpec(q.text, topK = q.k, minScore = q.minScore,
-      conjunctive = q.conjunctive)) ++ Seq.fill(nLocal / LocalPerSearch)(genSearch(r))).toIndexedSeq
-    OpList(local, search)
+    val blocks = math.max(1, nLocal / LocalPerSearch / SearchBlock.length)
+    val search = Seq.fill(blocks)(shuffle(r, SearchBlock).map(k => k -> genSearch(r, k)))
+      .flatten.toIndexedSeq
+    OpList(local, search.map(_._2), search.map(_._1))
+  }
+
+  private def shuffle[A](r: SplittableRandom, xs: Seq[A]): Seq[A] = {
+    val a = collection.mutable.ArrayBuffer.from(xs)
+    (a.length - 1 to 1 by -1).foreach { i =>
+      val j = r.nextInt(i + 1)
+      val t = a(i); a(i) = a(j); a(j) = t
+    }
+    a.toSeq
   }
 
   def run(env: Env): Report = {
@@ -106,10 +148,10 @@ object Serve {
       val q = list.local(warmR.nextInt(list.local.length))
       li.retrieve(q.text, q.k, q.minScore, q.conjunctive)
     }
-    val warmQ = QuerySet.referenceQueries.take(2)
-    warmQ.foreach(q => eng.search(QuerySpec(q.text, topK = q.k)))
+    val warmSpecs = warmSearch(env.seed)
+    warmSpecs.foreach(eng.search)
     val seen = collection.mutable.Set[String]()
-    warmQ.foreach(q => seen ++= Tokenizer.tokenize(q.text))
+    warmSpecs.foreach(q => seen ++= Tokenizer.tokenize(q.text))
 
     val probe = new ServeProbe(env, idx, li, eng, seen)
     val gc0 = Gc.totalMs()
@@ -122,11 +164,11 @@ object Serve {
         val spec = list.search(ns % list.search.length)
         tracer.newRequest()
         tracer.span("request.search") {
-          probe.beforeSearch(spec)
           counters.phase("search")
           ops.op("search")(tracer.span("SearchEngine.search")(eng.search(spec)))(
-            resp => verifySearch(eng, li, spec, resp))
+            resp => verifySearch(eng, li, env.seed, spec, resp))
           counters.phase("probe")
+          probe.afterSearch(spec)
         }
         ns += 1
       } else {
@@ -204,11 +246,22 @@ object Serve {
       eng.MaxTopK), if (spec.rerank) 0.0 else spec.minScore)
   }
 
+  /** A keyword adjustment as the engine's boost/penalize formula gives
+    * it: w * min(m, 3) * 0.7^(m-1) for m > 0 terms found in the
+    * lower-cased text.
+    */
+  private def adjustment(terms: Seq[String], w: Double, text: String): Double = {
+    val m = terms.map(_.toLowerCase.trim).filter(_.nonEmpty).count(text.contains)
+    if (m > 0) w * math.min(m, 3).toDouble * StrictMath.pow(0.7, (m - 1).toDouble) else 0.0
+  }
+
   /** Checks a search response against the LocalIndex over-fetch the
     * engine's policy implies: same hits and 4-dp scores for a plain
-    * query; filter-passing hits drawn from the candidates otherwise.
+    * query, those scores plus the keyword adjustment of the turn's
+    * generated text under boost/penalize, and filter-passing hits drawn
+    * from the candidates under filters or rerank.
     */
-  def verifySearch(eng: SearchEngine, li: LocalIndex, spec: QuerySpec,
+  def verifySearch(eng: SearchEngine, li: LocalIndex, seed: Long, spec: QuerySpec,
       resp: SearchResponse): Unit = {
     val residual = spec.tsAfter.nonEmpty || spec.tsBefore.nonEmpty ||
       spec.roles.nonEmpty || spec.tools.nonEmpty
@@ -220,9 +273,17 @@ object Serve {
     Verify.that(hits.length <= spec.topK, s"${hits.length} hits for k=${spec.topK}")
     Verify.that(hits.forall(h => candScore.contains(h.doc_id)),
       s"'${spec.text}': a hit is not among the LocalIndex candidates")
-    if (!rescored)
-      Verify.that(hits.forall(h => eng.round4(candScore(h.doc_id)) == h.score),
-        s"'${spec.text}': hit scores differ from LocalIndex")
+    val expected = (h: SearchHit) => {
+      val base = eng.round4(candScore(h.doc_id))
+      if (!rescored) base
+      else {
+        val text = TranscriptGen.text(seed, h.conv_id.drop(1).toLong, h.turn_idx).toLowerCase
+        base + adjustment(spec.boostTerms, spec.boostWeight, text) -
+          adjustment(spec.penalizeTerms, spec.penaltyWeight, text)
+      }
+    }
+    Verify.that(hits.forall(h => expected(h) == h.score),
+      s"'${spec.text}': hit scores differ from LocalIndex${if (rescored) " plus keyword adjustment" else ""}")
     Verify.that(spec.roles.isEmpty || hits.forall(h => spec.roles.contains(h.role.toLowerCase)),
       "role filter not applied")
     Verify.that(spec.tools.isEmpty || hits.forall(h => spec.tools.contains(h.tool.toLowerCase)),
@@ -293,8 +354,12 @@ final class ServeProbe(env: Env, dir: String, li: LocalIndex,
       s"'${q.text}': per-shard Wand ${merged.take(3).toSeq} != LocalIndex ${result.take(3).toSeq}"))
   }
 
-  /** Route, retrieve and per-shard postings reads ahead of the search. */
-  def beforeSearch(spec: QuerySpec): Unit = {
+  /** Route, retrieve and per-shard postings reads, after the search op
+    * (so the op itself runs as in an untraced run): the dictionary and
+    * scan caches are warm by then. Dictionary misses are the op's terms
+    * this engine had not seen before it.
+    */
+  def afterSearch(spec: QuerySpec): Unit = {
     if (tracer.enabled) {
       val terms = tracer.span("Tokenizer.tokenize")(Tokenizer.tokenize(spec.text).distinct.sorted)
       dictMisses += terms.count(t => !seen.contains(t))

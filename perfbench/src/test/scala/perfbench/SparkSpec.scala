@@ -39,5 +39,24 @@ class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Serve.opList(7L, 600) == Serve.opList(7L, 600))
     assert(Serve.opList(7L, 600) != Serve.opList(8L, 600))
     assert(Ingest.probeFor(7L, 1) == Ingest.probeFor(7L, 1))
+    assert(Ingest.probeFor(7L, 0)._1 != Ingest.probeFor(7L, 1)._1)
+  }
+
+  test("every block of search ops holds the stated mix, without the warm-up queries") {
+    val list = Serve.opList(7L, 2000)
+    val ops = list.search
+    assert(ops.length == 2000 / Serve.LocalPerSearch / Serve.SearchBlock.length * Serve.SearchBlock.length)
+    val warm = Serve.WarmSearch.map(_.text).toSet
+    val refs = ops.zip(list.searchKinds).collect { case (s, "reference") => s.text }
+    assert(refs.nonEmpty && !refs.exists(warm.contains))
+    list.searchKinds.grouped(Serve.SearchBlock.length).foreach(kinds =>
+      assert(kinds.sorted == Serve.SearchBlock.sorted))
+    ops.grouped(Serve.SearchBlock.length).foreach { block =>
+      val filtered = block.count(s => s.roles.nonEmpty || s.tools.nonEmpty || s.tsAfter.nonEmpty)
+      assert(filtered == Serve.SearchBlock.count(_ == "filter"))
+      assert(block.count(_.rerank) == Serve.SearchBlock.count(_ == "rerank"))
+      assert(block.count(_.boostTerms.nonEmpty) == Serve.SearchBlock.count(_ == "boost"))
+    }
+    assert(ops.take(Serve.SearchBlock.length) != Serve.opList(8L, 2000).search.take(Serve.SearchBlock.length))
   }
 }
