@@ -122,7 +122,6 @@ object Bench {
       import s.implicits._
       s.read.parquet(path).as[Turn]
     }
-    def readCorpus(s: SparkSession) = readAt(s, corpusPath)
     // postingsGroups=2: per-group postings commit in the measured
     // headline build. Grouping is a fault-tolerance knob whose cost is
     // per-wave fixed overhead (job scheduling + a rank-shuffle rescan):

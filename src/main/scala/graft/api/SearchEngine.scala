@@ -2,28 +2,45 @@ package graft.api
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.parallel.CollectionConverters._
 
-import graft.index.{SegmentIO, Varbyte}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport, DateTimeUtils}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.index.SegmentIO
+import graft.index.SegmentIO.IndexedTurn
 import graft.model._
-import graft.query.{Bm25, Wand}
+import graft.query.{Bm25, Rerank, Wand}
 import graft.tokenize.Tokenizer
 
 /** Query-side facade mirroring the reference's
   * `SemanticSearchEngine.search` lifecycle (`src/search_engine.py:141-360`;
   * SURVEY §3.1):
   *
-  *   parse → dictionary lookup (segment selection via term-pushdown
-  *   scans) → per-shard posting traversal (block-max WAND / posting
-  *   intersection) → distributed top-k' merge → broadcast metadata
-  *   join → residual filters (ts range / role / tool, applied
-  *   post-retrieval with 5x over-fetch exactly like the reference,
-  *   `src/search_engine.py:198-212,247-289`) → truncate k → 4-dp
-  *   score rounding (`:281`) → keyword boost/penalize rescoring
-  *   (`:362-461`) → match statistics (`:324-339`).
+  *   parse → dictionary lookup (driver-cached; misses read the
+  *   term-sorted dictionary files directly) → routed per-shard
+  *   block-max WAND / posting intersection → top-k' merge → doc-store
+  *   fetch of the hit set → residual filters (ts range / role / tool,
+  *   applied post-retrieval with 5x over-fetch exactly like the
+  *   reference, `src/search_engine.py:198-212,247-289`) → proximity
+  *   rerank → truncate k → 4-dp score rounding (`:281`) → keyword
+  *   boost/penalize rescoring (`:362-461`) → match statistics
+  *   (`:324-339`).
   *
-  * Loaded segment metadata (stats, per-shard norms lineage) is cached
+  * A search runs ONE Spark job: the WAND fan-out of [[retrieve]].
+  * Everything around it is bounded (at most MaxTopK candidates), so,
+  * as in the reference, it runs in process: the dictionary and
+  * doc-store lookups are direct parquet reads
+  * ([[SegmentIO.readDictTerms]], [[SegmentIO.readShardDocs]]), and
+  * filters, rerank, rounding and boost are plain Scala with the
+  * semantics of the equivalent Spark column expressions (null fields,
+  * `lower`, `round`, `pow`, sort order) — a planned query per search
+  * would cost more than all of this work for ≤ MaxTopK rows.
+  *
+  * Loaded segment metadata (stats, dictionary entries) is cached
   * across queries, the analog of the reference's lazy index init
   * (`src/search_engine.py:48-70`).
   */
@@ -38,7 +55,7 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * the reference's resident in-RAM index
     * (`src/search_engine.py:48-70`). Only terms actually queried are
     * cached (bounded: whole-cache eviction like SegmentIO's dl
-    * cache), so repeat queries skip the dictionary job entirely.
+    * cache), so repeat queries skip the dictionary read entirely.
     *
     * Freshness: idf derives from the `stats` snapshot, and BOTH are
     * keyed to the segment's mutation generation (bumped by every
@@ -84,9 +101,7 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
       if (missing.isEmpty) Map.empty
       else {
         if (dictCache.size > MaxCachedTerms) dictCache.clear()
-        // term-IN predicate pushes into the (term-sorted) parquet scan
-        val found = SegmentIO.readDict(spark, indexDir)
-          .filter($"term".isin(missing.toSeq: _*)).collect()
+        val found = SegmentIO.readDictTerms(indexDir, missing)
           .map { d =>
             val idf = Bm25.idf(stats.numDocs, d.df)
             d.term ->
@@ -234,32 +249,28 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
   }
 
   /** Round half-up to 4 dp — the output contract of the reference
-    * result row (`src/search_engine.py:281`); matches Spark's
-    * `round()` semantics.
+    * result row (`src/search_engine.py:281`), as Spark's `round()`
+    * does it ([[SearchEngine.roundHalfUp]]).
     */
-  def round4(x: Double): Double =
-    new JBigDecimal(x).setScale(4, RoundingMode.HALF_UP).doubleValue()
+  def round4(x: Double): Double = SearchEngine.roundHalfUp(x, 4)
 
-  /** Bounded hit set → doc-store rows, with the serving path's
-    * pushdown shape: the hits are driver-resident (≤ MaxTopK by
-    * construction), so shard-isin + doc_id-range predicates reach the
-    * docs scan — shard dirs prune at the partition level, the id range
-    * at the row-group/page level (docs files are doc_id-sorted), and
-    * the local-relation broadcast join refines exactly. A broadcast
-    * hash join alone would prune nothing: at 10⁹ docs that full scan
-    * is a per-query corpus-sized read.
+  /** [[retrieve]]'s top-k, collected: the search's one Spark job. */
+  private def topHits(
+      queryText: String, k: Int, minScore: Double, conjunctive: Boolean): Array[(Long, Double)] =
+    retrieve(queryText, k, minScore, conjunctive).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+
+  /** A bounded hit set with its doc-store rows, in hit order: only the
+    * hit shards are read, in parallel, each with a doc_id-set predicate
+    * ([[SegmentIO.readShardDocs]]); `text` only when asked for. A hit
+    * with no doc-store row is dropped, as an inner join drops it.
     */
-  private def docsForHits(hitRows: Array[(Long, Double)]): DataFrame = {
-    val docs = SegmentIO.readDocs(spark, indexDir)
-    if (hitRows.isEmpty)
-      docs.join(broadcast(spark.emptyDataset[(Long, Double)]
-        .toDF("doc_id", "score")), "doc_id")
-    else {
-      val hitShards = hitRows.map(_._1 / stats.docsPerShard).distinct.toSeq
-      val (minId, maxId) = (hitRows.map(_._1).min, hitRows.map(_._1).max)
-      docs.filter($"shard".isin(hitShards: _*) && $"doc_id".between(minId, maxId))
-        .join(broadcast(hitRows.toSeq.toDF("doc_id", "score")), "doc_id")
-    }
+  private def withDocs(hits: Array[(Long, Double)], withText: Boolean): Array[(IndexedTurn, Double)] = {
+    val dps = stats.docsPerShard
+    val docs = hits.map(_._1).groupBy(_ / dps).toSeq.par
+      .flatMap { case (shard, ids) => SegmentIO.readShardDocs(indexDir, shard.toInt, ids, withText) }
+      .seq.map(d => d.doc_id -> d).toMap
+    hits.flatMap { case (d, sc) => docs.get(d).map(_ -> sc) }
   }
 
   /** Index-backed BM25 top-k as (caller-keyed id, exact score) — the
@@ -268,26 +279,22 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * (e.g. a documents corpus indexed via `Corpus.documentsAsTurns`,
     * inverted by `Corpus.docIdFromConv`). Routed WAND retrieve
     * (rank-and-score-identical to the exhaustive oracle —
-    * EngineParitySpec, HybridServeSpec), then the BOUNDED hit set maps
-    * internal→caller ids through the segment docs table with
-    * [[docsForHits]]'s pushdown join. Ordered (score desc, id asc);
-    * scores exact (rounding is an output-boundary contract).
+    * EngineParitySpec, HybridServeSpec), then the bounded hit set maps
+    * internal→caller ids through the doc store ([[withDocs]], no
+    * text). Ordered (score desc, id asc); scores exact (rounding is an
+    * output-boundary contract).
     *
-    * @param idFromConv column mapping the segment's conv_id back to
-    *                   the caller's id space
+    * @param idFromConv maps the segment's conv_id back to the caller's
+    *                   id space
     */
   def retrieveMapped(
       queryText: String,
       k: Int,
-      idFromConv: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
+      idFromConv: String => Long,
       minScore: Double = 0.0,
       conjunctive: Boolean = false): Array[(Long, Double)] = {
-    val hitRows = retrieve(queryText, k, minScore, conjunctive)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    if (hitRows.isEmpty) Array.empty
-    else docsForHits(hitRows)
-      .select(idFromConv(col("conv_id")).as("id"), col("score"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    withDocs(topHits(queryText, k, minScore, conjunctive), withText = false)
+      .map { case (d, sc) => (idFromConv(d.conv_id), sc) }
       .sortBy { case (id, sc) => (-sc, id) }
   }
 
@@ -305,55 +312,12 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
       if (hasResidual || spec.rerank) k * OverFetchFactor else k, MaxTopK)
     val effMinScore = if (spec.rerank) 0.0 else minScore
 
-    // candidate set is bounded (kPrime ≤ MaxTopK), so land it on the
-    // driver first: docsForHits then pushes shard + doc_id-range
-    // predicates into the doc-store scan instead of scanning the whole
-    // docs table per query.
-    val hitRows = retrieve(spec.text, kPrime, effMinScore, spec.conjunctive)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    var joined = docsForHits(hitRows)
-
-    // residual filters F2/F3 — post-retrieval, like the reference
-    spec.tsAfter.foreach(a => joined = joined.filter($"ts" >= lit(a)))
-    spec.tsBefore.foreach(b => joined = joined.filter($"ts" <= lit(b)))
-    if (spec.roles.nonEmpty)
-      joined = joined.filter(lower($"role").isin(spec.roles.map(_.toLowerCase): _*))
-    if (spec.tools.nonEmpty)
-      joined = joined.filter(lower($"tool").isin(spec.tools.map(_.toLowerCase): _*))
-
-    // secondary rerank Q7 (proximity bonus) reorders the over-fetched
-    // candidates BEFORE truncation (reference src/reranker.py:316-318)
-    val ordered =
-      if (spec.rerank) graft.query.Rerank(joined, spec.text)
-      else joined.orderBy(desc("score"), asc("doc_id"))
-
-    // truncate to k (Q5), THEN round to 4 dp (F6) and boost (Q8) —
-    // the reference's exact staging (SURVEY §3.1 ordering contract)
-    val truncated = ordered
-      .limit(k)
-      .withColumn("score", round($"score", 4))
-
-    val boosted = applyKeywordRanking(truncated, spec.boostTerms,
-      spec.penalizeTerms, spec.boostWeight, spec.penaltyWeight)
+    val needText = spec.rerank || spec.boostTerms.nonEmpty || spec.penalizeTerms.nonEmpty
+    val candidates =
+      withDocs(topHits(spec.text, kPrime, effMinScore, spec.conjunctive), needText)
+    val rows = SearchEngine.rank(spec, k, candidates, SearchEngine.semantics(spark))
 
     val includeSet = spec.includeKeys.toSet
-    // final ordering: boost re-sorts by adjusted score (reference
-    // :457); otherwise rerank order survives (reference :316-318)
-    val finalSort =
-      if (spec.rerank && spec.boostTerms.isEmpty && spec.penalizeTerms.isEmpty)
-        Seq(round($"rerank_score", 3).desc, $"score".desc, $"doc_id".asc)
-      else Seq(desc("score"), asc("doc_id"))
-    val rows = boosted
-      .orderBy(finalSort: _*)
-      .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "score")
-      .collect()
-      .map { r =>
-        val key = (r.getString(1), r.getInt(2))
-        SearchHit(r.getLong(0), r.getString(1), r.getInt(2), r.getString(3),
-          r.getString(4), r.getTimestamp(5), r.getDouble(6),
-          includeSet.contains(key))
-      }
-
     val ms =
       if (includeSet.nonEmpty) {
         val found = rows.map(h => (h.conv_id, h.turn_idx)).toSet
@@ -367,35 +331,139 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     SearchResponse(spec.text, rows.length, rows.toIndexedSeq, ms,
       (System.nanoTime() - t0) / 1e6)
   }
+}
+
+object SearchEngine {
+
+  /** The session settings that Spark's expressions consult and the
+    * plain-Scala path must follow: ICU vs JVM case mapping in `lower`,
+    * and whether `size(null)` is -1 or null.
+    */
+  private[graft] final case class Semantics(icuLower: Boolean, legacySizeOfNull: Boolean)
+
+  private[graft] def semantics(spark: SparkSession): Semantics = {
+    def flag(key: String) = spark.conf.get(key).toBoolean
+    Semantics(flag(SQLConf.ICU_CASE_MAPPINGS_ENABLED.key),
+      flag(SQLConf.LEGACY_SIZE_OF_NULL.key) && !flag(SQLConf.ANSI_ENABLED.key))
+  }
+
+  /** Round half-up at `scale` decimal places exactly as Spark's
+    * `round` rounds a double: through `BigDecimal.valueOf` (the
+    * shortest decimal that reads back as x), not x's exact binary
+    * expansion — so 0.33335 rounds to 0.3334. NaN and infinities pass
+    * through.
+    */
+  def roundHalfUp(x: Double, scale: Int): Double =
+    if (x.isNaN || x.isInfinite) x
+    else JBigDecimal.valueOf(x).setScale(scale, RoundingMode.HALF_UP).doubleValue()
+
+  /** Spark's `lower` of a UTF8_BINARY string. */
+  private def lower(s: String, icu: Boolean): UTF8String =
+    CollationSupport.Lower.exec(UTF8String.fromString(s),
+      CollationFactory.UTF8_BINARY_COLLATION_ID, icu)
+
+  private def lowerTerms(terms: Seq[String]): Seq[UTF8String] =
+    terms.map(_.toLowerCase.trim).filter(_.nonEmpty).map(UTF8String.fromString)
 
   /** Keyword boost/penalize rescoring — exact port of the reference's
     * diminishing-returns formula (`src/search_engine.py:420-444`):
     * adj = score ± w * min(matches,3) * 0.7^max(0, matches-1), where a
-    * match is a lowercase substring hit in the document text. Pure
-    * column math (codegen), applied to the already-truncated top-k.
+    * match is a term (lower-cased, trimmed, empty ones dropped) found
+    * in Spark's `lower` of the document text; a null text matches
+    * nothing.
     */
-  def applyKeywordRanking(
-      df: DataFrame,
+  def keywordScore(
+      score: Double,
+      text: String,
       boostTerms: Seq[String],
       penalizeTerms: Seq[String],
       boostWeight: Double,
-      penaltyWeight: Double): DataFrame = {
-    val bTerms = boostTerms.map(_.toLowerCase.trim).filter(_.nonEmpty)
-    val pTerms = penalizeTerms.map(_.toLowerCase.trim).filter(_.nonEmpty)
-    if (bTerms.isEmpty && pTerms.isEmpty) return df
-    def matchCount(terms: Seq[String]) =
-      size(filter(array(terms.map(lit): _*), t => contains(lower(col("text")), t)))
-    def adjustment(terms: Seq[String], w: Double) =
-      if (terms.isEmpty) lit(0.0)
-      else {
-        val m = matchCount(terms)
-        when(m > 0,
-          lit(w) * least(m, lit(3)).cast("double") *
-            pow(lit(0.7), greatest(m - 1, lit(0)).cast("double")))
-          .otherwise(lit(0.0))
-      }
-    df.withColumn("original_score", col("score"))
-      .withColumn("score",
-        col("score") + adjustment(bTerms, boostWeight) - adjustment(pTerms, penaltyWeight))
+      penaltyWeight: Double,
+      icuLower: Boolean = true): Double = {
+    val (b, p) = (lowerTerms(boostTerms), lowerTerms(penalizeTerms))
+    if (b.isEmpty && p.isEmpty) return score
+    val lowered = if (text == null) null else lower(text, icuLower)
+    def adjustment(terms: Seq[UTF8String], w: Double): Double = {
+      val m = if (lowered == null) 0 else terms.count(lowered.contains)
+      if (m > 0) w * math.min(m, 3).toDouble * StrictMath.pow(0.7, (m - 1).toDouble)
+      else 0.0
+    }
+    score + adjustment(b, boostWeight) - adjustment(p, penaltyWeight)
+  }
+
+  /** A candidate on its way through [[rank]]; `rerankKey` is
+    * round(rerank_score, 3).
+    */
+  private final case class Ranked(doc: IndexedTurn, score: Double, rerankKey: Double)
+
+  /** Spark's order of doubles: -0.0 equals 0.0, NaN is the largest. */
+  private def cmp(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  private val byScore: Ordering[Ranked] = (a, b) => {
+    val c = cmp(b.score, a.score)
+    if (c != 0) c else java.lang.Long.compare(a.doc.doc_id, b.doc.doc_id)
+  }
+  private val byRerank: Ordering[Ranked] = (a, b) => {
+    val c = cmp(b.rerankKey, a.rerankKey)
+    if (c != 0) c else byScore.compare(a, b)
+  }
+
+  /** Post-retrieval over (doc-store row, exact score) candidates:
+    * residual filters, rerank, truncation to k, rounding, boost and
+    * the final order, each with the semantics of the equivalent Spark
+    * column expression (a null ts/role/tool fails its filter; `round`
+    * is [[roundHalfUp]]), so results equal a DataFrame formulation of
+    * the same steps bit for bit.
+    */
+  private[graft] def rank(
+      spec: QuerySpec,
+      k: Int,
+      candidates: Array[(IndexedTurn, Double)],
+      sem: Semantics): Array[SearchHit] = {
+    // residual filters F2/F3 — post-retrieval, like the reference;
+    // timestamps compare as Spark's micros
+    val after = spec.tsAfter.map(DateTimeUtils.fromJavaTimestamp)
+    val before = spec.tsBefore.map(DateTimeUtils.fromJavaTimestamp)
+    val roles = spec.roles.map(r => UTF8String.fromString(r.toLowerCase)).toSet
+    val tools = spec.tools.map(t => UTF8String.fromString(t.toLowerCase)).toSet
+    def inSet(set: Set[UTF8String], v: String) =
+      set.isEmpty || (v != null && set(lower(v, sem.icuLower)))
+    val kept = candidates.filter { case (d, _) =>
+      val ts = if (d.ts == null) None else Some(DateTimeUtils.fromJavaTimestamp(d.ts))
+      after.forall(a => ts.exists(_ >= a)) && before.forall(b => ts.exists(_ <= b)) &&
+        inSet(roles, d.role) && inSet(tools, d.tool)
+    }
+
+    // secondary rerank Q7 (proximity bonus) reorders the over-fetched
+    // candidates BEFORE truncation (reference src/reranker.py:316-318)
+    val qTerms = if (spec.rerank) Tokenizer.tokenize(spec.text).toSet else Set.empty[String]
+    val reranked = qTerms.nonEmpty
+    val scored = kept.map { case (d, s) =>
+      Ranked(d, s,
+        if (reranked) roundHalfUp(Rerank.rerankScore(s, d.text, qTerms, sem.legacySizeOfNull), 3)
+        else 0.0)
+    }
+
+    // truncate to k (Q5), THEN round to 4 dp (F6) and boost (Q8) —
+    // the reference's exact staging (SURVEY §3.1 ordering contract)
+    val truncated = scored.sorted(if (reranked) byRerank else byScore).take(k)
+    val boosted = truncated.map { r =>
+      r.copy(score = keywordScore(roundHalfUp(r.score, 4), r.doc.text, spec.boostTerms,
+        spec.penalizeTerms, spec.boostWeight, spec.penaltyWeight, sem.icuLower))
+    }
+
+    // final ordering: boost re-sorts by adjusted score (reference
+    // :457); otherwise rerank order survives (reference :316-318),
+    // its ties now broken by the rounded score
+    val includeSet = spec.includeKeys.toSet
+    val finalOrder =
+      if (reranked && spec.boostTerms.isEmpty && spec.penalizeTerms.isEmpty) byRerank
+      else byScore
+    boosted.sorted(finalOrder).map { r =>
+      val d = r.doc
+      SearchHit(d.doc_id, d.conv_id, d.turn_idx, d.role, d.tool, d.ts, r.score,
+        includeSet.contains((d.conv_id, d.turn_idx)))
+    }
   }
 }

@@ -4,8 +4,25 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.InputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
+import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 
 /** Segment layout on disk (SURVEY.md §1.3 — the Spark-native analog
   * of the reference's {embeddings.npy, pmid_index.json,
@@ -231,31 +248,11 @@ object SegmentIO {
     }.sortBy(_._1).toSeq
   }
 
-  def readManifestChecksum(dir: String, stage: String): Option[Long] = {
-    if (!stageDone(dir, stage)) None
-    else {
-      val json = new String(Files.readAllBytes(manifestPath(dir, stage)), StandardCharsets.UTF_8)
-      """"checksum":(-?\d+)""".r.findFirstMatchIn(json).map(_.group(1).toLong)
-    }
-  }
-
   /** Snapshot manifest tying the whole segment together. */
   def writeSnapshot(dir: String, stages: Seq[String]): Unit = {
     val json = stages.map(s => s""""$s"""").mkString(
       s"""{"format":"graft-segment-v1","stages":[""", ",", "]}")
     Files.write(Paths.get(dir, "snapshot.json"), json.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Order-independent content checksum of a DataFrame: XOR-fold of
-    * xxhash64 over all columns (no overflow under ANSI mode,
-    * deterministic under any row order).
-    */
-  def contentChecksum(df: DataFrame): Long = {
-    val row = df
-      .select(xxhash64(df.columns.map(col): _*).as("h"))
-      .agg(expr("bit_xor(h)").as("c"))
-      .collect()(0)
-    if (row.isNullAt(0)) 0L else row.getLong(0)
   }
 
   // ---- readers ----
@@ -288,34 +285,60 @@ object SegmentIO {
     spark.read.parquet(dictPath(dir)).as[DictEntry]
   }
 
+  /** Every parquet file directly under `path`, read with plain
+    * parquet-hadoop: no Spark job, no shuffle. `filter` goes to the
+    * reader, which skips row groups and pages on their statistics and
+    * column index and record-filters the rest; `support` (one per file)
+    * picks the columns. Empty when `path` does not exist.
+    *
+    * Files open as [[HadoopInputFile]]s over [[sharedHadoopConf]]:
+    * `ParquetReader.builder(support, path)` would build (and parse the
+    * XML default resources of) a fresh Hadoop Configuration per file,
+    * ~10 ms, before any `withConf` replaced it.
+    */
+  private def readParquetDir[S <: GroupReadSupport, T: ClassTag](
+      path: String, filter: Option[FilterPredicate], support: => S)(
+      row: (S, Group) => T): Array[T] = {
+    val conf = sharedHadoopConf
+    val p = new HPath(path)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) return Array.empty
+    fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
+      val rs = support
+      val b: ParquetReader.Builder[Group] =
+        new GroupReaderBuilder(rs, HadoopInputFile.fromStatus(st, conf))
+      val reader = filter.fold(b)(f => b.withFilter(FilterCompat.get(f))).build()
+      try Iterator.continually(reader.read()).takeWhile(_ != null).map(row(rs, _)).toArray
+      finally reader.close()
+    }
+  }
+
+  private final class GroupReaderBuilder(support: GroupReadSupport, file: InputFile)
+      extends ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport(): ReadSupport[Group] = support
+  }
+
+  /** `term` equals one of `terms` — the pushdown predicate of the
+    * term-sorted dictionary and (term, block_id)-sorted postings files.
+    */
+  private def termIn(terms: Iterable[String]): FilterPredicate =
+    terms.map(t => FilterApi.eq(FilterApi.binaryColumn("term"), Binary.fromString(t)): FilterPredicate)
+      .reduce(FilterApi.or)
+
   /** Direct read of ONE shard's norms pages straight from its
-    * `norms/shard=N` partition directory — plain parquet-hadoop reads,
-    * no Spark job, no shuffle. This is the query path's norms access:
-    * each shard's WAND task opens only its own shard dir (the
-    * partitionBy(shard) layout IS the pruning), so a query never
+    * `norms/shard=N` partition directory. This is the query path's
+    * norms access: each shard's WAND task opens only its own shard dir
+    * (the partitionBy(shard) layout IS the pruning), so a query never
     * shuffles or scans the corpus-wide norms relation. Runs on
     * executors; the segment directory must be executor-visible (it is
     * by construction — the index was written by Spark to shared
     * storage).
     */
-  def readShardNorms(dir: String, shard: Int): Array[NormsRow] = {
-    val conf = sharedHadoopConf
-    val p = new org.apache.hadoop.fs.Path(s"${normsPath(dir)}/shard=$shard")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Array.empty
-    fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
-        .withConf(conf)
-        .build()
-      try {
-        Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-          NormsRow(shard, g.getInteger("page", 0), g.getInteger("n", 0),
-            g.getLong("first_doc", 0), g.getBinary("dl_bytes", 0).getBytes)
-        }.toArray
-      } finally reader.close()
+  def readShardNorms(dir: String, shard: Int): Array[NormsRow] =
+    readParquetDir(s"${normsPath(dir)}/shard=$shard", None, new GroupReadSupport()) { (_, g) =>
+      NormsRow(shard, g.getInteger("page", 0), g.getInteger("n", 0),
+        g.getLong("first_doc", 0), g.getBinary("dl_bytes", 0).getBytes)
     }
-  }
 
   /** Executor-local decoded dl-page cache, keyed (indexDir, shard):
     * the serving analog of a Lucene node keeping its shard's norms
@@ -377,46 +400,116 @@ object SegmentIO {
 
   /** Direct read of ONE shard's postings for a fixed term set,
     * straight from its `postings/shard=N` partition dir — the postings
-    * analog of [[readShardNorms]]. The term equality filter is handed
-    * to parquet-hadoop ([[org.apache.parquet.filter2.predicate.FilterApi]]),
-    * which skips non-matching row groups AND pages via the column
-    * index (files are (term, block_id)-sorted, so a query's terms
-    * cluster in a handful of pages) and record-filters the rest. This
-    * is what lets a query schedule ONE task per shard with no
-    * corpus-wide scan stage and no shuffle: each task opens only its
-    * own shard dir, reads only its query-term pages.
+    * analog of [[readShardNorms]]. The term predicate skips
+    * non-matching row groups AND pages (files are (term,
+    * block_id)-sorted, so a query's terms cluster in a handful of
+    * pages). This is what lets a query schedule ONE task per shard
+    * with no corpus-wide scan stage and no shuffle: each task opens
+    * only its own shard dir, reads only its query-term pages.
     */
-  def readShardPostings(dir: String, shard: Int, terms: Array[String]): Array[PostingBlock] = {
-    import org.apache.parquet.filter2.compat.FilterCompat
-    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-    import org.apache.parquet.io.api.Binary
-    if (terms.isEmpty) return Array.empty
-    val conf = sharedHadoopConf
-    val p = new org.apache.hadoop.fs.Path(s"${postingsPath(dir)}/shard=$shard")
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) return Array.empty
-    val pred: FilterPredicate = terms
-      .map(t => FilterApi.eq(FilterApi.binaryColumn("term"),
-        Binary.fromString(t)): FilterPredicate)
-      .reduce(FilterApi.or)
-    fs.listStatus(p).filter(_.getPath.getName.endsWith(".parquet")).flatMap { st =>
-      val reader = org.apache.parquet.hadoop.ParquetReader
-        .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), st.getPath)
-        .withConf(conf)
-        .withFilter(FilterCompat.get(pred))
-        .build()
-      try {
-        Iterator.continually(reader.read()).takeWhile(_ != null).map { g =>
-          PostingBlock(
-            g.getBinary("term", 0).toStringUsingUTF8,
-            g.getInteger("block_id", 0), g.getInteger("n", 0),
-            g.getLong("first_doc", 0), g.getLong("last_doc", 0),
-            g.getBinary("doc_bytes", 0).getBytes,
-            g.getBinary("tf_bytes", 0).getBytes,
-            g.getInteger("block_max_tf", 0), g.getInteger("block_min_dl", 0),
-            g.getLong("sum_tf", 0), shard)
-        }.toArray
-      } finally reader.close()
+  def readShardPostings(dir: String, shard: Int, terms: Array[String]): Array[PostingBlock] =
+    if (terms.isEmpty) Array.empty
+    else readParquetDir(s"${postingsPath(dir)}/shard=$shard", Some(termIn(terms)),
+        new GroupReadSupport()) { (_, g) =>
+      PostingBlock(
+        g.getString("term", 0),
+        g.getInteger("block_id", 0), g.getInteger("n", 0),
+        g.getLong("first_doc", 0), g.getLong("last_doc", 0),
+        g.getBinary("doc_bytes", 0).getBytes,
+        g.getBinary("tf_bytes", 0).getBytes,
+        g.getInteger("block_max_tf", 0), g.getInteger("block_min_dl", 0),
+        g.getLong("sum_tf", 0), shard)
+    }
+
+  /** Direct read of the dictionary rows of a term set — the serving
+    * path's dictionary-miss lookup. Same term predicate as
+    * [[readShardPostings]] over the term-sorted `dictionary/` files, so
+    * a lookup reads a few pages on the driver instead of running a
+    * Spark job. Terms without a row are absent from the result.
+    */
+  def readDictTerms(dir: String, terms: Iterable[String]): Array[DictEntry] =
+    if (terms.isEmpty) Array.empty
+    else readParquetDir(dictPath(dir), Some(termIn(terms)), new GroupReadSupport()) { (_, g) =>
+      val shards = g.getGroup("shards", 0)
+      DictEntry(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
+        g.getInteger("max_tf", 0), g.getInteger("min_dl", 0),
+        (0 until shards.getFieldRepetitionCount("list"))
+          .map(i => shards.getGroup("list", i).getInteger("element", 0)))
+    }
+
+  /** Direct read of ONE shard's doc-store rows for a doc-id set,
+    * straight from its `docs/shard=N` dir — the docs analog of
+    * [[readShardPostings]]. Docs files are doc_id-sorted, so the
+    * doc_id-set predicate skips whole pages; `text` is read only when
+    * `withText` (it is most of a row's bytes), else it comes back null.
+    * Values equal what [[readDocs]] collects, `ts` included: it is
+    * decoded by the file's physical type, as Spark's parquet reader
+    * does it (see [[DocsReadSupport]]).
+    */
+  def readShardDocs(dir: String, shard: Int, docIds: Iterable[Long],
+      withText: Boolean = true): Array[IndexedTurn] = {
+    if (docIds.isEmpty) return Array.empty
+    val ids = new java.util.HashSet[java.lang.Long]()
+    docIds.foreach(d => ids.add(d))
+    val pred = FilterApi.in[java.lang.Long, Operators.LongColumn](FilterApi.longColumn("doc_id"), ids)
+    readParquetDir(s"${docsPath(dir)}/shard=$shard", Some(pred),
+        new DocsReadSupport(withText)) { (rs, g) =>
+      def str(f: String): String =
+        if (g.getFieldRepetitionCount(f) == 0) null else g.getString(f, 0)
+      IndexedTurn(g.getLong("doc_id", 0), str("conv_id"), g.getInteger("turn_idx", 0),
+        str("role"), if (withText) str("text") else null, str("tool"),
+        if (g.getFieldRepetitionCount("ts") == 0) null
+        else DateTimeUtils.toJavaTimestamp(rs.tsMicros(g)),
+        g.getInteger("dl", 0), shard)
+    }
+  }
+
+  /** Docs-file read support: projects `text` away unless asked for,
+    * and picks the `ts` decoder from the file's footer when the reader
+    * opens the file. Spark writes timestamps as INT96 by default, or as
+    * INT64 micros/millis under `spark.sql.parquet.outputTimestampType`;
+    * each decodes to micros and is calendar-rebased exactly as Spark's
+    * reader does it for that file's writer metadata.
+    */
+  private final class DocsReadSupport(withText: Boolean) extends GroupReadSupport {
+    var tsMicros: Group => Long = _
+
+    override def init(ctx: InitContext): ReadSupport.ReadContext = {
+      val schema = ctx.getFileSchema
+      // one file per reader: each footer key has one value
+      val meta = ctx.getKeyValueMetadata
+      tsMicros = tsDecoder(schema.getType(schema.getFieldIndex("ts")).asPrimitiveType,
+        k => Option(meta.get(k)).map(_.iterator.next).orNull)
+      val cols = schema.getFields.asScala.filter(f => withText || f.getName != "text")
+      new ReadSupport.ReadContext(new MessageType(schema.getName, cols.asJava))
+    }
+  }
+
+  private def tsDecoder(t: PrimitiveType, lookup: String => String): Group => Long = {
+    import PrimitiveType.PrimitiveTypeName.{INT64, INT96}
+    import LogicalTypeAnnotation.{TimestampLogicalTypeAnnotation, TimeUnit}
+    val conf = SQLConf.get
+    def rebase(spec: RebaseDateTime.RebaseSpec, format: String) =
+      DataSourceUtils.createTimestampRebaseFuncInRead(spec, format)
+    (t.getPrimitiveTypeName, t.getLogicalTypeAnnotation) match {
+      case (INT96, _) =>
+        val r = rebase(DataSourceUtils.int96RebaseSpec(lookup,
+          conf.getConf(SQLConf.PARQUET_INT96_REBASE_MODE_IN_READ).toString), "Parquet INT96")
+        g => {
+          // 8 bytes nanos of day, then 4 bytes Julian day, little-endian
+          val buf = g.getInt96("ts", 0).toByteBuffer.order(java.nio.ByteOrder.LITTLE_ENDIAN)
+          val nanos = buf.getLong
+          r(DateTimeUtils.fromJulianDay(buf.getInt, nanos))
+        }
+      case (INT64, ts: TimestampLogicalTypeAnnotation) if ts.getUnit != TimeUnit.NANOS =>
+        val r = rebase(DataSourceUtils.datetimeRebaseSpec(lookup,
+          conf.getConf(SQLConf.PARQUET_REBASE_MODE_IN_READ).toString), "Parquet")
+        val millis = ts.getUnit == TimeUnit.MILLIS
+        g => {
+          val v = g.getLong("ts", 0)
+          r(if (millis) DateTimeUtils.millisToMicros(v) else v)
+        }
+      case _ => throw new IllegalStateException(s"unsupported docs ts column type: $t")
     }
   }
 

@@ -55,10 +55,13 @@ object Corpus {
   }
 
   /** Inverse of [[documentsAsTurns]]'s key mapping, for a bounded hit
-    * set joined back to the segment docs table.
+    * set mapped back through the segment docs table. Column form and
+    * plain-Scala form (the serving path's), kept equal.
     */
   def docIdFromConv(convId: Column): Column =
     substring(convId, 2, 19).cast("long")
+  def docIdFromConv(convId: String): Long =
+    convId.slice(1, 20).toLong
 
   /** DuckDB CTE computing the identical table from `documents`. */
   val transcriptsCte: String =

@@ -25,9 +25,6 @@ object Bm25 {
   def tfNorm(tf: Int, dl: Int, avgdl: Double): Double =
     tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
-  def termScore(tf: Int, dl: Int, avgdl: Double, numDocs: Long, df: Long): Double =
-    idf(numDocs, df) * tfNorm(tf, dl, avgdl)
-
   /** Upper bound of a term's score from avgdl-independent (max_tf,
     * min_dl) metadata: tfNorm is increasing in tf and decreasing in
     * dl, so tfNorm(max_tf, min_dl) >= tfNorm(tf_i, dl_i) for every

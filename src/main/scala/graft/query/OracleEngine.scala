@@ -67,7 +67,7 @@ object OracleEngine {
     * doc_id (Hybrid's keyword side). ONE copy of the
     * bit-exactness-critical BM25 pipeline (tokenize → tf/df → idf →
     * lexicographic fold) serves every caller; key column names must
-    * not collide with {tk, dl, term, tf, df, contrib, score,
+    * not collide with {tk, dl, tc, term, tf, df, contrib, score,
     * n_match}.
     *
     * @return key columns + (score, n_match), unordered
@@ -143,6 +143,15 @@ object OracleEngine {
     // than what the scoring join must process anyway. Lazy: the first
     // action materializes it; dfT and the scoring branch then share
     // the blocks.
+    //
+    // Lifetime: the checkpointed blocks (MEMORY_AND_DISK on the
+    // executors) stay until the driver garbage-collects this RDD and
+    // ContextCleaner drops them, so a long session of oracle queries
+    // holds each query's small tf until then. A local checkpoint is
+    // not fault-tolerant: if an executor holding blocks is lost before
+    // the consuming actions finish, they fail instead of recomputing —
+    // sound in local mode (this oracle's use), not on a cluster that
+    // loses executors.
     val tf = tfRaw.localCheckpoint(false)
 
     val dfT = tf.groupBy($"term").agg(count(lit(1)).as("df"))

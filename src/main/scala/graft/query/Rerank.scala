@@ -17,6 +17,10 @@ import graft.tokenize.Tokenizer
   *    score desc) (`src/reranker.py:99-109`), doc key as final tie
   *
   * rerank_score = score + 0.1 * min(adjacent_pairs, 5)
+  *
+  * Two forms, kept equal: the column form ([[apply]]) for DataFrame
+  * callers, and the plain-Scala form ([[rerankScore]]) the serving
+  * path runs over its bounded candidate rows.
   */
 object Rerank {
 
@@ -34,6 +38,25 @@ object Rerank {
       zip_with(tk, slice(tk, lit(2), greatest(size(tk) - 1, lit(1))), (a, b) =>
         a.isin(terms: _*) && b.isin(terms: _*)),
       x => x))
+  }
+
+  /** Plain-Scala twin of the column form over a [[Tokenizer.tokenize]]
+    * token array: positions i where tokens i and i+1 are both terms.
+    */
+  def adjacentPairCount(tokens: Array[String], terms: Set[String]): Int =
+    (0 until tokens.length - 1).count(i => terms(tokens(i)) && terms(tokens(i + 1)))
+
+  /** One candidate's rerank_score, as [[apply]] computes it. A null
+    * text has no pair count: `size` of its null token array is null
+    * under ANSI, which `least` skips (bonus for [[MaxPairs]]), and -1
+    * under `legacySizeOfNull`.
+    */
+  def rerankScore(score: Double, text: String, terms: Set[String],
+      legacySizeOfNull: Boolean): Double = {
+    val pairs =
+      if (text == null) { if (legacySizeOfNull) -1 else MaxPairs }
+      else math.min(adjacentPairCount(Tokenizer.tokenize(text), terms), MaxPairs)
+    score + PairBonus * pairs.toDouble
   }
 
   /** Apply the proximity rerank to a candidate frame with columns

@@ -62,10 +62,6 @@ object Wand {
     def curBlockBound: Double =
       if (exhausted) 0.0 else blockBound
 
-    /** Last doc of the current block (for block-max skipping). */
-    def curBlockLast: Long =
-      if (exhausted) Long.MaxValue else blocks(bi).last_doc
-
     def next(): Unit = {
       if (exhausted) return
       pos += 1

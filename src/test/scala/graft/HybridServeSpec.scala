@@ -28,9 +28,8 @@ class HybridServeSpec extends SparkSpec {
 
   /** The library serving retriever (SearchEngine.retrieveMapped —
     * the exact path SparkEntry.docsBm25TopN serves through): routed
-    * WAND top-N collected to the driver, then shard-isin +
-    * doc_id-range pushdown into the docs scan with a local-relation
-    * broadcast join mapping internal→original ids.
+    * WAND top-N collected to the driver, then a direct doc-store read
+    * of the hit shards mapping internal→original ids.
     */
   private def engineTopN(q: String, n: Int): Seq[(Long, Double)] =
     eng.retrieveMapped(q, n, Corpus.docIdFromConv).toSeq

@@ -27,17 +27,16 @@ class LifecycleSpec extends SparkSpec {
   lazy val engine = new SearchEngine(spark, indexDir)
 
   test("boost formula: exact diminishing-returns values (reference :420-444)") {
-    import spark.implicits._
-    val df = Seq(
+    val rows = Seq(
       (1L, 1.0, "contains boostone only"),
       (2L, 1.0, "contains boostone and boosttwo here"),
       (3L, 1.0, "boostone boosttwo boostthree all present"),
       (4L, 1.0, "boostone boosttwo boostthree boostfour present"),
       (5L, 1.0, "none of them"))
-      .toDF("doc_id", "score", "text")
-    val boosted = engine.applyKeywordRanking(df,
-      Seq("boostone", "boosttwo", "boostthree", "boostfour"), Nil, 0.15, 0.15)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("score")).toMap
+    val boosted = rows.map { case (id, score, text) =>
+      id -> SearchEngine.keywordScore(score, text,
+        Seq("boostone", "boosttwo", "boostthree", "boostfour"), Nil, 0.15, 0.15)
+    }.toMap
     assert(math.abs(boosted(1L) - (1.0 + 0.15 * 1 * 1.0)) < 1e-12)
     assert(math.abs(boosted(2L) - (1.0 + 0.15 * 2 * 0.7)) < 1e-12)
     assert(math.abs(boosted(3L) - (1.0 + 0.15 * 3 * 0.49)) < 1e-12)
@@ -46,10 +45,7 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("penalty mirrors boost with subtraction") {
-    import spark.implicits._
-    val df = Seq((1L, 1.0, "bad worse")).toDF("doc_id", "score", "text")
-    val r = engine.applyKeywordRanking(df, Nil, Seq("bad", "worse"), 0.15, 0.1)
-      .collect()(0).getAs[Double]("score")
+    val r = SearchEngine.keywordScore(1.0, "bad worse", Nil, Seq("bad", "worse"), 0.15, 0.1)
     assert(math.abs(r - (1.0 - 0.1 * 2 * 0.7)) < 1e-12)
   }
 

@@ -1,0 +1,321 @@
+package graft
+
+import java.sql.Timestamp
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.api.SearchEngine
+import graft.gen.TranscriptGen
+import graft.index.{IndexBuilder, SegmentIO}
+import graft.index.SegmentIO.IndexedTurn
+import graft.model.{MatchStats, QuerySpec, SearchHit}
+import graft.ops.Corpus
+import graft.query.Rerank
+import graft.tokenize.Tokenizer
+
+/** The one-job search path against the DataFrame pipeline it replaced.
+  * `SearchEngine.search` fetches its hits' doc-store rows with direct
+  * parquet reads and runs filters, rerank, truncation, rounding and
+  * boost as plain Scala; the reference below is the former pipeline
+  * (docs join → filters → `Rerank` column form → limit → `round` →
+  * column boost → sort), and every result must equal it exactly:
+  * hits, order, scores and match statistics.
+  */
+class SearchPathSpec extends SparkSpec {
+  import spark.implicits._
+
+  // LifecycleSpec's index
+  lazy val indexDir: String = {
+    val dir = tempDir("graft-searchpath")
+    IndexBuilder.build(spark, TranscriptGen.corpus(spark, 150), dir,
+      IndexBuilder.Config(blockSize = 16, numShards = 4, numPartitions = 8))
+    dir
+  }
+  lazy val engine = new SearchEngine(spark, indexDir)
+
+  // ---- the former DataFrame pipeline, kept here as the reference ----
+
+  /** Column-form keyword boost/penalize, as `search` applied it. */
+  def columnKeywordRanking(df: DataFrame, spec: QuerySpec): DataFrame = {
+    val bTerms = spec.boostTerms.map(_.toLowerCase.trim).filter(_.nonEmpty)
+    val pTerms = spec.penalizeTerms.map(_.toLowerCase.trim).filter(_.nonEmpty)
+    if (bTerms.isEmpty && pTerms.isEmpty) return df
+    def matchCount(terms: Seq[String]) =
+      size(filter(array(terms.map(lit): _*), t => contains(lower(col("text")), t)))
+    def adjustment(terms: Seq[String], w: Double) =
+      if (terms.isEmpty) lit(0.0)
+      else {
+        val m = matchCount(terms)
+        when(m > 0,
+          lit(w) * least(m, lit(3)).cast("double") *
+            pow(lit(0.7), greatest(m - 1, lit(0)).cast("double")))
+          .otherwise(lit(0.0))
+      }
+    df.withColumn("score",
+      col("score") + adjustment(bTerms, spec.boostWeight) -
+        adjustment(pTerms, spec.penaltyWeight))
+  }
+
+  /** Post-retrieval over a docs relation and (doc_id, exact score) hits. */
+  def referenceRank(docs: DataFrame, hits: Seq[(Long, Double)], spec: QuerySpec,
+      k: Int): Seq[SearchHit] = {
+    var joined = docs.join(broadcast(hits.toDF("doc_id", "score")), "doc_id")
+    spec.tsAfter.foreach(a => joined = joined.filter($"ts" >= lit(a)))
+    spec.tsBefore.foreach(b => joined = joined.filter($"ts" <= lit(b)))
+    if (spec.roles.nonEmpty)
+      joined = joined.filter(lower($"role").isin(spec.roles.map(_.toLowerCase): _*))
+    if (spec.tools.nonEmpty)
+      joined = joined.filter(lower($"tool").isin(spec.tools.map(_.toLowerCase): _*))
+    val ordered =
+      if (spec.rerank) Rerank(joined, spec.text)
+      else joined.orderBy(desc("score"), asc("doc_id"))
+    val truncated = ordered.limit(k).withColumn("score", round($"score", 4))
+    val boosted = columnKeywordRanking(truncated, spec)
+    val includeSet = spec.includeKeys.toSet
+    val finalSort =
+      if (spec.rerank && spec.boostTerms.isEmpty && spec.penalizeTerms.isEmpty)
+        Seq(round($"rerank_score", 3).desc, $"score".desc, $"doc_id".asc)
+      else Seq(desc("score"), asc("doc_id"))
+    boosted.orderBy(finalSort: _*)
+      .select("doc_id", "conv_id", "turn_idx", "role", "tool", "ts", "score")
+      .collect()
+      .map { r =>
+        SearchHit(r.getLong(0), r.getString(1), r.getInt(2), r.getString(3),
+          r.getString(4), r.getTimestamp(5), r.getDouble(6),
+          includeSet.contains((r.getString(1), r.getInt(2))))
+      }.toSeq
+  }
+
+  /** The whole former `search` over the engine's index. */
+  def referenceSearch(spec: QuerySpec): (Seq[SearchHit], Option[MatchStats]) = {
+    val k = if (spec.validationMode) 5000 else spec.topK
+    val minScore = if (spec.validationMode) 0.0 else spec.minScore
+    val residual = spec.tsAfter.nonEmpty || spec.tsBefore.nonEmpty ||
+      spec.roles.nonEmpty || spec.tools.nonEmpty
+    val kPrime = math.min(
+      if (residual || spec.rerank) k * engine.OverFetchFactor else k, engine.MaxTopK)
+    val hits = engine.retrieve(spec.text, kPrime, if (spec.rerank) 0.0 else minScore,
+      spec.conjunctive).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val rows = referenceRank(SegmentIO.readDocs(spark, indexDir).toDF(), hits, spec, k)
+    val includeSet = spec.includeKeys.toSet
+    val stats =
+      if (includeSet.isEmpty) None
+      else {
+        val found = rows.map(h => (h.conv_id, h.turn_idx)).toSet
+        val matched = (found intersect includeSet).size
+        val recall = spark.range(1)
+          .select(round(lit(matched.toDouble / includeSet.size), 4)).head().getDouble(0)
+        Some(MatchStats(matched, (includeSet diff found).size, (found diff includeSet).size,
+          includeSet.size, recall))
+      }
+    (rows, stats)
+  }
+
+  // ---- rounding ----
+
+  test("roundHalfUp rounds like Spark's round(): valueOf ties, not the binary expansion") {
+    def sparkRound(x: Double, scale: Int) =
+      spark.range(1).select(round(lit(x), scale)).head().getDouble(0)
+    assert(SearchEngine.roundHalfUp(0.33335, 4) == 0.3334) // binary expansion: 0.3333
+    assert(SearchEngine.roundHalfUp(0.12345, 4) == 0.1235)
+    assert(engine.round4(0.33335) == 0.3334)
+    for ((x, s) <- Seq((0.33335, 4), (0.12345, 4), (1.0005, 3), (2.675, 2), (-0.33335, 4),
+        (1.23456789, 4), (12345.67895, 4))) {
+      assert(SearchEngine.roundHalfUp(x, s) == sparkRound(x, s), s"round($x, $s)")
+    }
+  }
+
+  // ---- direct reads == Spark reads ----
+
+  private val plantedDocs: Seq[IndexedTurn] = {
+    def ts(sec: Long) = new Timestamp(TranscriptGen.BaseEpochMs + sec * 1000L)
+    Seq(
+      IndexedTurn(0L, "c0", 0, "User", "alpha beta gamma", "Bash", ts(10), 3, 0),
+      IndexedTurn(1L, "c0", 1, null, "alpha beta", "grep", ts(20), 2, 0),
+      IndexedTurn(2L, "c0", 2, "ASSISTANT", "beta alpha beta alpha", null, ts(30), 4, 0),
+      IndexedTurn(3L, "c1", 0, "user", "İSTANBUL alpha ΟΔΟΣ beta", "read", null, 3, 0),
+      IndexedTurn(4L, "c1", 1, "System", null, "BASH", ts(50), 0, 0),
+      IndexedTurn(5L, "c1", 2, "assistant", "alpha the beta gamma İstanbul", "Read", ts(60), 4, 0),
+      IndexedTurn(6L, "c2", 0, "tool", "gamma delta σοφός ΣΟΦΟΣ", "web", ts(70), 2, 0),
+      // U+A7C0 (Unicode 14): Spark's ICU `lower` maps it, the JVM's does not
+      IndexedTurn(7L, "c2", 1, "USER", "delta alpha \uA7C0", "", ts(80), 2, 0),
+      IndexedTurn(8L, "c2", 2, "user", "alpha beta alpha beta alpha beta", "bash", ts(90), 6, 0),
+      IndexedTurn(9L, "c2", 3, "Tool", "beta", "GREP", ts(100), 1, 0))
+  }
+
+  /** A docs table of the planted rows, written under each `ts` layout
+    * Spark can write.
+    */
+  private def writePlanted(tsType: String): String = {
+    val dir = tempDir(s"graft-planted-$tsType")
+    spark.conf.set("spark.sql.parquet.outputTimestampType", tsType)
+    try plantedDocs.toDS().drop("shard").coalesce(1)
+      .write.mode("overwrite").parquet(s"$dir/docs/shard=0")
+    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    dir
+  }
+
+  test("readShardDocs == Spark's docs read: every ts layout, nulls, non-ASCII, text projection") {
+    for (tsType <- Seq("INT96", "TIMESTAMP_MICROS", "TIMESTAMP_MILLIS")) {
+      val dir = writePlanted(tsType)
+      val ids = Seq(0L, 2L, 3L, 4L, 9L, 42L)
+      val spark0 = SegmentIO.readDocs(spark, dir).collect()
+        .filter(d => ids.contains(d.doc_id)).sortBy(_.doc_id).toSeq
+      val direct = SegmentIO.readShardDocs(dir, 0, ids).sortBy(_.doc_id).toSeq
+      assert(direct == spark0, tsType)
+      val noText = SegmentIO.readShardDocs(dir, 0, ids, withText = false).sortBy(_.doc_id).toSeq
+      assert(noText == spark0.map(_.copy(text = null)), tsType)
+      assert(SegmentIO.readShardDocs(dir, 1, ids).isEmpty)
+    }
+  }
+
+  test("readShardDocs and readDictTerms == Spark's reads over a built index") {
+    val all = SegmentIO.readDocs(spark, indexDir).collect()
+    val dps = engine.stats.docsPerShard
+    val ids = all.map(_.doc_id).filter(_ % 7 == 3)
+    for ((shard, shardIds) <- ids.groupBy(_ / dps)) {
+      val expected = all.filter(d => shardIds.contains(d.doc_id)).sortBy(_.doc_id).toSeq
+      assert(SegmentIO.readShardDocs(indexDir, shard.toInt, shardIds).sortBy(_.doc_id).toSeq ==
+        expected)
+    }
+    val terms = Seq("t00000", "t00003", "t00777", "needle3alpha", "nosuchterm")
+    val dictSpark = SegmentIO.readDict(spark, indexDir).collect()
+      .filter(d => terms.contains(d.term)).sortBy(_.term).toSeq
+    assert(SegmentIO.readDictTerms(indexDir, terms).sortBy(_.term).toSeq == dictSpark)
+    assert(dictSpark.map(_.term) == Seq("needle3alpha", "t00000", "t00003", "t00777"))
+  }
+
+  // ---- plain-Scala rerank / boost == their column forms ----
+
+  test("Rerank pair count: Scala form == column form (0/1/2 tokens, repeats, nulls)") {
+    val texts = Seq("", "alpha", "alpha beta", "beta gamma", "alpha alpha alpha",
+      "beta alpha beta alpha", "alpha the beta", "ALPHA-beta_alpha", "İstanbul alpha beta",
+      "alpha beta alpha beta alpha beta alpha beta", null)
+    val terms = Seq("alpha", "beta")
+    val col0 = texts.toDF("text")
+      .select($"text", Rerank.adjacentPairCount($"text", terms).as("n"))
+      .collect()
+    col0.filter(!_.isNullAt(0)).foreach { r =>
+      val t = r.getString(0)
+      assert(Rerank.adjacentPairCount(Tokenizer.tokenize(t), terms.toSet) == r.getInt(1), t)
+    }
+    val legacy = SearchEngine.semantics(spark).legacySizeOfNull
+    val scored = Rerank(texts.zipWithIndex.map { case (t, i) => (i.toLong, 1.0 + i, t) }
+      .toDF("doc_id", "score", "text"), "alpha beta")
+      .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Double]("rerank_score")).toMap
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(Rerank.rerankScore(1.0 + i, t, terms.toSet, legacy) == scored(i.toLong), s"$t")
+    }
+  }
+
+  // ---- post-retrieval: planted rows ----
+
+  test("plain-Scala post-retrieval == DataFrame pipeline on planted rows") {
+    val docsDf = plantedDocs.toDF()
+    // 4-dp half-up ties (0.33335, 0.33345); a 3-dp rerank-key tie
+    // (docs 6 and 9: no adjacent pair, 1.0005 and 1.0008 both key
+    // 1.001); equal scores broken by doc_id (3 and 4)
+    val hits = Seq(0L -> 0.33335, 1L -> 1.0005, 2L -> 1.0008, 3L -> 2.5, 4L -> 2.5,
+      5L -> 0.9, 6L -> 1.0005, 7L -> 0.33345, 8L -> 1.0005, 9L -> 1.0008)
+    val at = (sec: Long) => new Timestamp(TranscriptGen.BaseEpochMs + sec * 1000L)
+    val base = QuerySpec("alpha beta")
+    val specs = Seq(
+      base,
+      base.copy(topK = 3),
+      base.copy(roles = Seq("user", "Assistant")),
+      base.copy(tools = Seq("BASH", "read")),
+      base.copy(roles = Seq("USER"), tools = Seq("bash")),
+      base.copy(tsAfter = Some(at(30)), tsBefore = Some(at(90))),
+      base.copy(tsAfter = Some(at(55))),
+      base.copy(rerank = true),
+      base.copy(rerank = true, topK = 4),
+      base.copy(boostTerms = Seq("İSTANBUL", "ΟΔΟΣ", "gamma")),
+      base.copy(boostTerms = Seq("σοφος", "ΣΟΦΟΣ"), penalizeTerms = Seq("delta")),
+      base.copy(boostTerms = Seq("\uA7C1")),
+      base.copy(penalizeTerms = Seq("beta", " alpha ", ""), penaltyWeight = 0.3),
+      base.copy(boostTerms = Seq("  "), rerank = true),
+      base.copy(rerank = true, boostTerms = Seq("gamma"), penalizeTerms = Seq("alpha")),
+      base.copy(roles = Seq("tool"), topK = 50),
+      base.copy(roles = Seq("user"), rerank = true, boostTerms = Seq("beta"), topK = 20),
+      base.copy(includeKeys = Seq(("c0", 0), ("c2", 1))))
+    val sem = SearchEngine.semantics(spark)
+    val byId = plantedDocs.map(d => d.doc_id -> d).toMap
+    for (spec <- specs) {
+      val expected = referenceRank(docsDf, hits, spec, spec.topK)
+      val got = SearchEngine.rank(spec, spec.topK,
+        hits.map { case (d, s) => byId(d) -> s }.toArray, sem).toSeq
+      assert(got == expected, s"$spec")
+    }
+  }
+
+  // ---- post-retrieval: engine-level grid ----
+
+  test("search == former DataFrame pipeline over every spec kind") {
+    val at = (h: Long) => new Timestamp(TranscriptGen.BaseEpochMs + h * 3600000L)
+    val hot = "t00000 t00001"
+    val top = engine.search(QuerySpec("needle3alpha needle3beta", topK = 5)).hits
+    val specs = Seq(
+      QuerySpec(hot),
+      QuerySpec("t00005 t00006 t00010", topK = 25),
+      QuerySpec("t00000 t00002", conjunctive = true, topK = 15),
+      QuerySpec("t00003 t00004", minScore = 2.0, topK = 40),
+      QuerySpec(hot, roles = Seq("User")),
+      QuerySpec(hot, tools = Seq("BASH", "grep"), topK = 20),
+      QuerySpec(hot, tsAfter = Some(at(40))),
+      QuerySpec(hot, tsBefore = Some(at(100)), tsAfter = Some(at(20))),
+      QuerySpec(hot, rerank = true),
+      QuerySpec("t00000 t00001 t00002", rerank = true, topK = 30),
+      QuerySpec("t00005 t00006", boostTerms = Seq("t00000")),
+      QuerySpec("t00005 t00006", penalizeTerms = Seq("T00001", "t00002")),
+      QuerySpec(hot, boostTerms = Seq("t00003", "t00004"), penalizeTerms = Seq("t00002")),
+      QuerySpec(hot, rerank = true, boostTerms = Seq("t00007"), roles = Seq("assistant")),
+      QuerySpec("needle3alpha needle3beta", topK = 5,
+        includeKeys = Seq((top.head.conv_id, top.head.turn_idx), ("c99999999", 0))),
+      QuerySpec("t00000", topK = 3, minScore = 5.0, validationMode = true),
+      QuerySpec("nosuchterm"),
+      QuerySpec("the and of"))
+    for (spec <- specs) {
+      val resp = engine.search(spec)
+      val (hits, stats) = referenceSearch(spec)
+      assert(resp.hits == hits, s"$spec")
+      assert(resp.totalResults == hits.length)
+      assert(resp.stats == stats, s"$spec")
+    }
+  }
+
+  test("retrieveMapped == the column-form id mapping over the doc store") {
+    for ((q, k) <- Seq(("t00000 t00001", 10), ("t00005 needle3alpha", 40), ("nosuchterm", 5))) {
+      val hits = engine.retrieve(q, k)
+      val expected = SegmentIO.readDocs(spark, indexDir).join(broadcast(hits), "doc_id")
+        .select(Corpus.docIdFromConv($"conv_id").as("id"), $"score")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy { case (id, s) => (-s, id) }
+      assert(engine.retrieveMapped(q, k, Corpus.docIdFromConv).toSeq == expected.toSeq, q)
+    }
+  }
+
+  test("a search runs one Spark job: the WAND fan-out") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val specs = Seq(
+      QuerySpec("t00011 t00012 t00013", roles = Seq("user"), rerank = true,
+        boostTerms = Seq("t00000")),
+      QuerySpec("needle4alpha t00014", tools = Seq("bash"), tsAfter = Some(
+        new Timestamp(TranscriptGen.BaseEpochMs)), penalizeTerms = Seq("t00001")))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      specs.foreach(engine.search)
+      // listener events arrive asynchronously: wait for them to settle
+      val deadline = System.currentTimeMillis() + 10000
+      var last = -1
+      while (System.currentTimeMillis() < deadline && jobs.get != last) {
+        last = jobs.get
+        Thread.sleep(500)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == specs.length)
+  }
+}
