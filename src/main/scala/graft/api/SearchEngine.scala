@@ -6,14 +6,13 @@ import scala.collection.parallel.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport, DateTimeUtils}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.index.SegmentIO
 import graft.index.SegmentIO.IndexedTurn
 import graft.model._
-import graft.query.{Bm25, Rerank, Wand}
+import graft.query.{Rerank, ShardSearch}
 import graft.tokenize.Tokenizer
 
 /** Query-side facade mirroring the reference's
@@ -30,10 +29,13 @@ import graft.tokenize.Tokenizer
   *   boost/penalize rescoring (`:362-461`) → match statistics
   *   (`:324-339`).
   *
-  * A search runs ONE Spark job: the WAND fan-out of [[retrieve]].
-  * Everything around it is bounded (at most MaxTopK candidates), so,
-  * as in the reference, it runs in process: the dictionary and
-  * doc-store lookups are direct parquet reads
+  * A search runs ONE Spark job: the routed fan-out, a pre-planned
+  * `runJob` with one task per routed shard, each running the
+  * [[graft.query.ShardSearch]] kernel that [[graft.query.LocalIndex]]
+  * runs too; the driver merges the per-shard top-k lists (see
+  * `topHits`). Everything around it is bounded (at most MaxTopK
+  * candidates), so, as in the reference, it runs in process: the
+  * dictionary and doc-store lookups are direct parquet reads
   * ([[SegmentIO.readDictTerms]], [[SegmentIO.readShardDocs]]), and
   * filters, rerank, rounding and boost are plain Scala with the
   * semantics of the equivalent Spark column expressions (null fields,
@@ -103,9 +105,8 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
         if (dictCache.size > MaxCachedTerms) dictCache.clear()
         val found = SegmentIO.readDictTerms(indexDir, missing)
           .map { d =>
-            val idf = Bm25.idf(stats.numDocs, d.df)
-            d.term ->
-              (idf, Bm25.boundScore(idf, d.max_tf, d.min_dl, stats.avgdl), d.shards)
+            val (idf, bound) = ShardSearch.weights(d, stats)
+            d.term -> (idf, bound, d.shards)
           }.toMap
         val entries = missing.map(t => t -> found.get(t)).toMap
         // stale-reinsert guard: a mutation (append/compaction) may have
@@ -130,7 +131,7 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * IndexBuilder.DenseRoutingFraction): it expands to the full shard
     * range — a superset of the true set, so union and intersection
     * routing both stay sound (an extra shard just yields no cursors
-    * for that term).
+    * for that term). `present` is never empty: [[plan]] stops first.
     */
   private def routeFor(
       present: Array[String],
@@ -141,10 +142,25 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
       val s = termMeta(t)._3
       if (s.isEmpty) allShards else s
     }
-    if (present.isEmpty) Array.empty
-    else if (conjunctive)
+    if (conjunctive)
       present.map(t => routeOf(t).toSet).reduce(_ intersect _).toArray.sorted
     else present.flatMap(routeOf).distinct.sorted
+  }
+
+  /** The shard-level query and the shards it routes to, or None when
+    * no shard can match (no indexable term, no term in the dictionary,
+    * or an AND query with a zero-df term).
+    */
+  private def plan(
+      queryText: String,
+      k: Int,
+      minScore: Double,
+      conjunctive: Boolean): Option[(ShardSearch.Query, Array[Int])] = {
+    val qTerms = Tokenizer.tokenize(queryText).distinct.sorted
+    if (qTerms.isEmpty) return None
+    val termMeta = termMetaFor(qTerms)
+    ShardSearch.query(qTerms, termMeta.get(_).map(m => (m._1, m._2)), stats, k, minScore,
+      conjunctive).map(q => q -> routeFor(q.terms.map(_.term), termMeta, conjunctive))
   }
 
   /** The shard set a query would fan out to — one task per element in
@@ -152,101 +168,24 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * rare-vs-dense fan-out at high shard counts with exactly the
     * serving path's routing).
     */
-  def routedShards(queryText: String, conjunctive: Boolean = false): Array[Int] = {
-    val qTerms = Tokenizer.tokenize(queryText).distinct.sorted
-    if (qTerms.isEmpty) return Array.empty
-    val termMeta = termMetaFor(qTerms)
-    val present = qTerms.filter(termMeta.contains)
-    if (conjunctive && present.length < qTerms.length) return Array.empty
-    routeFor(present, termMeta, conjunctive)
-  }
+  def routedShards(queryText: String, conjunctive: Boolean = false): Array[Int] =
+    plan(queryText, 0, 0.0, conjunctive).fold(Array.empty[Int])(_._2)
 
   /** Retrieval core: BM25 top-k as (doc_id, score) — exact scores,
-    * no rounding (rounding is an output-boundary contract only).
+    * no rounding (rounding is an output-boundary contract only) —
+    * ordered (score desc, doc_id asc). Schema: `doc_id` bigint and
+    * `score` double, both non-null.
+    *
+    * The search job runs when this is called, not at the DataFrame's
+    * first action: the result is a local relation over the collected
+    * hits, so acting on it runs no further job.
     */
   def retrieve(
       queryText: String,
       k: Int,
       minScore: Double = 0.0,
-      conjunctive: Boolean = false): DataFrame = {
-    val qTerms: Array[String] = Tokenizer.tokenize(queryText).distinct.sorted
-    val empty = spark.emptyDataset[(Long, Double)].toDF("doc_id", "score")
-    if (qTerms.isEmpty) return empty
-
-    val termMeta = termMetaFor(qTerms)
-    val present = qTerms.filter(termMeta.contains)
-    if (present.isEmpty) return empty
-    if (conjunctive && present.length < qTerms.length) return empty // AND with a zero-df term
-
-    // locals only — the task closure must not capture `this`
-    val avgdl = stats.avgdl
-    val metaLocal = termMeta
-    val presentLocal = present
-    val kLocal = math.min(k, MaxTopK)
-    val minScoreLocal = minScore
-    val conjLocal = conjunctive
-    val pageSizeLocal = stats.normsPageSize
-    val dpsLocal = stats.docsPerShard
-    val dirLocal = indexDir
-
-    // Shard fan-out with NO scan stage and NO shuffle: one task per
-    // ROUTED shard, each opening only its own postings/shard=N
-    // (parquet page skip on the query terms) and norms/shard=N dirs —
-    // the Lucene shard-replica serving model. The whole query is a
-    // single one-stage job: per-shard WAND top-k heaps merge on the
-    // driver via TakeOrderedAndProject. The former formulation
-    // (corpus-wide term-pruned scan + groupByKey(shard)) paid a scan
-    // stage + a shuffle wave per query; at 10⁹ docs the scan's
-    // file-listing and task scheduling alone dominate the actual
-    // per-term page reads.
-    //
-    val routed: Array[Int] = routeFor(present, termMeta, conjLocal)
-    if (routed.isEmpty) return empty
-
-    // spark.range with one partition per routed shard keeps the
-    // fan-out inside the Dataset API (no RDD): partition i's single
-    // row indexes into the routed-shard array
-    val routedLocal = routed
-    val hits = spark.range(0, routed.length, 1, routed.length)
-      .flatMap { i =>
-        val shard = routedLocal(i.toInt)
-        val blocks = SegmentIO.readShardPostings(dirLocal, shard, presentLocal)
-        // two-level dl lookup: page = (doc - shardBase) / pageSize,
-        // then in-page offset — no array or row ever scales with
-        // shard size, and no Long difference is narrowed to Int
-        // before the page division
-        val dlArrs = SegmentIO.shardDlPages(dirLocal, shard)
-        if (blocks.isEmpty || dlArrs.isEmpty) Iterator.empty
-        else {
-          val shardBase = shard.toLong * dpsLocal
-          val byTerm = blocks.groupBy(_.term)
-          val cursors = presentLocal.flatMap { t =>
-            byTerm.get(t).map { bs =>
-              val (idf, maxScore, _) = metaLocal(t)
-              new Wand.TermCursor(t, idf, maxScore, bs, avgdl)
-            }
-          }
-          if (cursors.isEmpty || (conjLocal && cursors.length < presentLocal.length))
-            Iterator.empty
-          else {
-            val dl = (d: Long) => {
-              val rel = d - shardBase
-              dlArrs((rel / pageSizeLocal).toInt)((rel % pageSizeLocal).toInt)
-            }
-            val res =
-              if (conjLocal)
-                Wand.topKConjunctive(cursors, dl, avgdl, kLocal, minScoreLocal)
-              else
-                Wand.topKDisjunctive(cursors, dl, avgdl, kLocal, minScoreLocal)
-            res.iterator
-          }
-        }
-      }
-
-    // distributed top-k merge: per-shard heaps → TakeOrderedAndProject
-    hits.toDF("doc_id", "score")
-      .orderBy(desc("score"), asc("doc_id")).limit(kLocal)
-  }
+      conjunctive: Boolean = false): DataFrame =
+    topHits(queryText, k, minScore, conjunctive).toSeq.toDF("doc_id", "score")
 
   /** Round half-up to 4 dp — the output contract of the reference
     * result row (`src/search_engine.py:281`), as Spark's `round()`
@@ -254,11 +193,39 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     */
   def round4(x: Double): Double = SearchEngine.roundHalfUp(x, 4)
 
-  /** [[retrieve]]'s top-k, collected: the search's one Spark job. */
+  /** BM25 top-k as (doc_id, exact score): the search's one Spark job.
+    *
+    * Shard fan-out with NO scan stage and NO shuffle: one task per
+    * ROUTED shard, each opening only its own postings/shard=N (parquet
+    * page skip on the query terms) and norms/shard=N dirs — the Lucene
+    * shard-replica serving model — and running [[ShardSearch.topK]]
+    * over them. Each task returns its shard's top-k, and the driver
+    * merges them ([[ShardSearch.merge]]). The closure captures locals
+    * only (never `this`) and ships just the [[ShardSearch.Query]]: the
+    * present terms' (idf, bound), not their routing lists.
+    *
+    * The job is a pre-planned `runJob` over an RDD with one partition
+    * per routed shard, not a Dataset: planning, optimizing and
+    * code-generating a Dataset per query cost more than the tasks' own
+    * work (~3 ms of postings read and WAND each), and a Dataset form
+    * without the sort and limit (`spark.range.flatMap` plus a driver
+    * merge) measured no faster — the planning cost lives in the
+    * Dataset itself.
+    */
   private def topHits(
       queryText: String, k: Int, minScore: Double, conjunctive: Boolean): Array[(Long, Double)] =
-    retrieve(queryText, k, minScore, conjunctive).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
+    plan(queryText, math.min(k, MaxTopK), minScore, conjunctive) match {
+      case Some((q, routed)) if routed.nonEmpty =>
+        val dir = indexDir
+        val sc = spark.sparkContext
+        val perShard = sc.runJob(sc.parallelize(routed.toSeq, routed.length),
+          (shards: Iterator[Int]) => shards.flatMap { shard =>
+            val blocks = SegmentIO.readShardPostings(dir, shard, q.terms.map(_.term))
+            ShardSearch.topK(q, shard, blocks.groupBy(_.term).get, SegmentIO.shardDlPages(dir, shard))
+          }.toArray)
+        ShardSearch.merge(perShard, q.k)
+      case _ => Array.empty
+    }
 
   /** A bounded hit set with its doc-store rows, in hit order: only the
     * hit shards are read, in parallel, each with a doc_id-set predicate
@@ -396,16 +363,12 @@ object SearchEngine {
     */
   private final case class Ranked(doc: IndexedTurn, score: Double, rerankKey: Double)
 
-  /** Spark's order of doubles: -0.0 equals 0.0, NaN is the largest. */
-  private def cmp(x: Double, y: Double): Int =
-    if (x == y) 0 else java.lang.Double.compare(x, y)
-
   private val byScore: Ordering[Ranked] = (a, b) => {
-    val c = cmp(b.score, a.score)
+    val c = ShardSearch.compareScores(b.score, a.score)
     if (c != 0) c else java.lang.Long.compare(a.doc.doc_id, b.doc.doc_id)
   }
   private val byRerank: Ordering[Ranked] = (a, b) => {
-    val c = cmp(b.rerankKey, a.rerankKey)
+    val c = ShardSearch.compareScores(b.rerankKey, a.rerankKey)
     if (c != 0) c else byScore.compare(a, b)
   }
 

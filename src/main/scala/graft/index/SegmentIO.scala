@@ -8,10 +8,11 @@ import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -229,19 +230,21 @@ object SegmentIO {
 
   /** Per-shard row counts straight from parquet footers (driver-side
     * metadata reads, ~1 ms per file — no Spark job). Works on any
-    * partitionBy(shard) table dir.
+    * partitionBy(shard) table dir. Footers open over
+    * [[sharedHadoopConf]], as in [[readParquetDir]]: the one-argument
+    * `ParquetFileReader.open` builds a default Configuration per file.
     */
   def shardRowCounts(path: String): Seq[(String, Long)] = {
     val base = new java.io.File(path)
     val dirs = Option(base.listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName.startsWith("shard="))
-    val conf = new org.apache.hadoop.conf.Configuration()
+    val conf = sharedHadoopConf
     dirs.map { d =>
       val rows = Option(d.listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.endsWith(".parquet")).map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(f.getPath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val file = new HPath(f.getPath)
+          val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf),
+            HadoopReadOptions.builder(conf, file).build())
           try r.getRecordCount finally r.close()
         }.sum
       (d.getName.stripPrefix("shard="), rows)

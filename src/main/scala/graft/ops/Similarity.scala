@@ -77,25 +77,6 @@ object Similarity {
     element_at(
       graft.functions.VectorExpressions.lshBuckets(vec, dim, tables = 1, planes), 1)
 
-  /** ANN via LSH: bucket join → exact cosine verify ≥ tau. The scale
-    * path for embedding near-dup (SURVEY prompt: IVF/LSH variant).
-    */
-  def lshCosinePairs(
-      emb: DataFrame,
-      id: Column,
-      vec: Column,
-      dim: Int,
-      planes: Int = 8,
-      tau: Double = 0.8): DataFrame = {
-    val b = emb.select(id.as("id"), vec.as("vec"),
-      lshBucket(vec, dim, planes).as("bucket"))
-    b.as("l").join(b.as("r"),
-        col("l.bucket") === col("r.bucket") && col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        cosine(col("l.vec"), col("r.vec")).as("cos"))
-      .filter(col("cos") >= tau)
-  }
-
   /** Multi-table banded LSH — the version that survives 10⁹ vectors:
     *
     *  - `tables` independent hash tables (disjoint plane sets), so

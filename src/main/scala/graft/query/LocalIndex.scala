@@ -1,5 +1,7 @@
 package graft.query
 
+import scala.collection.parallel.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 import graft.index.{SegmentIO, Varbyte}
@@ -11,10 +13,13 @@ import graft.tokenize.Tokenizer
   * (`src/search_engine.py:48-70` lazy init, reused across requests).
   *
   * On a cluster each serving node holds its shard subset in RAM
-  * (Lucene/ES model); in this sandbox one JVM holds all shards. The
-  * distributed path ([[graft.api.SearchEngine.retrieve]]) stays the
-  * source of truth — this class is tested rank-identical to it and
-  * to the exact oracle.
+  * (Lucene/ES model); in this sandbox one JVM holds all shards. Each
+  * shard is searched by the same [[ShardSearch]] kernel the
+  * distributed path's fan-out tasks run
+  * ([[graft.api.SearchEngine.retrieve]]), here fed the resident blocks
+  * and dl pages, and the per-shard lists go through the same
+  * [[ShardSearch.merge]]; this class is tested rank-identical to the
+  * distributed path and to the exact oracle.
   *
   * Memory bound: postings are kept COMPRESSED (delta+varbyte blocks,
   * ~1.5 bytes/posting); blocks decode on demand during traversal.
@@ -48,47 +53,22 @@ class LocalIndex(spark: SparkSession, dir: String) {
 
   private val shardIds: Array[Int] = norms.keys.toArray.sorted
 
-  /** BM25 top-k, identical semantics to the distributed retrieve. */
+  /** BM25 top-k, identical semantics to the distributed retrieve: the
+    * same [[ShardSearch]] kernel over every shard, the same merge.
+    */
   def retrieve(
       queryText: String,
       k: Int,
       minScore: Double = 0.0,
-      conjunctive: Boolean = false): Array[(Long, Double)] = {
-    val qTerms = Tokenizer.tokenize(queryText).distinct.sorted
-    val present = qTerms.filter(dict.contains)
-    if (present.isEmpty || (conjunctive && present.length < qTerms.length))
-      return Array.empty
-    val n = stats.numDocs
-    val meta = present.map { t =>
-      val d = dict(t)
-      val idf = Bm25.idf(n, d.df)
-      t -> (idf, Bm25.boundScore(idf, d.max_tf, d.min_dl, stats.avgdl))
-    }.toMap
-    // shards traverse in parallel (the in-JVM analog of per-executor
-    // shard fan-out); per-shard results are deterministic, and the
-    // final merge re-sorts, so parallelism cannot affect output
-    import scala.collection.parallel.CollectionConverters._
-    val pageSize = stats.normsPageSize
-    val all = shardIds.par.flatMap { shard =>
-      val dlArrs = norms(shard)
-      val shardBase = shard.toLong * stats.docsPerShard
-      val cursors = present.flatMap { t =>
-        postings(t).get(shard).map { bs =>
-          val (idf, ms) = meta(t)
-          new Wand.TermCursor(t, idf, ms, bs, stats.avgdl)
-        }
+      conjunctive: Boolean = false): Array[(Long, Double)] =
+    ShardSearch.query(Tokenizer.tokenize(queryText).distinct.sorted,
+        dict.get(_).map(ShardSearch.weights(_, stats)), stats, k, minScore, conjunctive)
+      .fold(Array.empty[(Long, Double)]) { q =>
+        // shards traverse in parallel (the in-JVM analog of per-executor
+        // shard fan-out); per-shard results are deterministic, and the
+        // merge re-sorts, so parallelism cannot affect output
+        ShardSearch.merge(shardIds.par.map { shard =>
+          ShardSearch.topK(q, shard, postings(_).get(shard), norms(shard))
+        }.seq, k)
       }
-      if (cursors.isEmpty || (conjunctive && cursors.length < present.length))
-        Array.empty[(Long, Double)]
-      else {
-        val dl = (d: Long) => {
-          val rel = d - shardBase
-          dlArrs((rel / pageSize).toInt)((rel % pageSize).toInt)
-        }
-        if (conjunctive) Wand.topKConjunctive(cursors, dl, stats.avgdl, k, minScore)
-        else Wand.topKDisjunctive(cursors, dl, stats.avgdl, k, minScore)
-      }
-    }.toArray
-    all.sortBy { case (d, s) => (-s, d) }.take(k)
-  }
 }

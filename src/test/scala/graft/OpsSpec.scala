@@ -158,8 +158,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("LSH cosine: colinear vectors share a bucket and verify at cos=1") {
-    val pairs = Similarity.lshCosinePairs(embDF, col("vec_id"), col("embedding"),
-      dim = 8, planes = 6, tau = 0.99).collect()
+    val pairs = Similarity.lshCosinePairsMulti(embDF, col("vec_id"), col("embedding"),
+      dim = 8, tables = 1, planesPerTable = 6, tau = 0.99).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(pairs.contains((0L, 1L)), "colinear pair must share every hyperplane side")
   }

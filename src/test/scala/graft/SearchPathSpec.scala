@@ -2,9 +2,12 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 import graft.api.SearchEngine
 import graft.gen.TranscriptGen
@@ -12,7 +15,7 @@ import graft.index.{IndexBuilder, SegmentIO}
 import graft.index.SegmentIO.IndexedTurn
 import graft.model.{MatchStats, QuerySpec, SearchHit}
 import graft.ops.Corpus
-import graft.query.Rerank
+import graft.query.{Rerank, ShardSearch}
 import graft.tokenize.Tokenizer
 
 /** The one-job search path against the DataFrame pipeline it replaced.
@@ -295,27 +298,71 @@ class SearchPathSpec extends SparkSpec {
     }
   }
 
+  test("ShardSearch.merge == orderBy(desc score, asc doc_id).limit(k) of the same rows") {
+    // per-shard lists as the kernel emits them; equal scores across
+    // shards (2.0 in all three, 1.0 in two), and 0.0 against -0.0
+    val perShard = Seq(
+      Array(10L -> 2.0, 12L -> 1.5, 13L -> 1.0, 30L -> 0.0),
+      Array(3L -> 2.0, 5L -> 1.5, 7L -> 0.5, 25L -> -0.0),
+      Array(20L -> 2.5, 11L -> 2.0, 21L -> 1.0))
+    val rows = perShard.flatten
+    for (k <- Seq(0, 1, 2, 3, 5, rows.length, rows.length + 7)) {
+      val expected = rows.toDF("doc_id", "score").orderBy(desc("score"), asc("doc_id")).limit(k)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val got = ShardSearch.merge(perShard, k).toSeq
+      assert(got == expected, s"k=$k")
+      assert(got.map(_._1) == expected.map(_._1), s"k=$k")
+      assert(got.length == math.min(k, rows.length))
+    }
+    assert(ShardSearch.merge(perShard, 3).toSeq == Seq(20L -> 2.5, 3L -> 2.0, 10L -> 2.0))
+    assert(ShardSearch.merge(perShard, rows.length).takeRight(2).map(_._1).toSeq == Seq(25L, 30L))
+  }
+
+  test("retrieve keeps its schema (non-null doc_id bigint, score double), empty or not") {
+    val schema = StructType(Seq(StructField("doc_id", LongType, nullable = false),
+      StructField("score", DoubleType, nullable = false)))
+    for (q <- Seq("t00000 t00001", "nosuchterm", "the and of", "")) {
+      val df = engine.retrieve(q, 10)
+      assert(df.schema == schema, q)
+      assert(df.collect().nonEmpty == (q == "t00000 t00001"), q)
+    }
+    assert(engine.retrieve("t00000 nosuchterm", 10, conjunctive = true).schema == schema)
+  }
+
   test("a search runs one Spark job: the WAND fan-out") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val tasksRun = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobTasks.add(e.stageInfos.map(_.numTasks).sum)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasksRun.incrementAndGet()
     }
     val specs = Seq(
       QuerySpec("t00011 t00012 t00013", roles = Seq("user"), rerank = true,
         boostTerms = Seq("t00000")),
       QuerySpec("needle4alpha t00014", tools = Seq("bash"), tsAfter = Some(
-        new Timestamp(TranscriptGen.BaseEpochMs)), penalizeTerms = Seq("t00001")))
+        new Timestamp(TranscriptGen.BaseEpochMs)), penalizeTerms = Seq("t00001")),
+      QuerySpec("needle5alpha needle5beta", conjunctive = true), // rare AND
+      QuerySpec("needle3alpha needle11beta"), // rare OR
+      QuerySpec("t00000 t00001")) // dense OR
+    val routed = specs.map(s => engine.routedShards(s.text, s.conjunctive).length)
+    val Seq(rareAnd, rareOr, dense) = routed.takeRight(3)
+    assert(rareAnd == 1 && rareOr < engine.stats.numShards && dense == engine.stats.numShards)
     spark.sparkContext.addSparkListener(listener)
-    try {
-      specs.foreach(engine.search)
+    val hits = try {
+      val hits = specs.map(engine.search(_).hits.length)
       // listener events arrive asynchronously: wait for them to settle
       val deadline = System.currentTimeMillis() + 10000
       var last = -1
-      while (System.currentTimeMillis() < deadline && jobs.get != last) {
-        last = jobs.get
+      while (System.currentTimeMillis() < deadline && tasksRun.get != last) {
+        last = tasksRun.get
         Thread.sleep(500)
       }
+      hits
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == specs.length)
+    assert(hits.takeRight(3).forall(_ > 0))
+    // events arrive in submission order: job i is search i's fan-out
+    assert(jobTasks.asScala.toSeq == routed)
+    assert(tasksRun.get == routed.sum)
   }
 }
