@@ -29,7 +29,7 @@ object Bench {
     * re-plan — the build's partition counts are already pinned to the
     * core count. Query sessions keep AQE on (default).
     */
-  private def session(cores: Int, aqe: Boolean = true): SparkSession = {
+  private[graft] def session(cores: Int, aqe: Boolean = true): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(s"graft-bench-$cores")
@@ -52,7 +52,7 @@ object Bench {
     s
   }
 
-  private def freshDir(tag: String): String = {
+  private[graft] def freshDir(tag: String): String = {
     // tmpfs: bench artifacts must not contend with the VM's single
     // virtual disk (see session() note)
     val d = s"/dev/shm/graft-bench-$tag"

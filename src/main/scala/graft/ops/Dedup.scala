@@ -7,12 +7,12 @@ import graft.tokenize.Tokenizer
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash groupBy), MinHash+LSH (shingle → signature → banded
-  * bucket join → verified Jaccard), SimHash, and n-gram Jaccard
+  * bucket grouping → verified Jaccard), SimHash, and n-gram Jaccard
   * similarity join.
   *
   * Scale notes: every stage is shuffle-bounded (no driver
-  * collection); the LSH band join replaces the O(n²) pair space with
-  * per-bucket joins; the exact-Jaccard verification only touches LSH
+  * collection); LSH banding replaces the O(n²) pair space with
+  * per-bucket pairs; the exact-Jaccard verification only touches LSH
   * candidates. Hot buckets (boilerplate shingles) are bounded by
   * dropping shingles with document frequency above `maxShingleDf`
   * (the standard stop-shingle guard).
@@ -194,12 +194,12 @@ object Dedup {
     * downstream stage ever shuffles shingle strings — only fixed-width
     * longs.
     *
-    * `distinct=false` skips the corpus-wide dedup shuffle but is ONLY
-    * safe for probes / raw occurrence counts (e.g. MinhashProbe):
-    * [[minhashSignatures]] and [[verifyJaccard]] both REQUIRE distinct
-    * (id, sh) input — signatures carry `sz` = the Jaccard SET size and
-    * the verify counts set intersections, and duplicates silently
-    * corrupt both.
+    * `distinct=false` skips the corpus-wide dedup shuffle and keeps
+    * repeated (id, sh) rows. Only a consumer that is blind to repeats
+    * may take it: [[minhashDedup]] is, since `min` ignores them and its
+    * `collect_set` dedups each doc's shingles inside the one signature
+    * groupBy (set size = size of that set). Anything that counts rows
+    * as set sizes or intersections needs the default.
     */
   def shingles(df: DataFrame, id: Column, text: Column, n: Int,
       distinct: Boolean = true): DataFrame = {
@@ -215,135 +215,6 @@ object Dedup {
             concat_ws(" ", (0 until n).map(j => element_at(col("tk"), i + j + 1)): _*))))
         .as("sh"))
     if (distinct) exploded.distinct() else exploded
-  }
-
-  /** MinHash signatures: one row per doc with numHashes min-perm
-    * columns mh0..mh{k-1} plus the doc's shingle-set size `sz`
-    * (single hash-agg pass, map-side partial — the size rides along
-    * for free instead of costing a second pass over the shingles).
-    * Requires distinct (id, sh) input: sz is the Jaccard set size.
-    */
-  def minhashSignatures(sh: DataFrame, numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i =>
-      min(Hashing.minhashPerm(i, col("sh"))).as(s"mh$i")) :+
-      count(lit(1)).as("sz")
-    sh.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** LSH banding: bucket id per (band, banded-signature-hash);
-    * candidate pairs are docs sharing any bucket.
-    *
-    * `dedupPairs=false` skips the final pair-distinct: callers that
-    * feed the pairs into a semi-join (verifyJaccard) get dedup for
-    * free and save a wide shuffle.
-    */
-  def lshCandidates(sig: DataFrame, numHashes: Int, bands: Int,
-      dedupPairs: Boolean = true): DataFrame = {
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { bIdx =>
-      struct(lit(bIdx).as("band"),
-        Hashing.hash32(concat_ws(",",
-          (bIdx * rows until (bIdx + 1) * rows).map(i => col(s"mh$i").cast("string")): _*))
-          .as("bucket"))
-    }
-    val buckets = sig
-      .select(col("id"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-    val pairs = buckets.as("l")
-      .join(buckets.as("r"),
-        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    if (dedupPairs) pairs.distinct() else pairs
-  }
-
-  /** [[lshCandidates]] with the shingle-set sizes riding along:
-    * (id_a, sz_a, id_b, sz_b), duplicates NOT removed. Pair
-    * generation is a grouped double-explode instead of a bucket
-    * self-join — the join pasted the whole signature subplan
-    * (shingles → minhash agg over the corpus) into BOTH sides, and
-    * carrying sz through the one bucket groupBy lets the verify
-    * compute Jaccard without joining the signature relation back
-    * twice. A bucket-keyed self-join put each bucket's pairs in one
-    * task anyway, so the fan-out profile is unchanged.
-    */
-  def lshCandidatesWithSizes(
-      sig: DataFrame, numHashes: Int, bands: Int,
-      maxBucketSize: Int = Int.MaxValue): DataFrame = {
-    val rows = numHashes / bands
-    val bandCols = (0 until bands).map { bIdx =>
-      struct(lit(bIdx).as("band"),
-        Hashing.hash32(concat_ws(",",
-          (bIdx * rows until (bIdx + 1) * rows).map(i => col(s"mh$i").cast("string")): _*))
-          .as("bucket"))
-    }
-    // maxBucketSize bounds the per-bucket pair EXPLODE (m² in bucket
-    // size) — the actual scale-killer. It does NOT bound the
-    // aggregation buffer's worst row: the degenerate bucket's array is
-    // still materialized once before the size filter drops it (one
-    // O(bucket) row, spillable by the hash agg — capping it earlier
-    // would need a count pre-pass, i.e. the windowed-count funnel this
-    // shape exists to avoid). Same knob and same tradeoff as
-    // Similarity.lshCosinePairsMulti; the size filter itself is free
-    // (rides the aggregated array, no count shuffle).
-    sig
-      .select(col("id"), col("sz"), explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("sz"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
-      .groupBy(col("band"), col("bucket"))
-      .agg(collect_list(struct(col("id"), col("sz"))).as("ms"))
-      .filter(size(col("ms")).between(2, maxBucketSize))
-      .select(explode(col("ms")).as("a"), col("ms"))
-      .select(col("a"), explode(col("ms")).as("b"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("a.sz").as("sz_a"),
-        col("b.id").as("id_b"), col("b.sz").as("sz_b"))
-  }
-
-  /** Exact Jaccard for given candidate pairs via shared-shingle
-    * counts: |A∩B| / (|A| + |B| - |A∩B|).
-    *
-    * PAIR-LOCAL intersection: the left doc's shingles explode once per
-    * distinct candidate pair, and a semi-join on (right id, shingle)
-    * keeps the shared ones. Work is Σ_pairs |A| — a boilerplate
-    * shingle shared by m candidate docs contributes one row per pair
-    * that contains it, never an m² cross-candidate fan-out (the r02
-    * candidate-population self-join exploded quadratically on such
-    * shingles before its pair filter could prune). Exact — no
-    * stop-shingle approximation needed.
-    */
-  def verifyJaccard(sh: DataFrame, pairs: DataFrame): DataFrame =
-    verifyJaccard(sh, pairs, sh.groupBy(col("id")).agg(count(lit(1)).as("sz")))
-
-  /** As above with pre-computed per-doc shingle-set sizes (id, sz) —
-    * callers that already aggregated over `sh` (minhash signatures)
-    * pass them in to avoid a second pass. `sh` must be distinct
-    * (id, sh) rows. Candidate pairs may repeat (LSH multi-band
-    * collisions): they dedup here, before the explode.
-    */
-  def verifyJaccard(sh: DataFrame, pairs: DataFrame, sizes: DataFrame): DataFrame =
-    jaccardForSizedPairs(sh,
-      pairs.select(col("id_a"), col("id_b")).distinct()
-        .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b"))
-
-  /** The ONE pair-local exact-Jaccard core (see [[verifyJaccard]] for
-    * the fan-out rationale): distinct (id_a, id_b, sz_a, sz_b) pairs →
-    * explode the left doc's shingles → semi-join shared ones on
-    * (id_b, sh) → count → |A∩B| / (|A| + |B| - |A∩B|). Both verify
-    * entry points (pairs + separate sizes, and minhash's pairs with
-    * sizes riding along) funnel here so the correctness-critical
-    * distinct placement and intersection shape exist exactly once.
-    * `p` must already be distinct per (id_a, id_b).
-    */
-  private def jaccardForSizedPairs(sh: DataFrame, p: DataFrame): DataFrame = {
-    val aSh = p.join(sh.withColumnRenamed("id", "id_a"), "id_a")
-    aSh
-      .join(sh.select(col("id").as("id_b"), col("sh")), Seq("id_b", "sh"), "left_semi")
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(count(lit(1)).as("inter"))
-      .select(col("id_a"), col("id_b"),
-        (col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .as("jaccard"))
   }
 
   /** Full MinHash+LSH near-dup pipeline: shingle → sign → band →
@@ -470,7 +341,7 @@ object Dedup {
     // subplan (tf + bit-sum aggregations over the corpus) into BOTH
     // sides — two full signature computations — while a chunk-keyed
     // self-join lands every chunk's members in one task anyway. Same
-    // shape as lshCandidatesWithSizes / lshCosinePairsMulti. Exact
+    // shape as minhashDedup / Similarity.lshCosinePairsMulti. Exact
     // Hamming verify before the dedup exchange so the distinct runs
     // over the smallest relation.
     val chunks = sig

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.gen.TranscriptGen
 import graft.index.IndexBuilder
 import graft.model.Turn
@@ -23,15 +21,7 @@ object IndexBuildJob {
     val numShards = if (args.length > 2) args(2).toInt else 32
     val blockSize = if (args.length > 3) args(3).toInt else 128
     val salts = if (args.length > 4) args(4).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-index-build")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession("graft-index-build")
     import spark.implicits._
     val turns =
       if (input.startsWith("gen:")) TranscriptGen.corpus(spark, input.drop(4).toLong)
@@ -39,7 +29,7 @@ object IndexBuildJob {
     val t0 = System.nanoTime()
     val stats = IndexBuilder.build(spark, turns, dir,
       IndexBuilder.Config(blockSize = blockSize, numShards = numShards,
-        numPartitions = cpus.toInt, salts = salts))
+        numPartitions = CliSession.cpus.toInt, salts = salts))
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"[index-build] docs=${stats.numDocs} avgdl=${stats.avgdl}%.3f " +
       f"tokens=${stats.totalTokens} shards=${stats.numShards} " +

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.Bench.{freshDir, session}
 import graft.functions.KmvSketch
 import graft.gen.TranscriptGen
 import graft.ops.{Hashing, Pack, Sampling, TextOps}
@@ -23,35 +23,11 @@ import graft.tokenize.Tokenizer
   * Usage: runMain graft.tools.PipelineScaleProbe [convs] [coresCsv]
   */
 object PipelineScaleProbe {
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-psp-$cores")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def freshDir(tag: String): String = {
-    val d = s"/dev/shm/graft-psp-$tag"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(d))
-    d
-  }
-
   def main(args: Array[String]): Unit = {
     val convs = if (args.length > 0) args(0).toLong else 100000L
     val coresList = (if (args.length > 1) args(1) else "32").split(",").map(_.toInt)
 
-    val corpusPath = freshDir("corpus")
+    val corpusPath = freshDir("psp-corpus")
     val s0 = session(32)
     TranscriptGen.corpus(s0, convs).write.mode("overwrite").parquet(corpusPath)
     val n = s0.read.parquet(corpusPath).count()
@@ -152,7 +128,7 @@ object PipelineScaleProbe {
       // materialized table (16 bytes/row), so the double consumption
       // of the (id, n) projection stops re-tokenizing — this times the
       // prefix-sum operator itself (materialization is untimed)
-      val countsPath = freshDir(s"counts-$cores")
+      val countsPath = freshDir(s"psp-counts-$cores")
       turns.select(col("id"), TextOps.wsTokenCount(col("text")).as("n"))
         .write.mode("overwrite").parquet(countsPath)
       time("pack_over_materialized_counts") {

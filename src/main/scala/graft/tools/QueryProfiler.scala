@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): per-query
   * cold/warm wall time, Spark job/stage counts during the cold run,
@@ -11,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * plan-diff claims in OPTIMIZATION_r*.md are checked against.
   *
   * Usage: runMain graft.tools.QueryProfiler <sfDir> <planOutDir> <query>...
-  *        ("all" = every SparkEntry query). Session mirrors Bench's
-  * query session (local[SPARK_GRAFT_CPUS], AQE on, zstd, shm dirs) so
+  *        ("all" = every SparkEntry query). Runs in Bench's query
+  * session (local[SPARK_GRAFT_CPUS], AQE on, zstd, shm dirs) so
   * numbers are comparable to the driver bench's per-query map.
   */
 object QueryProfiler {
@@ -22,19 +21,7 @@ object QueryProfiler {
     val names =
       if (args.length > 2 && args(2) != "all") args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/dev/shm/graft-spark"))
-      .config("spark.io.compression.codec", "zstd")
-      .config("spark.sql.parquet.compression.codec", "zstd")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

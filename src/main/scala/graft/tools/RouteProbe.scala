@@ -3,7 +3,6 @@ package graft.tools
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.api.SearchEngine
 import graft.gen.TranscriptGen
@@ -32,15 +31,8 @@ object RouteProbe {
     val shards = if (args.length > 1) args(1).toInt else 256
     val dir = if (args.length > 2) args(2)
       else s"/dev/shm/graft-routeprobe-$shards"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Bench.session(cpus)
 
     // fixed-size shards pinned so the corpus lands in exactly `shards`
     // dirs (the at-scale layout; resume manifests make re-entry free).
@@ -51,7 +43,7 @@ object RouteProbe {
     val dps = math.max(1L, (turns + shards - 1) / shards)
     val stats = IndexBuilder.build(spark, TranscriptGen.corpus(spark, convs), dir,
       IndexBuilder.Config(blockSize = 128, numShards = shards,
-        docsPerShard = Some(dps), numPartitions = cpus.toInt))
+        docsPerShard = Some(dps), numPartitions = cpus))
     println(s"[route] corpus docs=${stats.numDocs} shards=${stats.numShards} dps=$dps")
 
     // dictionary routing-size profile: the v6 bound in numbers

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.SearchEngine
 import graft.model.QuerySpec
 
@@ -12,42 +10,54 @@ import graft.model.QuerySpec
   *          [--and] [--boost t1,t2] [--penalize t1,t2] [--role r]
   */
 object SearchCli {
-  def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "usage: SearchCli <indexDir> <query...> [--k N] ...")
-    val dir = args(0)
-    var k = 10
-    var minScore = 0.0
-    var conjunctive = false
-    var boost: Seq[String] = Nil
-    var penalize: Seq[String] = Nil
-    var roles: Seq[String] = Nil
+  val Usage = "usage: SearchCli <indexDir> <query...> [--k N] [--min-score S] " +
+    "[--and] [--boost t1,t2] [--penalize t1,t2] [--role r]"
+
+  /** The index dir and the query spec; a flag without its value or a
+    * malformed number fails with `IllegalArgumentException` carrying
+    * [[Usage]].
+    */
+  def parse(args: Array[String]): (String, QuerySpec) = {
+    def fail(why: String): Nothing = throw new IllegalArgumentException(s"$why\n$Usage")
+    if (args.isEmpty) fail("missing <indexDir>")
+    var spec = QuerySpec("")
     val queryWords = scala.collection.mutable.ArrayBuffer[String]()
     var i = 1
+    def value(): String = {
+      if (i + 1 >= args.length) fail(s"${args(i)} needs a value")
+      i += 1
+      args(i)
+    }
+    def terms() = value().split(",").toSeq
     while (i < args.length) {
       args(i) match {
-        case "--k" => k = args(i + 1).toInt; i += 1
-        case "--min-score" => minScore = args(i + 1).toDouble; i += 1
-        case "--and" => conjunctive = true
-        case "--boost" => boost = args(i + 1).split(",").toSeq; i += 1
-        case "--penalize" => penalize = args(i + 1).split(",").toSeq; i += 1
-        case "--role" => roles = args(i + 1).split(",").toSeq; i += 1
+        case "--k" =>
+          val v = value()
+          spec = spec.copy(topK = v.toIntOption.getOrElse(fail(s"--k: not an int: $v")))
+        case "--min-score" =>
+          val v = value()
+          spec = spec.copy(minScore =
+            v.toDoubleOption.getOrElse(fail(s"--min-score: not a number: $v")))
+        case "--and" => spec = spec.copy(conjunctive = true)
+        case "--boost" => spec = spec.copy(boostTerms = terms())
+        case "--penalize" => spec = spec.copy(penalizeTerms = terms())
+        case "--role" => spec = spec.copy(roles = terms())
         case w => queryWords += w
       }
       i += 1
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft-search")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val engine = new SearchEngine(spark, dir)
-    val resp = engine.search(QuerySpec(queryWords.mkString(" "), topK = k,
-      minScore = minScore, conjunctive = conjunctive, roles = roles,
-      boostTerms = boost, penalizeTerms = penalize))
+    (args(0), spec.copy(text = queryWords.mkString(" ")))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (dir, spec) =
+      try parse(args)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(e.getMessage)
+        sys.exit(2)
+      }
+    val spark = CliSession("graft-search")
+    val resp = new SearchEngine(spark, dir).search(spec)
     println(s"query: '${resp.query}'  hits: ${resp.totalResults}  " +
       f"time: ${resp.searchTimeMs}%.1f ms")
     resp.hits.zipWithIndex.foreach { case (h, rank) =>

@@ -66,21 +66,23 @@ class OpsSpec extends SparkSpec {
   test("minhash verify is exact under a planted corpus-wide boilerplate shingle") {
     import spark.implicits._
     // every doc shares the same boilerplate token (max-df shingle);
-    // the pair-local verify must stay exact (and, structurally, never
-    // fan the boilerplate shingle out across candidates — it only ever
-    // appears once per pair)
-    val docs = (0L until 40L).map { i =>
-      val uniq = (0 until 6).map(j => s"tok${i}x$j").mkString(" ")
-      (i, s"boilerplate $uniq")
-    }.toDF("doc_id", "text")
-    val allPairs = (for { a <- 0L until 40L; b <- (a + 1) until 40L }
-      yield (a, b)).toDF("id_a", "id_b")
-    val sh = Dedup.shingles(docs, col("doc_id"), col("text"), n = 1)
-    val got = Dedup.verifyJaccard(sh, allPairs)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    // every pair shares exactly the boilerplate token: j = 1/13
-    assert(got.size == 40 * 39 / 2)
-    got.values.foreach(j => assert(math.abs(j - 1.0 / 13) < 1e-12))
+    // single-row bands make pairs collide whenever boilerplate is both
+    // docs' min for one permutation, and the carry-through verify must
+    // stay exact on every pair that surfaces
+    val texts = (0L until 40L).map { i =>
+      i -> s"boilerplate ${(0 until 6).map(j => s"tok${i}x$j").mkString(" ")}"
+    }.toMap
+    val docs = texts.toSeq.toDF("doc_id", "text")
+    val got = Dedup.minhashDedup(docs, col("doc_id"), col("text"),
+      shingleSize = 1, numHashes = 16, bands = 16, tau = 0.0)
+      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
+    assert(got.nonEmpty, "boilerplate collisions must surface pairs")
+    def tokens(id: Long) = texts(id).split(" ").toSet
+    got.foreach { case ((a, b), j) =>
+      val expected = (tokens(a) & tokens(b)).size.toDouble / (tokens(a) | tokens(b)).size
+      assert(expected == 1.0 / 13)
+      assert(math.abs(j - expected) < 1e-12, s"pair ($a, $b)")
+    }
   }
 
   test("simhash: identical sets equal, near-dups close, distinct far") {

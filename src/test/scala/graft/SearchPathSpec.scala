@@ -17,6 +17,7 @@ import graft.model.{MatchStats, QuerySpec, SearchHit}
 import graft.ops.Corpus
 import graft.query.{Rerank, ShardSearch}
 import graft.tokenize.Tokenizer
+import graft.tools.SearchCli
 
 /** The one-job search path against the DataFrame pipeline it replaced.
   * `SearchEngine.search` fetches its hits' doc-store rows with direct
@@ -327,6 +328,20 @@ class SearchPathSpec extends SparkSpec {
       assert(df.collect().nonEmpty == (q == "t00000 t00001"), q)
     }
     assert(engine.retrieve("t00000 nosuchterm", 10, conjunctive = true).schema == schema)
+  }
+
+  test("SearchCli.parse: full flag set; a flag without its value or a bad --k fails with usage") {
+    val (dir, spec) = SearchCli.parse(Array("idx", "alpha", "--k", "5", "--min-score",
+      "0.5", "--and", "beta", "--boost", "x,y", "--penalize", "z", "--role", "user,tool"))
+    assert(dir == "idx")
+    assert(spec == QuerySpec("alpha beta", topK = 5, minScore = 0.5, conjunctive = true,
+      roles = Seq("user", "tool"), boostTerms = Seq("x", "y"), penalizeTerms = Seq("z")))
+    assert(SearchCli.parse(Array("idx", "q")) == ("idx", QuerySpec("q")))
+    for (bad <- Seq(Array("idx", "foo", "--k"), Array("idx", "foo", "--k", "x"),
+        Array("idx", "foo", "--role"), Array[String]())) {
+      val e = intercept[IllegalArgumentException](SearchCli.parse(bad))
+      assert(e.getMessage.contains(SearchCli.Usage), bad.mkString(" "))
+    }
   }
 
   test("a search runs one Spark job: the WAND fan-out") {
