@@ -17,9 +17,10 @@ import graft.tokenize.Tokenizer
   * Knobs mirror the reference's corpus behavior: Zipf(s=1.07) term
   * frequencies give genuinely hot terms (the analog of the
   * hot-partition re-split in reference `src/pubmed_downloader.py:112-163`,
-  * exercising salted skew handling), stop-word filler exercises the
-  * tokenizer's stop list, and a planted needle set replicates the
-  * known-relevant-document fixture (`diagnose_semantic_search.py:18-21`).
+  * exercising the per-shard split of hot posting groups), stop-word
+  * filler exercises the tokenizer's stop list, and a planted needle
+  * set replicates the known-relevant-document fixture
+  * (`diagnose_semantic_search.py:18-21`).
   */
 object TranscriptGen {
 

@@ -2,7 +2,7 @@ package graft.index
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.Turn
@@ -31,14 +31,14 @@ import SegmentIO._
   *  3. postings   carried tokens → hash-repartition by (shard, term)
   *                → in-partition sort → streaming block encode
   *                (delta+varbyte, avgdl-independent (max_tf, min_dl)
-  *                block bounds). With cfg.salts > 1, hot terms build
-  *                as salted sub-postings merged by a sort-merge
-  *                shuffle — byte-identical output. With
-  *                cfg.postingsGroups = G > 1, shards build and COMMIT
-  *                in G independent jobs (dynamic partition overwrite
-  *                of the shard dirs each job owns), so a crash loses
-  *                at most one group and resume re-runs only
-  *                not-yet-committed groups (G = numShards gives
+  *                block bounds). The (shard, term) key is the skew
+  *                handling: a hot term splits into one posting group
+  *                per doc-range shard, each ≤ docsPerShard postings.
+  *                With cfg.postingsGroups = G > 1, shards build and
+  *                COMMIT in G independent jobs (dynamic partition
+  *                overwrite of the shard dirs each job owns), so a
+  *                crash loses at most one group and resume re-runs
+  *                only not-yet-committed groups (G = numShards gives
   *                per-shard commit granularity).
   *  4. dictionary per-term df, cf, max_tf, min_dl (hash agg over
   *                block metadata, map-side partial).
@@ -65,7 +65,6 @@ object IndexBuilder {
       // full-rebuild equivalence)
       docsPerShard: Option[Long] = None,
       numPartitions: Int = 32,
-      salts: Int = 1,
       normsPageSize: Int = 1 << 20,
       // shard-group commit granularity for the postings stage
       postingsGroups: Int = 1,
@@ -73,12 +72,6 @@ object IndexBuilder {
       // passes; disable when the input is already a file-backed table
       // (re-scanning parquet is cheaper than first-touching cache pages)
       cacheInput: Boolean = true)
-
-  /** One salted sub-posting run: a doc-ordered slice of one term's
-    * postings within a shard (salt = hash(doc_id) % salts).
-    */
-  case class SubRun(shard: Int, term: String, salt: Int,
-      docIds: Array[Long], tfs: Array[Int], dls: Array[Int])
 
   /** Stage-1 rank WITHOUT tokenize: global sort on (conv_id,
     * turn_idx) → (turn, rank) via zipWithIndex — the one place RDD is
@@ -151,6 +144,19 @@ object IndexBuilder {
       .withColumn("tfinc", lit(1))
   }
 
+  // Lineage checksums, one expression per table: the build observes
+  // each on its write job, and append and recovery read the same
+  // expression back, so their manifests agree with a fresh build's.
+  private def docsChecksum = expr("bit_xor(xxhash64(doc_id, conv_id, turn_idx))")
+  private def postingsChecksum = expr("bit_xor(xxhash64(term, block_id, first_doc, last_doc))")
+  private def normsChecksum = expr("bit_xor(xxhash64(shard, page, n, first_doc))")
+  private def dictChecksum = expr("bit_xor(xxhash64(term, df, cf))")
+
+  /** A Long aggregate, observed on a write or read back; null (no
+    * input rows) reads as 0.
+    */
+  private def long0(v: Any): Long = if (v == null) 0L else v.asInstanceOf[Long]
+
   private def timed[T](stage: String)(f: => T): T = {
     val t0 = System.nanoTime()
     val r = f
@@ -171,13 +177,12 @@ object IndexBuilder {
     blocks.toDF()
       .repartition(col("shard"))
       .sortWithinPartitions("shard", "term", "block_id")
-      .observe(obs,
-        expr("bit_xor(xxhash64(term, block_id, first_doc, last_doc))").as("x"))
+      .observe(obs, postingsChecksum.as("x"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("shard")
       .parquet(postingsPath(dir))
-    Option(obs.get("x")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    long0(obs.get("x"))
   }
 
   /** Paged norms for the given docs slice, written with dynamic
@@ -207,8 +212,7 @@ object IndexBuilder {
           Varbyte.encodeInts(arr.map(_._3)))
       }
       .toDF()
-      .observe(obs, count(lit(1)).as("rows"),
-        expr("bit_xor(xxhash64(shard, page, n, first_doc))").as("x"))
+      .observe(obs, count(lit(1)).as("rows"), normsChecksum.as("x"))
       // written straight from the groupByKey output — an extra
       // repartition(shard) wave costs more than the handful of small
       // files per shard dir it would save
@@ -219,8 +223,7 @@ object IndexBuilder {
     val row = obs.get
     manifestNumDocs.foreach(n =>
       writeManifest(dir, StageManifest("norms", n,
-        row("rows").asInstanceOf[Long],
-        Option(row("x")).map(_.asInstanceOf[Long]).getOrElse(0L), Nil)))
+        row("rows").asInstanceOf[Long], long0(row("x")), Nil)))
   }
 
   /** Overall postings manifest: per-shard rows from parquet footers
@@ -233,12 +236,8 @@ object IndexBuilder {
       spark: SparkSession, dir: String, numDocs: Long,
       observedChecksum: Option[Long]): Unit = {
     val perShard = shardRowCounts(postingsPath(dir))
-    val checksum = observedChecksum.getOrElse {
-      val m = spark.read.parquet(postingsPath(dir))
-        .agg(expr("bit_xor(xxhash64(term, block_id, first_doc, last_doc))"))
-        .collect()(0)
-      if (m.isNullAt(0)) 0L else m.getLong(0)
-    }
+    val checksum = observedChecksum.getOrElse(
+      long0(spark.read.parquet(postingsPath(dir)).agg(postingsChecksum).head().get(0)))
     writeManifest(dir, StageManifest("postings", numDocs,
       perShard.map(_._2).sum, checksum, perShard))
   }
@@ -293,20 +292,20 @@ object IndexBuilder {
       .withColumn("shards",
         when(size($"shards") >= lit(denseMin), array().cast("array<int>"))
           .otherwise($"shards"))
-      .observe(obs, count(lit(1)).as("rows"),
-        expr("bit_xor(xxhash64(term, df, cf))").as("x"))
-      .orderBy($"term").write.mode("overwrite").parquet(dictPath(dir))
+      .orderBy($"term")
+      // observed ABOVE the sort: below it, the range partitioner's
+      // sampling job runs the observer too, doubling the row count and
+      // XOR-cancelling the checksum to 0
+      .observe(obs, count(lit(1)).as("rows"), dictChecksum.as("x"))
+      .write.mode("overwrite").parquet(dictPath(dir))
     val row = obs.get
     writeManifest(dir, StageManifest("dictionary", numDocs,
-      row("rows").asInstanceOf[Long],
-      Option(row("x")).map(_.asInstanceOf[Long]).getOrElse(0L), Nil))
+      row("rows").asInstanceOf[Long], long0(row("x")), Nil))
   }
 
   private def writeNormsManifest(spark: SparkSession, dir: String, numDocs: Long): Unit = {
-    val m = spark.read.parquet(normsPath(dir)).agg(count(lit(1)),
-      expr("bit_xor(xxhash64(shard, page, n, first_doc))")).collect()(0)
-    writeManifest(dir, StageManifest("norms", numDocs,
-      m.getLong(0), if (m.isNullAt(1)) 0L else m.getLong(1), Nil))
+    val m = spark.read.parquet(normsPath(dir)).agg(count(lit(1)), normsChecksum).head()
+    writeManifest(dir, StageManifest("norms", numDocs, m.getLong(0), long0(m.get(1)), Nil))
   }
 
   def build(
@@ -355,14 +354,13 @@ object IndexBuilder {
       val obs = new org.apache.spark.sql.Observation(s"docs-${System.nanoTime()}")
       timed("docs.write")(
         ids.toDF().drop("tk")
-          .observe(obs, count(lit(1)).as("rows"),
-            expr("bit_xor(xxhash64(doc_id, conv_id, turn_idx))").as("x"),
+          .observe(obs, count(lit(1)).as("rows"), docsChecksum.as("x"),
             sum($"dl").as("tok"))
           .write.mode("overwrite").partitionBy("shard").parquet(docsPath(dir)))
       val row = obs.get
       val n = row("rows").asInstanceOf[Long]
-      val checksum = Option(row("x")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      val totalTokens = Option(row("tok")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val checksum = long0(row("x"))
+      val totalTokens = long0(row("tok"))
       val perShard = timed("docs.manifest")(shardRowCounts(docsPath(dir)))
       val numShards = math.max(1L, (n + docsPerShard - 1) / docsPerShard).toInt
       val avgdl = if (n == 0) 0.0 else totalTokens.toDouble / n
@@ -410,10 +408,8 @@ object IndexBuilder {
                 stats.docsPerShard, baseId = 0L, group = Some((g, groups)))
               case None => docs.filter(pmod($"shard", lit(groups)) === g)
             }
-          val toks = rawTokens(spark, docsG)
-          val blocks =
-            if (cfg.salts <= 1) encodeDirect(spark, toks, stats, cfg)
-            else encodeSalted(spark, toks, stats, cfg)
+          val blocks = encodeDirect(spark, rawTokens(spark, docsG),
+            stats.blockSize, cfg.numPartitions)
           obsXor ^= timed(s"postings.write$g")(writePostings(dir, blocks))
           writeManifest(dir, StageManifest(s"postings_g$g", stats.numDocs, 0L, 0L, Nil))
         } else allFresh = false
@@ -552,8 +548,7 @@ object IndexBuilder {
     timed("append.docs")(deltaIds.toDF().drop("tk")
       .write.mode("append").partitionBy("shard").parquet(docsPath(dir)))
 
-    val aggRow = deltaIds.agg(sum($"dl")).collect()(0)
-    val deltaTokens = if (aggRow.isNullAt(0)) 0L else aggRow.getLong(0)
+    val deltaTokens = long0(deltaIds.agg(sum($"dl")).head().get(0))
     val newN = oldN + nd
     val totalTokens = stats0.totalTokens + deltaTokens
     val stats1 = stats0.copy(
@@ -569,26 +564,10 @@ object IndexBuilder {
     val deltaToks = rawTokens(spark, deltaIds)
     val input =
       if (!boundaryPartial) deltaToks
-      else {
-        val dlB = readDocs(spark, dir)
-          .filter($"shard" === boundary && $"doc_id" < oldN)
-          .select($"doc_id", $"dl")
-        val decoded = readPostings(spark, dir)
-          .filter($"shard" === boundary)
-          .flatMap { b =>
-            val ids = Varbyte.decodeDeltas(b.doc_bytes, b.n)
-            val tfs = Varbyte.decodeInts(b.tf_bytes, b.n)
-            ids.indices.iterator.map(i => (b.term, ids(i), tfs(i)))
-          }
-          .toDF("term", "doc_id", "tf")
-        decoded.join(dlB, "doc_id")
-          .select($"doc_id", $"dl", lit(boundary).as("shard"), $"term",
-            $"tf".as("tfinc"))
-          .union(deltaToks.select($"doc_id", $"dl", $"shard", $"term", $"tfinc"))
-      }
-    val cfg1 = Config(blockSize = stats0.blockSize, numPartitions = numPartitions,
-      normsPageSize = stats0.normsPageSize)
-    val blocks = encodeDirect(spark, input, stats1, cfg1)
+      else boundaryTokens(spark, dir, boundary, readDocs(spark, dir).toDF()
+        .filter($"shard" === boundary && $"doc_id" < oldN))
+        .union(deltaToks.select($"doc_id", $"dl", $"shard", $"term", $"tfinc"))
+    val blocks = encodeDirect(spark, input, stats0.blockSize, numPartitions)
     timed("append.postings")(writePostings(dir, blocks))
 
     // ---- postings manifest + dictionary: derived, recompute (the
@@ -695,22 +674,9 @@ object IndexBuilder {
         deleteRecursively(shardDir)
         java.nio.file.Files.move(tmpShard, shardDir)
         // re-encode boundary postings from decode ⋈ restored docs
-        val dlB = keep.select($"doc_id", $"dl")
-        val decoded = readPostings(spark, dir)
-          .filter($"shard" === boundary)
-          .flatMap { b =>
-            val ids = Varbyte.decodeDeltas(b.doc_bytes, b.n)
-            val tfs = Varbyte.decodeInts(b.tf_bytes, b.n)
-            ids.indices.iterator.map(i => (b.term, ids(i), tfs(i)))
-          }
-          .toDF("term", "doc_id", "tf")
-        val input = decoded.join(dlB, "doc_id")
-          .select($"doc_id", $"dl", lit(boundary).as("shard"), $"term",
-            $"tf".as("tfinc"))
-        val cfgR = Config(blockSize = stats0.blockSize,
-          numPartitions = math.max(1, spark.sparkContext.defaultParallelism),
-          normsPageSize = stats0.normsPageSize)
-        writePostings(dir, encodeDirect(spark, input, stats0, cfgR))
+        writePostings(dir, encodeDirect(spark,
+          boundaryTokens(spark, dir, boundary, keep), stats0.blockSize,
+          math.max(1, spark.sparkContext.defaultParallelism)))
         writeNorms(spark, dir,
           keep.select(lit(boundary).as("shard"), $"doc_id", $"dl")
             .as[(Int, Long, Int)],
@@ -732,24 +698,37 @@ object IndexBuilder {
     SegmentIO.invalidateDlCache(dir)
   }
 
-  /** Recompute the docs-table manifest (per-shard rows + xxhash
-    * lineage checksum) and the stats manifest from the tables on
-    * disk. Shared by the append tail and torn-append recovery —
-    * recovery must restore EVERY manifest the append window can
-    * dirty, not only the derived (dictionary/postings/norms) ones.
+  /** Encoder rows (doc_id, dl, shard, term, tfinc) of the boundary
+    * shard's stored postings: its blocks decoded back to (term, doc_id,
+    * tf) and joined to `docs` for dl. Postings of doc ids missing from
+    * `docs` drop out, which is how recovery sheds torn rows.
+    */
+  private def boundaryTokens(
+      spark: SparkSession, dir: String, boundary: Int, docs: DataFrame): DataFrame = {
+    import spark.implicits._
+    readPostings(spark, dir)
+      .filter($"shard" === boundary)
+      .flatMap { b =>
+        val ids = Varbyte.decodeDeltas(b.doc_bytes, b.n)
+        val tfs = Varbyte.decodeInts(b.tf_bytes, b.n)
+        ids.indices.iterator.map(i => (b.term, ids(i), tfs(i)))
+      }
+      .toDF("term", "doc_id", "tf")
+      .join(docs.select($"doc_id", $"dl"), "doc_id")
+      .select($"doc_id", $"dl", lit(boundary).as("shard"), $"term", $"tf".as("tfinc"))
+  }
+
+  /** Recompute the docs-table manifest and the stats manifest from
+    * the tables on disk, the docs manifest the way a fresh build writes
+    * it: per-shard rows from parquet footers plus the lineage checksum.
+    * Shared by the append tail and torn-append recovery — recovery
+    * must restore EVERY manifest the append window can dirty, not only
+    * the derived (dictionary/postings/norms) ones.
     */
   private def writeDocsAndStatsManifests(
       spark: SparkSession, dir: String, n: Long, totalTokens: Long): Unit = {
-    import spark.implicits._
-    val shardRows = readDocs(spark, dir)
-      .groupBy("shard")
-      .agg(count(lit(1)).as("c"),
-        expr("bit_xor(xxhash64(doc_id, conv_id, turn_idx))").as("x"))
-      .collect()
-    val perShard = shardRows.map(r => (r.get(0).toString, r.getLong(1))).sortBy(_._1).toSeq
-    val checksum = shardRows.map(r => if (r.isNullAt(2)) 0L else r.getLong(2))
-      .foldLeft(0L)(_ ^ _)
-    writeManifest(dir, StageManifest("docs", n, n, checksum, perShard))
+    val checksum = long0(spark.read.parquet(docsPath(dir)).agg(docsChecksum).head().get(0))
+    writeManifest(dir, StageManifest("docs", n, n, checksum, shardRowCounts(docsPath(dir))))
     writeManifest(dir, StageManifest("stats", n, 1, totalTokens, Nil))
   }
 
@@ -883,15 +862,15 @@ object IndexBuilder {
     }
   }
 
-  /** Direct path: hash-repartition raw occurrences by (shard, term)
-    * — a group never splits across partitions — then in-partition
-    * sort + streaming encode of consecutive groups.
+  /** The postings encoder: hash-repartition raw occurrences by
+    * (shard, term) — a group never splits across partitions — then
+    * in-partition sort + streaming encode of consecutive groups.
     */
   private def encodeDirect(
       spark: SparkSession,
-      toks: org.apache.spark.sql.DataFrame,
-      stats: IndexStats,
-      cfg: Config): Dataset[PostingBlock] = {
+      toks: DataFrame,
+      blockSize: Int,
+      numPartitions: Int): Dataset[PostingBlock] = {
     import spark.implicits._
     // sort with a hash-leading key: long compares instead of string
     // compares dominate the 10^8-row sort; `term` stays in the key
@@ -900,7 +879,7 @@ object IndexBuilder {
     // floor the shuffle width: at very low core counts a per-core
     // partition count would make multi-GB per-task sorts (tasks just
     // queue instead; output content is partition-invariant — tested)
-    val shuffleParts = math.max(cfg.numPartitions, 16)
+    val shuffleParts = math.max(numPartitions, 16)
     // the hash-leading sort key is an EXPRESSION, not a column: it is
     // materialized by the sorter per row post-shuffle and never
     // shuffled (8 incompressible bytes/row saved from the build's
@@ -910,7 +889,6 @@ object IndexBuilder {
       .sortWithinPartitions($"shard", xxhash64($"term"), $"term", $"doc_id")
       .select($"shard", $"term", $"doc_id", $"dl", $"tfinc")
       .as[(Int, String, Long, Int, Int)]
-    val blockSize = stats.blockSize
     sorted.mapPartitions { it =>
       new Iterator[PostingBlock] {
         private val in = it.buffered
@@ -931,77 +909,5 @@ object IndexBuilder {
         def next(): PostingBlock = { fill(); pending.next() }
       }
     }
-  }
-
-  /** Salted path for hot terms (north rule: "salted-key skew
-    * handling"): sub-aggregate per (shard, term, salt = hash(doc_id)
-    * % salts), then merge sub-postings with a sort-merge shuffle.
-    * Block boundaries are applied only after the merge, so output is
-    * byte-identical to the direct path (SURVEY §7.5).
-    */
-  private def encodeSalted(
-      spark: SparkSession,
-      toks: org.apache.spark.sql.DataFrame,
-      stats: IndexStats,
-      cfg: Config): Dataset[PostingBlock] = {
-    import spark.implicits._
-    val shuffleParts = math.max(cfg.numPartitions, 16)
-    val salted = toks
-      .withColumn("salt", pmod(xxhash64($"doc_id"), lit(cfg.salts)).cast("int"))
-      .repartition(shuffleParts, $"shard", $"term", $"salt")
-      .sortWithinPartitions($"shard", xxhash64($"term"), $"term", $"salt", $"doc_id")
-      .select($"shard", $"term", $"salt", $"doc_id", $"dl", $"tfinc")
-      .as[(Int, String, Int, Long, Int, Int)]
-
-    // sub-posting runs: one (shard, term, salt) = one sorted run
-    val runs = salted.mapPartitions { it =>
-      val in = it.buffered
-      new Iterator[SubRun] {
-        def hasNext: Boolean = in.hasNext
-        def next(): SubRun = {
-          val (shard, term, salt, _, _, _) = in.head
-          val acc = new RunAcc
-          while (in.hasNext && in.head._1 == shard &&
-            in.head._2 == term && in.head._3 == salt) {
-            val (_, _, _, d, l, tf) = in.next()
-            acc.add(d, l, tf)
-          }
-          SubRun(shard, term, salt, acc.ids.toArray, acc.tfs.toArray, acc.dls.toArray)
-        }
-      }
-    }
-
-    val blockSize = stats.blockSize
-    runs
-      .groupByKey(r => (r.shard, r.term))
-      .flatMapGroups { (key: (Int, String), rs: Iterator[SubRun]) =>
-        val (shard, term) = key
-        // k-way merge of disjoint sorted runs by doc_id
-        val runList = rs.toArray
-        val total = runList.map(_.docIds.length).sum
-        val ids = new Array[Long](total)
-        val tfs = new Array[Int](total)
-        val dls = new Array[Int](total)
-        val heads = Array.fill(runList.length)(0)
-        var w = 0
-        while (w < total) {
-          var best = -1
-          var bestDoc = Long.MaxValue
-          var i = 0
-          while (i < runList.length) {
-            if (heads(i) < runList(i).docIds.length &&
-              runList(i).docIds(heads(i)) < bestDoc) {
-              bestDoc = runList(i).docIds(heads(i)); best = i
-            }
-            i += 1
-          }
-          ids(w) = runList(best).docIds(heads(best))
-          tfs(w) = runList(best).tfs(heads(best))
-          dls(w) = runList(best).dls(heads(best))
-          heads(best) += 1
-          w += 1
-        }
-        encodeGroup(shard, term, ids, tfs, dls, blockSize).iterator
-      }
   }
 }

@@ -10,17 +10,35 @@ import graft.model.Turn
   * synthetic corpus.
   *
   * Usage: IndexBuildJob <gen:N | transcripts.parquet> <indexDir>
-  *          [numShards] [blockSize] [salts]
+  *          [numShards] [blockSize]
   */
 object IndexBuildJob {
+  val Usage = "usage: IndexBuildJob <gen:N|parquetPath> <indexDir> [numShards] [blockSize]"
+
+  /** (input, indexDir, numShards, blockSize); a wrong argument count,
+    * a `gen:` count that is not a number or a shard count or block
+    * size that is not a positive int fails with
+    * `IllegalArgumentException` carrying [[Usage]].
+    */
+  def parse(args: Array[String]): (String, String, Int, Int) = {
+    def fail(why: String): Nothing = throw new IllegalArgumentException(s"$why\n$Usage")
+    if (args.length < 2 || args.length > 4) fail(s"expected 2 to 4 arguments, got ${args.length}")
+    if (args(0).startsWith("gen:") && args(0).drop(4).toLongOption.isEmpty)
+      fail(s"not a conversation count: ${args(0)}")
+    def positive(i: Int, name: String, default: Int): Int =
+      if (args.length <= i) default
+      else args(i).toIntOption.filter(_ > 0)
+        .getOrElse(fail(s"$name: not a positive int: ${args(i)}"))
+    (args(0), args(1), positive(2, "numShards", 32), positive(3, "blockSize", 128))
+  }
+
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2,
-      "usage: IndexBuildJob <gen:N|parquetPath> <indexDir> [numShards] [blockSize] [salts]")
-    val input = args(0)
-    val dir = args(1)
-    val numShards = if (args.length > 2) args(2).toInt else 32
-    val blockSize = if (args.length > 3) args(3).toInt else 128
-    val salts = if (args.length > 4) args(4).toInt else 1
+    val (input, dir, numShards, blockSize) =
+      try parse(args)
+      catch { case e: IllegalArgumentException =>
+        System.err.println(e.getMessage)
+        sys.exit(2)
+      }
     val spark = CliSession("graft-index-build")
     import spark.implicits._
     val turns =
@@ -29,7 +47,7 @@ object IndexBuildJob {
     val t0 = System.nanoTime()
     val stats = IndexBuilder.build(spark, turns, dir,
       IndexBuilder.Config(blockSize = blockSize, numShards = numShards,
-        numPartitions = CliSession.cpus.toInt, salts = salts))
+        numPartitions = CliSession.cpus.toInt))
     val sec = (System.nanoTime() - t0) / 1e9
     println(f"[index-build] docs=${stats.numDocs} avgdl=${stats.avgdl}%.3f " +
       f"tokens=${stats.totalTokens} shards=${stats.numShards} " +

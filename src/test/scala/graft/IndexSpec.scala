@@ -6,7 +6,9 @@ import graft.gen.TranscriptGen
 import graft.index.{IndexBuilder, SegmentIO}
 
 /** Index-layer invariants (SURVEY §5.2/5.5/5.6): per-turn text
-  * equality, checkpoint resume, salted-build identity.
+  * equality, checkpoint resume, hot terms split by shard, and append,
+  * recovery and compaction content- and manifest-identical to a full
+  * build.
   */
 class IndexSpec extends SparkSpec {
 
@@ -19,14 +21,21 @@ class IndexSpec extends SparkSpec {
         b.sum_tf)
     }.toSet
 
-  private def build(salts: Int): String = {
-    val dir = tempDir(s"graft-idx-s$salts")
+  /** The stage manifests' bytes: row counts, per-shard rows and
+    * lineage checksums.
+    */
+  private def manifests(dir: String): Map[String, String] =
+    Seq("docs", "stats", "postings", "dictionary", "norms").map { s =>
+      s -> new String(java.nio.file.Files.readAllBytes(SegmentIO.manifestPath(dir, s)),
+        java.nio.charset.StandardCharsets.UTF_8)
+    }.toMap
+
+  lazy val baseDir: String = {
+    val dir = tempDir("graft-idx-base")
     IndexBuilder.build(spark, TranscriptGen.corpus(spark, NumConvs), dir,
-      IndexBuilder.Config(blockSize = 8, numShards = 4, numPartitions = 8, salts = salts))
+      IndexBuilder.Config(blockSize = 8, numShards = 4, numPartitions = 8))
     dir
   }
-
-  lazy val baseDir: String = build(salts = 1)
 
   test("row-level invariant: per-turn text equality under stable ordering") {
     // reconstruct (conv_id, turn_idx, text) from the docs table and
@@ -48,11 +57,20 @@ class IndexSpec extends SparkSpec {
     assert(keys.toSeq == keys.sortBy(identity).toSeq)
   }
 
-  test("salted build is content-identical to direct build") {
-    val saltedDir = build(salts = 4)
-    assert(postingsContent(baseDir) == postingsContent(saltedDir),
-      "salted sub-posting merge must be block-identical to the direct path")
-    assert(SegmentIO.readStats(baseDir).numDocs == SegmentIO.readStats(saltedDir).numDocs)
+  test("hot terms split by shard") {
+    // the (shard, term) shuffle key is the skew handling: the hottest
+    // term gets one posting group per shard, and no group outgrows its
+    // shard's doc range
+    val stats = SegmentIO.readStats(baseDir)
+    val hot = SegmentIO.readDict(spark, baseDir).collect().maxBy(_.df)
+    val groups = SegmentIO.readPostings(spark, baseDir).collect()
+      .groupBy(b => (b.shard, b.term)).map { case (k, bs) => k -> bs.map(_.n.toLong).sum }
+    assert(hot.df > stats.docsPerShard, "the hottest term must overflow one shard's range")
+    assert(groups.keySet.filter(_._2 == hot.term).map(_._1) ==
+      (0 until stats.numShards).toSet, s"'${hot.term}' must have a group in every shard")
+    groups.foreach { case (k, n) =>
+      assert(n <= stats.docsPerShard, s"group $k holds $n > docsPerShard postings")
+    }
   }
 
   test("v6 dense-routing sentinel: empty ⟺ ≥ fraction of shards, exact list otherwise") {
@@ -107,6 +125,14 @@ class IndexSpec extends SparkSpec {
     val s2 = IndexBuilder.build(spark, TranscriptGen.corpus(spark, NumConvs), baseDir,
       IndexBuilder.Config(blockSize = 8, numShards = 4, numPartitions = 8))
     assert(s1 == s2)
+    // each table manifest counts the table's rows once
+    val m = manifests(baseDir)
+    Seq("docs" -> SegmentIO.readDocs(spark, baseDir).count(),
+        "postings" -> SegmentIO.readPostings(spark, baseDir).count(),
+        "dictionary" -> SegmentIO.readDict(spark, baseDir).count(),
+        "norms" -> SegmentIO.readNorms(spark, baseDir).count()).foreach { case (t, n) =>
+      assert(m(t).contains(s"\"output_rows\":$n,"), s"$t manifest: ${m(t)} vs $n rows")
+    }
   }
 
   test("parallelism invariance: docs and postings identical at 2 vs 8 partitions") {
@@ -147,6 +173,8 @@ class IndexSpec extends SparkSpec {
     def docsOf(d: String) = SegmentIO.readDocs(spark, d).collect()
       .map(r => (r.doc_id, r.conv_id, r.turn_idx, r.dl, r.shard)).toSet
     assert(docsOf(incrDir) == docsOf(fullDir))
+    assert(manifests(incrDir) == manifests(fullDir),
+      "append manifests must equal the full build's")
     // re-delivering already-indexed turns is a no-op (anti-join)
     assert(IndexBuilder.appendBuild(spark, b.as[graft.model.Turn], incrDir,
       numPartitions = 8) == st)
@@ -163,6 +191,8 @@ class IndexSpec extends SparkSpec {
     assert(postingsContent(incrDir) == postingsContent(fullDir2),
       "out-of-order compaction must equal a from-scratch build")
     assert(docsOf(incrDir) == docsOf(fullDir2))
+    assert(manifests(incrDir) == manifests(fullDir2),
+      "compaction manifests must equal a from-scratch build's")
   }
 
   test("torn append is detected and rolled back (marker recovery)") {
@@ -198,6 +228,16 @@ class IndexSpec extends SparkSpec {
       .map(r => (r.doc_id, r.conv_id, r.turn_idx, r.dl, r.shard)).toSet
     assert(docsOf2(dir) == docsOf2(fullDir))
     assert(!SegmentIO.appendInProgress(dir))
+    assert(manifests(dir) == manifests(fullDir),
+      "post-recovery append manifests must equal the full build's")
+    // crash after the stats commit, before the marker clear: recovery
+    // recomputes every manifest itself and the re-delivery is a no-op
+    SegmentIO.writeAppendMarker(dir)
+    assert(IndexBuilder.appendBuild(spark, b.as[graft.model.Turn], dir,
+      numPartitions = 8) == st)
+    assert(manifests(dir) == manifests(fullDir),
+      "recovered manifests must equal the full build's")
+    assert(postingsContent(dir) == postingsContent(fullDir))
   }
 
   test("chained appends: build + append + append is content-identical to one full build") {

@@ -17,7 +17,7 @@ import graft.model.{MatchStats, QuerySpec, SearchHit}
 import graft.ops.Corpus
 import graft.query.{Rerank, ShardSearch}
 import graft.tokenize.Tokenizer
-import graft.tools.SearchCli
+import graft.tools.{IndexBuildJob, SearchCli}
 
 /** The one-job search path against the DataFrame pipeline it replaced.
   * `SearchEngine.search` fetches its hits' doc-store rows with direct
@@ -341,6 +341,18 @@ class SearchPathSpec extends SparkSpec {
         Array("idx", "foo", "--role"), Array[String]())) {
       val e = intercept[IllegalArgumentException](SearchCli.parse(bad))
       assert(e.getMessage.contains(SearchCli.Usage), bad.mkString(" "))
+    }
+  }
+
+  test("IndexBuildJob.parse: defaults and overrides; a wrong argument count or a bad number fails with usage") {
+    assert(IndexBuildJob.parse(Array("gen:10", "idx")) == ("gen:10", "idx", 32, 128))
+    assert(IndexBuildJob.parse(Array("t.parquet", "idx", "16", "64")) ==
+      ("t.parquet", "idx", 16, 64))
+    for (bad <- Seq(Array("gen:10"), Array("gen:10", "idx", "abc"),
+        Array("gen:10", "idx", "16", "x"), Array("gen:10", "idx", "16", "64", "4"),
+        Array("gen:10", "idx", "0"), Array("gen:x", "idx"))) {
+      val e = intercept[IllegalArgumentException](IndexBuildJob.parse(bad))
+      assert(e.getMessage.contains(IndexBuildJob.Usage), bad.mkString(" "))
     }
   }
 
