@@ -30,13 +30,15 @@ import graft.tokenize.Tokenizer
   *   (`:324-339`).
   *
   * A search runs ONE Spark job: the routed fan-out, a pre-planned
-  * `runJob` with one task per routed shard, each running the
-  * [[graft.query.ShardSearch]] kernel that [[graft.query.LocalIndex]]
-  * runs too; the driver merges the per-shard top-k lists (see
-  * `topHits`). Everything around it is bounded (at most MaxTopK
-  * candidates), so, as in the reference, it runs in process: the
-  * dictionary and doc-store lookups are direct parquet reads
-  * ([[SegmentIO.readDictTerms]], [[SegmentIO.readShardDocs]]), and
+  * `runJob` of at most `defaultParallelism` tasks that visit exactly
+  * the routed shards, each running the [[graft.query.ShardSearch]]
+  * kernel that [[graft.query.LocalIndex]] runs too over its executor's
+  * generation-keyed resident copy of the shard; the driver merges the
+  * per-shard top-k lists (see [[fanOut]]). Everything around it is
+  * bounded (at most MaxTopK candidates), so, as in the reference, it
+  * runs in process: the dictionary and doc-store lookups are direct
+  * parquet reads ([[SegmentIO.readDictTerms]],
+  * [[SegmentIO.readShardDocs]]), and
   * filters, rerank, rounding and boost are plain Scala with the
   * semantics of the equivalent Spark column expressions (null fields,
   * `lower`, `round`, `pow`, sort order) — a planned query per search
@@ -56,8 +58,8 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * shard list)) / None for a confirmed zero-df term — the analog of
     * the reference's resident in-RAM index
     * (`src/search_engine.py:48-70`). Only terms actually queried are
-    * cached (bounded: whole-cache eviction like SegmentIO's dl
-    * cache), so repeat queries skip the dictionary read entirely.
+    * cached (bounded: whole-cache eviction like SegmentIO's resident
+    * shards), so repeat queries skip the dictionary read entirely.
     *
     * Freshness: idf derives from the `stats` snapshot, and BOTH are
     * keyed to the segment's mutation generation (bumped by every
@@ -65,8 +67,8 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * `SegmentIO.invalidateDlCache`). A query after an append sees the
     * new stats, new dictionary entries, and the new shard routing
     * lists; without this an appended shard would be invisible to a
-    * live engine forever (the executor dl cache already invalidated,
-    * the driver caches did not).
+    * live engine forever. The fan-out ships the same generation to the
+    * executors' resident-shard cache ([[SegmentIO.residentShard]]).
     */
   private val dictCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[(Double, Double, Seq[Int])]]
@@ -122,31 +124,6 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     (snap ++ fetched).collect { case (t, Some(v)) => t -> v }
   }
 
-  /** Routing from the dictionary's per-term shard lists (v6): OR
-    * queries visit the union of their terms' shards, AND queries only
-    * the intersection (a conjunctive match lives in one doc, hence one
-    * shard holding every term) — a rare-term query on a 10⁴-shard
-    * corpus schedules a handful of tasks, not 10⁴. An EMPTY list is
-    * the dense-term sentinel ("all shards",
-    * IndexBuilder.DenseRoutingFraction): it expands to the full shard
-    * range — a superset of the true set, so union and intersection
-    * routing both stay sound (an extra shard just yields no cursors
-    * for that term). `present` is never empty: [[plan]] stops first.
-    */
-  private def routeFor(
-      present: Array[String],
-      termMeta: Map[String, (Double, Double, Seq[Int])],
-      conjunctive: Boolean): Array[Int] = {
-    val allShards: Seq[Int] = 0 until stats.numShards
-    def routeOf(t: String): Seq[Int] = {
-      val s = termMeta(t)._3
-      if (s.isEmpty) allShards else s
-    }
-    if (conjunctive)
-      present.map(t => routeOf(t).toSet).reduce(_ intersect _).toArray.sorted
-    else present.flatMap(routeOf).distinct.sorted
-  }
-
   /** The shard-level query and the shards it routes to, or None when
     * no shard can match (no indexable term, no term in the dictionary,
     * or an AND query with a zero-df term).
@@ -160,13 +137,14 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     if (qTerms.isEmpty) return None
     val termMeta = termMetaFor(qTerms)
     ShardSearch.query(qTerms, termMeta.get(_).map(m => (m._1, m._2)), stats, k, minScore,
-      conjunctive).map(q => q -> routeFor(q.terms.map(_.term), termMeta, conjunctive))
+      conjunctive).map(q => q -> ShardSearch.route(q, stats.numShards)(termMeta(_)._3))
   }
 
-  /** The shard set a query would fan out to — one task per element in
-    * [[retrieve]]. Exposed for routing probes (RouteProbe evidences
-    * rare-vs-dense fan-out at high shard counts with exactly the
-    * serving path's routing).
+  /** The shard set a query fans out to: exactly the shards
+    * [[retrieve]]'s tasks visit, packed into at most
+    * `defaultParallelism` tasks ([[fanOut]]). Exposed for routing
+    * probes (RouteProbe evidences rare-vs-dense fan-out at high shard
+    * counts with exactly the serving path's routing).
     */
   def routedShards(queryText: String, conjunctive: Boolean = false): Array[Int] =
     plan(queryText, 0, 0.0, conjunctive).fold(Array.empty[Int])(_._2)
@@ -193,37 +171,51 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     */
   def round4(x: Double): Double = SearchEngine.roundHalfUp(x, 4)
 
-  /** BM25 top-k as (doc_id, exact score): the search's one Spark job.
-    *
-    * Shard fan-out with NO scan stage and NO shuffle: one task per
-    * ROUTED shard, each opening only its own postings/shard=N (parquet
-    * page skip on the query terms) and norms/shard=N dirs — the Lucene
-    * shard-replica serving model — and running [[ShardSearch.topK]]
-    * over them. Each task returns its shard's top-k, and the driver
-    * merges them ([[ShardSearch.merge]]). The closure captures locals
-    * only (never `this`) and ships just the [[ShardSearch.Query]]: the
-    * present terms' (idf, bound), not their routing lists.
-    *
-    * The job is a pre-planned `runJob` over an RDD with one partition
-    * per routed shard, not a Dataset: planning, optimizing and
-    * code-generating a Dataset per query cost more than the tasks' own
-    * work (~3 ms of postings read and WAND each), and a Dataset form
-    * without the sort and limit (`spark.range.flatMap` plus a driver
-    * merge) measured no faster — the planning cost lives in the
-    * Dataset itself.
+  /** BM25 top-k as (doc_id, exact score): the merge
+    * ([[ShardSearch.merge]]) of the search's one Spark job, [[fanOut]].
     */
   private def topHits(
-      queryText: String, k: Int, minScore: Double, conjunctive: Boolean): Array[(Long, Double)] =
-    plan(queryText, math.min(k, MaxTopK), minScore, conjunctive) match {
+      queryText: String, k: Int, minScore: Double, conjunctive: Boolean): Array[(Long, Double)] = {
+    val kk = math.min(k, MaxTopK)
+    ShardSearch.merge(fanOut(queryText, kk, minScore, conjunctive).map(_._2), kk)
+  }
+
+  /** The search's one Spark job: each routed shard's top-k, as
+    * `(shard, hits)` for every visited shard (hits may be empty), in
+    * no particular order.
+    *
+    * Shard fan-out with NO scan stage and NO shuffle: the routed shards
+    * are packed into `P = min(routed, defaultParallelism)` tasks, and a
+    * task runs [[ShardSearch.topK]] for each shard it holds over its
+    * executor's resident copy of that shard
+    * ([[SegmentIO.residentShard]], filled on first use from the shard's
+    * own postings/shard=N and norms/shard=N dirs) — the Lucene
+    * shard-replica serving model. A warm task runs WAND only. The
+    * resident copy is keyed by the generation this query was planned
+    * under, so no task serves a shard as it was before a mutation the
+    * plan has seen. The closure captures locals only (never `this`)
+    * and ships just the [[ShardSearch.Query]]: the present terms'
+    * (idf, bound), not their routing lists.
+    *
+    * The job is a pre-planned `runJob` over an RDD, not a Dataset:
+    * planning, optimizing and code-generating a Dataset per query cost
+    * more than the tasks' own work, and a Dataset form without the sort
+    * and limit (`spark.range.flatMap` plus a driver merge) measured no
+    * faster — the planning cost lives in the Dataset itself. Tasks are
+    * capped at the core count because scheduling a task costs more than
+    * a warm shard's WAND.
+    */
+  private[graft] def fanOut(queryText: String, k: Int, minScore: Double,
+      conjunctive: Boolean): Array[(Int, Array[(Long, Double)])] =
+    plan(queryText, k, minScore, conjunctive) match {
       case Some((q, routed)) if routed.nonEmpty =>
-        val dir = indexDir
+        val (dir, g) = (indexDir, gen) // the generation `plan` ran under
         val sc = spark.sparkContext
-        val perShard = sc.runJob(sc.parallelize(routed.toSeq, routed.length),
-          (shards: Iterator[Int]) => shards.flatMap { shard =>
-            val blocks = SegmentIO.readShardPostings(dir, shard, q.terms.map(_.term))
-            ShardSearch.topK(q, shard, blocks.groupBy(_.term).get, SegmentIO.shardDlPages(dir, shard))
-          }.toArray)
-        ShardSearch.merge(perShard, q.k)
+        sc.runJob(sc.parallelize(routed.toSeq, math.min(routed.length, sc.defaultParallelism)),
+          (shards: Iterator[Int]) => shards.map { shard =>
+            val s = SegmentIO.residentShard(dir, g, shard)
+            shard -> ShardSearch.topK(q, shard, s.postings.get, s.dlPages)
+          }.toArray).flatten
       case _ => Array.empty
     }
 

@@ -447,7 +447,7 @@ object IndexBuilder {
     }
 
     writeSnapshot(dir, Seq("docs", "stats", "dictionary", "postings", "norms"))
-    SegmentIO.invalidateDlCache(dir) // a rebuilt path must not serve stale pages
+    SegmentIO.invalidateDlCache(dir) // a rebuilt path must not serve stale shards
     stats
   }
 
@@ -795,7 +795,7 @@ object IndexBuilder {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursively(p: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
     // NOFOLLOW: a symlink to a directory is deleted as a link, never
     // descended into; the listing stream is closed eagerly (Files.list

@@ -322,19 +322,18 @@ object SegmentIO {
   }
 
   /** `term` equals one of `terms` — the pushdown predicate of the
-    * term-sorted dictionary and (term, block_id)-sorted postings files.
+    * term-sorted dictionary files.
     */
   private def termIn(terms: Iterable[String]): FilterPredicate =
     terms.map(t => FilterApi.eq(FilterApi.binaryColumn("term"), Binary.fromString(t)): FilterPredicate)
       .reduce(FilterApi.or)
 
   /** Direct read of ONE shard's norms pages straight from its
-    * `norms/shard=N` partition directory. This is the query path's
-    * norms access: each shard's WAND task opens only its own shard dir
-    * (the partitionBy(shard) layout IS the pruning), so a query never
-    * shuffles or scans the corpus-wide norms relation. Runs on
-    * executors; the segment directory must be executor-visible (it is
-    * by construction — the index was written by Spark to shared
+    * `norms/shard=N` partition directory: each shard's load opens only
+    * its own shard dir (the partitionBy(shard) layout IS the pruning),
+    * so a query never shuffles or scans the corpus-wide norms relation.
+    * Runs on executors; the segment directory must be executor-visible
+    * (it is by construction — the index was written by Spark to shared
     * storage).
     */
   def readShardNorms(dir: String, shard: Int): Array[NormsRow] =
@@ -343,33 +342,105 @@ object SegmentIO {
         g.getLong("first_doc", 0), g.getBinary("dl_bytes", 0).getBytes)
     }
 
-  /** Executor-local decoded dl-page cache, keyed (indexDir, shard):
-    * the serving analog of a Lucene node keeping its shard's norms
-    * resident across queries. Decoded pages cost 4 bytes/doc, so an
-    * executor caching S shards of d docs holds 4·S·d bytes (e.g. 256
-    * shards × 1M docs = 1 GB) — bounded by the crude whole-cache
-    * eviction below, and in a real deployment by shard-to-executor
-    * affinity (each executor only ever serves its shard subset).
+  /** One shard's norms rows as page-indexed decoded dl arrays (the
+    * two-level lookup [[graft.query.ShardSearch.topK]] runs); empty
+    * when the shard has no rows.
     */
-  private val dlCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Int]]]()
-  private val MaxCachedShards = 4096
+  def decodeDlPages(rows: Array[NormsRow]): Array[Array[Int]] = {
+    val arrs = new Array[Array[Int]](if (rows.isEmpty) 0 else rows.map(_.page).max + 1)
+    rows.foreach(p => arrs(p.page) = Varbyte.decodeInts(p.dl_bytes, p.n))
+    arrs
+  }
 
-  /** Drop cached pages for a segment whose norms were rewritten in
-    * place (append/compaction) — called by the builder. Complete in
-    * local[*] mode where executors share the driver JVM (all tests /
-    * bench / driver runs); a multi-JVM cluster deployment serves
-    * immutable snapshot dirs instead of mutating a live segment, so
-    * rewrites there arrive as new paths.
+  /** One shard's query-side working set, as a WAND task needs it: the
+    * decoded dl pages and every posting block of the shard, per term in
+    * block_id order, still compressed. `bytes` is what it holds: the
+    * blocks' doc/tf bytes plus 4 per decoded dl.
     */
-  private[graft] def invalidateDlCache(dir: String): Unit = {
-    dlCache.keySet.removeIf(_.startsWith(s"$dir#"))
-    // every in-place mutation path (append, torn-append recovery,
-    // compaction, rebuild) funnels through this call, so it doubles as
-    // the segment's change signal: driver-side caches (SearchEngine's
-    // dictionary/stats snapshot) re-validate against the generation
+  final case class ResidentShard(
+      dlPages: Array[Array[Int]],
+      postings: Map[String, Array[PostingBlock]]) {
+    val bytes: Long = dlPages.iterator.map(4L * _.length).sum +
+      postings.valuesIterator.flatten.map(b => (b.doc_bytes.length + b.tf_bytes.length).toLong).sum
+  }
+
+  /** Executor-resident shards, keyed (dir, generation, shard): the
+    * serving analog of a Lucene node keeping its shards open across
+    * queries, and of the reference's resident in-RAM index
+    * (`src/search_engine.py:48-70`). A warm search task runs WAND only.
+    *
+    * The generation in the key is the one the driver planned the query
+    * under, so an entry filled before a mutation is never served after
+    * it — not even one a racing task filled after [[invalidateDlCache]]
+    * ran: that entry carries the old generation, and a fill whose
+    * generation is already superseded here is not kept at all (the
+    * dictionary cache's stale-reinsert rule).
+    *
+    * Bounded by bytes ([[ResidentShard.bytes]]) at 1/8 of the JVM's max
+    * heap; a fill that would pass the cap clears the whole cache first.
+    * `residentBytes` and every insert or removal are guarded by the
+    * map's monitor; lookups take no lock.
+    */
+  private val resident =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), ResidentShard]()
+  private var residentBytes = 0L
+  private val MaxResidentBytes = Runtime.getRuntime.maxMemory / 8
+
+  /** Shard `shard` of `dir` as of mutation generation `gen`, loaded on
+    * first use from one unfiltered read of `postings/shard=N` plus the
+    * shard's norms. A shard with no files is empty, and matches nothing.
+    */
+  private[graft] def residentShard(dir: String, gen: Long, shard: Int): ResidentShard = {
+    val key = (dir, gen, shard)
+    val hit = resident.get(key)
+    if (hit != null) hit
+    else {
+      val blocks = readParquetDir(s"${postingsPath(dir)}/shard=$shard", None,
+          new GroupReadSupport()) { (_, g) =>
+        PostingBlock(
+          g.getString("term", 0),
+          g.getInteger("block_id", 0), g.getInteger("n", 0),
+          g.getLong("first_doc", 0), g.getLong("last_doc", 0),
+          g.getBinary("doc_bytes", 0).getBytes,
+          g.getBinary("tf_bytes", 0).getBytes,
+          g.getInteger("block_max_tf", 0), g.getInteger("block_min_dl", 0),
+          g.getLong("sum_tf", 0), shard)
+      }
+      val loaded = ResidentShard(decodeDlPages(readShardNorms(dir, shard)),
+        blocks.groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.block_id) })
+      resident.synchronized {
+        if (gen >= generation(dir) && !resident.containsKey(key)) {
+          if (residentBytes + loaded.bytes > MaxResidentBytes) {
+            resident.clear()
+            residentBytes = 0L
+          }
+          resident.put(key, loaded)
+          residentBytes += loaded.bytes
+        }
+      }
+      loaded
+    }
+  }
+
+  /** Drop the resident shards of a segment rewritten in place
+    * (append, torn-append recovery, compaction, rebuild) and bump its
+    * generation — called by the builder. Complete in local[*] mode
+    * where executors share the driver JVM (all tests / bench / driver
+    * runs); a multi-JVM cluster deployment serves immutable snapshot
+    * dirs instead of mutating a live segment, so rewrites there arrive
+    * as new paths.
+    */
+  private[graft] def invalidateDlCache(dir: String): Unit = resident.synchronized {
+    // the generation doubles as the segment's change signal: driver-side
+    // caches (SearchEngine's dictionary/stats snapshot) re-validate
+    // against it
     dirGeneration.merge(dir, java.lang.Long.valueOf(1L),
       (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
+    resident.entrySet.removeIf { e =>
+      val drop = e.getKey._1 == dir
+      if (drop) residentBytes -= e.getValue.bytes
+      drop
+    }
   }
 
   /** Monotonic per-dir mutation counter, bumped by
@@ -380,55 +451,29 @@ object SegmentIO {
   private[graft] def generation(dir: String): Long =
     Option(dirGeneration.get(dir)).map(_.longValue).getOrElse(0L)
 
-  /** Shared read-only Hadoop conf for the task-side direct parquet
-    * reads: `new Configuration()` re-parses the XML default resources
-    * on every call — a real per-call cost on the per-query serving
-    * path (one readShardPostings per routed shard per query).
+  /** Shared read-only Hadoop conf for the direct parquet reads:
+    * `new Configuration()` re-parses the XML default resources on every
+    * call — a real per-call cost on the serving path (dictionary
+    * misses, doc-store fetches, resident-shard loads).
     */
   private[graft] lazy val sharedHadoopConf =
     new org.apache.hadoop.conf.Configuration()
 
-  private[graft] def shardDlPages(dir: String, shard: Int): Array[Array[Int]] = {
-    if (dlCache.size > MaxCachedShards) dlCache.clear()
-    dlCache.computeIfAbsent(s"$dir#$shard", _ => {
-      val pages = readShardNorms(dir, shard)
-      if (pages.isEmpty) Array.empty
-      else {
-        val arrs = new Array[Array[Int]](pages.map(_.page).max + 1)
-        pages.foreach(p => arrs(p.page) = Varbyte.decodeInts(p.dl_bytes, p.n))
-        arrs
-      }
-    })
+  /** ONE shard's postings for a fixed term set, answered from the
+    * resident shard ([[residentShard]], at the segment's current
+    * generation): each present term's blocks in block_id order.
+    */
+  def readShardPostings(dir: String, shard: Int, terms: Array[String]): Array[PostingBlock] = {
+    val s = residentShard(dir, generation(dir), shard)
+    terms.flatMap(t => s.postings.getOrElse(t, Array.empty[PostingBlock]))
   }
 
-  /** Direct read of ONE shard's postings for a fixed term set,
-    * straight from its `postings/shard=N` partition dir — the postings
-    * analog of [[readShardNorms]]. The term predicate skips
-    * non-matching row groups AND pages (files are (term,
-    * block_id)-sorted, so a query's terms cluster in a handful of
-    * pages). This is what lets a query schedule ONE task per shard
-    * with no corpus-wide scan stage and no shuffle: each task opens
-    * only its own shard dir, reads only its query-term pages.
-    */
-  def readShardPostings(dir: String, shard: Int, terms: Array[String]): Array[PostingBlock] =
-    if (terms.isEmpty) Array.empty
-    else readParquetDir(s"${postingsPath(dir)}/shard=$shard", Some(termIn(terms)),
-        new GroupReadSupport()) { (_, g) =>
-      PostingBlock(
-        g.getString("term", 0),
-        g.getInteger("block_id", 0), g.getInteger("n", 0),
-        g.getLong("first_doc", 0), g.getLong("last_doc", 0),
-        g.getBinary("doc_bytes", 0).getBytes,
-        g.getBinary("tf_bytes", 0).getBytes,
-        g.getInteger("block_max_tf", 0), g.getInteger("block_min_dl", 0),
-        g.getLong("sum_tf", 0), shard)
-    }
-
   /** Direct read of the dictionary rows of a term set — the serving
-    * path's dictionary-miss lookup. Same term predicate as
-    * [[readShardPostings]] over the term-sorted `dictionary/` files, so
-    * a lookup reads a few pages on the driver instead of running a
-    * Spark job. Terms without a row are absent from the result.
+    * path's dictionary-miss lookup. A term predicate over the
+    * term-sorted `dictionary/` files skips non-matching row groups and
+    * pages, so a lookup reads a few pages on the driver instead of
+    * running a Spark job. Terms without a row are absent from the
+    * result.
     */
   def readDictTerms(dir: String, terms: Iterable[String]): Array[DictEntry] =
     if (terms.isEmpty) Array.empty
@@ -441,10 +486,10 @@ object SegmentIO {
     }
 
   /** Direct read of ONE shard's doc-store rows for a doc-id set,
-    * straight from its `docs/shard=N` dir — the docs analog of
-    * [[readShardPostings]]. Docs files are doc_id-sorted, so the
-    * doc_id-set predicate skips whole pages; `text` is read only when
-    * `withText` (it is most of a row's bytes), else it comes back null.
+    * straight from its `docs/shard=N` dir. Docs files are
+    * doc_id-sorted, so the doc_id-set predicate skips whole pages;
+    * `text` is read only when `withText` (it is most of a row's bytes),
+    * else it comes back null.
     * Values equal what [[readDocs]] collects, `ts` included: it is
     * decoded by the file's physical type, as Spark's parquet reader
     * does it (see [[DocsReadSupport]]).

@@ -4,7 +4,7 @@ import scala.collection.parallel.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
-import graft.index.{SegmentIO, Varbyte}
+import graft.index.SegmentIO
 import graft.index.SegmentIO.{DictEntry, PostingBlock}
 import graft.tokenize.Tokenizer
 
@@ -14,8 +14,9 @@ import graft.tokenize.Tokenizer
   *
   * On a cluster each serving node holds its shard subset in RAM
   * (Lucene/ES model); in this sandbox one JVM holds all shards. Each
-  * shard is searched by the same [[ShardSearch]] kernel the
-  * distributed path's fan-out tasks run
+  * query visits the shards [[ShardSearch.route]] picks from the
+  * dictionary's shard lists, each searched by the same [[ShardSearch]]
+  * kernel the distributed path's fan-out tasks run
   * ([[graft.api.SearchEngine.retrieve]]), here fed the resident blocks
   * and dl pages, and the per-shard lists go through the same
   * [[ShardSearch.merge]]; this class is tested rank-identical to the
@@ -37,11 +38,7 @@ class LocalIndex(spark: SparkSession, dir: String) {
   val norms: Map[Int, Array[Array[Int]]] =
     SegmentIO.readNorms(spark, dir).collect()
       .groupBy(_.shard)
-      .map { case (s, rows) =>
-        val arrs = new Array[Array[Int]](rows.map(_.page).max + 1)
-        rows.foreach(p => arrs(p.page) = Varbyte.decodeInts(p.dl_bytes, p.n))
-        s -> arrs
-      }
+      .map { case (s, rows) => s -> SegmentIO.decodeDlPages(rows) }
 
   /** term -> shard -> blocks (block_id-sorted), compressed at rest */
   val postings: Map[String, Map[Int, Array[PostingBlock]]] =
@@ -51,10 +48,9 @@ class LocalIndex(spark: SparkSession, dir: String) {
         t -> bs.groupBy(_.shard).map { case (s, b) => s -> b.sortBy(_.block_id) }
       }
 
-  private val shardIds: Array[Int] = norms.keys.toArray.sorted
-
   /** BM25 top-k, identical semantics to the distributed retrieve: the
-    * same [[ShardSearch]] kernel over every shard, the same merge.
+    * same routing, the same [[ShardSearch]] kernel per routed shard,
+    * the same merge.
     */
   def retrieve(
       queryText: String,
@@ -67,8 +63,10 @@ class LocalIndex(spark: SparkSession, dir: String) {
         // shards traverse in parallel (the in-JVM analog of per-executor
         // shard fan-out); per-shard results are deterministic, and the
         // merge re-sorts, so parallelism cannot affect output
-        ShardSearch.merge(shardIds.par.map { shard =>
-          ShardSearch.topK(q, shard, postings(_).get(shard), norms(shard))
+        val routed = ShardSearch.route(q, stats.numShards)(dict(_).shards)
+        ShardSearch.merge(routed.par.map { shard =>
+          ShardSearch.topK(q, shard, postings(_).get(shard),
+            norms.getOrElse(shard, Array.empty[Array[Int]]))
         }.seq, k)
       }
 }

@@ -2,12 +2,13 @@ package graft.query
 
 import graft.index.SegmentIO.{DictEntry, IndexStats, PostingBlock}
 
-/** The shard-search kernel: BM25 top-k of one query over one shard's
-  * posting blocks and dl pages, and the merge of per-shard top-k lists
-  * into the global one. Both serving paths run it — [[LocalIndex]] over
-  * its resident blocks, [[graft.api.SearchEngine]]'s fan-out tasks over
-  * the blocks each task reads from its own shard directory — so the two
-  * rank identically by construction. Plays the part of the reference's
+/** The shard-search kernel: the shards a query routes to, BM25 top-k
+  * of one query over one shard's posting blocks and dl pages, and the
+  * merge of per-shard top-k lists into the global one. Both serving
+  * paths run it — [[LocalIndex]] over its resident blocks,
+  * [[graft.api.SearchEngine]]'s fan-out tasks over their executor's
+  * resident shards — so the two route and rank identically by
+  * construction. Plays the part of the reference's
   * bounded top-k search (`src/vector_index.py:115-147`).
   */
 object ShardSearch {
@@ -53,6 +54,27 @@ object ShardSearch {
     if (present.isEmpty || (conjunctive && present.length < qTerms.length)) None
     else Some(Query(present, stats.avgdl, stats.docsPerShard, stats.normsPageSize, k,
       minScore, conjunctive))
+  }
+
+  /** The shards `q` must visit, ascending, from the dictionary's
+    * per-term shard lists (`shardsOf`): OR queries visit the union of
+    * their terms' shards, AND queries only the intersection (a
+    * conjunctive match lives in one doc, hence one shard holding every
+    * term) — a rare-term query on a 10⁴-shard corpus visits a handful
+    * of shards, not 10⁴. An EMPTY list is the dense-term sentinel ("all
+    * shards", IndexBuilder.DenseRoutingFraction): it expands to the full
+    * range `0 until numShards` — a superset of the true set, so union
+    * and intersection routing both stay sound (an extra shard just
+    * yields no cursors for that term).
+    */
+  def route(q: Query, numShards: Int)(shardsOf: String => Seq[Int]): Array[Int] = {
+    val allShards: Seq[Int] = 0 until numShards
+    val routes = q.terms.map { t =>
+      val s = shardsOf(t.term)
+      if (s.isEmpty) allShards else s
+    }
+    if (q.conjunctive) routes.map(_.toSet).reduce(_ intersect _).toArray.sorted
+    else routes.flatten.distinct.sorted
   }
 
   /** Top-k of `q` over one shard, (score desc, doc_id asc).

@@ -27,9 +27,10 @@ import graft.ops.{Hashing, Pack, Similarity}
   *  - the persisted-IVF probe path (q_ann_ivf / q_hybrid_ivf's
   *    semantic side) plans a `cid IN (...)` PartitionFilter into its
   *    ONE lists scan — no corpus-sized read, probe lists broadcast;
-  *  - BM25 retrieval (q_bm25_*) schedules EXACTLY one task per
-  *    dictionary-routed shard (listener-counted), for rare-AND,
-  *    rare-OR, and dense-term queries;
+  *  - BM25 retrieval (q_bm25_*) schedules EXACTLY min(routed,
+  *    defaultParallelism) tasks (listener-counted), and the shards
+  *    those tasks report visiting are exactly the dictionary-routed
+  *    ones, for rare-AND, rare-OR, and dense-term queries;
   *  - AsofJoin plans JOIN-FREE (union-scan + window — zero Join
   *    nodes; a Join means the pair-exploding formulation returned);
   *  - RangeJoin.pointInInterval plans as an equi-join on
@@ -107,7 +108,8 @@ object PipelinePlanProbe {
     assert(ibcast, "probe lists must join by broadcast")
     assert(pruned.count() > 0)
 
-    // ---- BM25 retrieval: tasks scheduled == dictionary-routed shards
+    // ---- BM25 retrieval: min(routed, P) tasks visit exactly the
+    // dictionary-routed shards
     val idxDir = "/dev/shm/graft-planprobe-idx"
     rmrf(new java.io.File(idxDir))
     IndexBuilder.build(spark, TranscriptGen.corpus(spark, 2000L), idxDir,
@@ -137,16 +139,22 @@ object PipelinePlanProbe {
       ("rare-AND", "needle5alpha needle5beta", true),
       ("rare-OR", "needle3alpha needle11beta", false),
       ("dense-OR", "t00000 t00001", false)).foreach { case (label, q, conj) =>
-      val routed = eng.routedShards(q, conj).length
+      val routed = eng.routedShards(q, conj)
+      val p = spark.sparkContext.defaultParallelism
       eng.retrieve(q, 10, conjunctive = conj).collect() // warm dict cache
       settled()
       taskCount.set(0)
       val hits = eng.retrieve(q, 10, conjunctive = conj).collect().length
       val tasks = settled()
-      println(s"[bm25-route] $label routed=$routed tasks=$tasks hits=$hits")
-      assert(tasks == routed.toLong,
-        s"$label: retrieve must schedule exactly one task per routed shard " +
-          s"(routed=$routed, tasks=$tasks) — routing regressed")
+      val visited = eng.fanOut(q, 10, 0.0, conj).map(_._1).sorted
+      println(s"[bm25-route] $label routed=${routed.length} tasks=$tasks " +
+        s"visited=${visited.length} hits=$hits")
+      assert(tasks == math.min(routed.length, p).toLong,
+        s"$label: retrieve must pack its routed shards into min(routed, $p) tasks " +
+          s"(routed=${routed.length}, tasks=$tasks)")
+      assert(visited.toSeq == routed.toSeq,
+        s"$label: the tasks must visit exactly the routed shards " +
+          s"(routed=${routed.mkString(",")}, visited=${visited.mkString(",")}) — routing regressed")
       assert(hits > 0, s"$label: probe query must hit")
     }
 

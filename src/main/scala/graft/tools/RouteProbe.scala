@@ -15,9 +15,11 @@ import graft.index.{IndexBuilder, SegmentIO}
   * mixed queries in both OR and AND mode:
   *
   *   - the dictionary-routed shard count ([[SearchEngine.routedShards]]
-  *     — exactly the serving path's routing), and
+  *     — exactly the serving path's routing),
   *   - the ACTUAL Spark task count of the retrieve job (listener),
-  *     which must equal it (one task per routed shard, no scan stage),
+  *     min(routed, defaultParallelism) with no scan stage,
+  *   - the shards those tasks report visiting (and whether they are
+  *     exactly the routed ones),
   *   - per-query latency,
   *
   * plus dictionary routing-size stats (sentinel share, max explicit
@@ -79,8 +81,11 @@ object RouteProbe {
       val n = eng.retrieve(q, 10, conjunctive = conj).collect().length
       val ms = (System.nanoTime() - t0) / 1e6
       Thread.sleep(200) // let straggler task-end events drain
+      val tasks = taskCount.get()
+      val visited = eng.fanOut(q, 10, 0.0, conj).map(_._1).sorted
       println(f"[route] $label%-18s routed=${routed.length}%4d " +
-        f"tasks=${taskCount.get()}%4d hits=$n%3d ${ms}%8.1f ms")
+        f"tasks=$tasks%4d visited=${visited.length}%4d " +
+        f"visited==routed=${visited.sameElements(routed)}%-5s hits=$n%3d ${ms}%8.1f ms")
     }
     spark.stop()
   }

@@ -50,6 +50,11 @@ class EngineParitySpec extends SparkSpec {
     // appended shards
     val appended = new SearchEngine(spark, dir)
     appended.retrieve(QuerySet.referenceQueries.head.text, 10).collect()
+    // and warm every shard with a dense query, so the boundary shard
+    // the append re-encodes is resident on the executors when it lands
+    val dense = "t00000 t00001"
+    assert(appended.routedShards(dense).length == appended.stats.numShards)
+    appended.retrieve(dense, 10).collect()
     IndexBuilder.appendBuild(spark,
       all.filter(col("conv_id") >= "c00000200").as[graft.model.Turn], dir,
       numPartitions = 8)

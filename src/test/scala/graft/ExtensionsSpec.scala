@@ -31,10 +31,11 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
   }
 
-  override def afterAll(): Unit = {
-    SparkSession.setDefaultSession(SparkSpec.session)
-    SparkSession.setActiveSession(SparkSpec.session)
-  }
+  override def afterAll(): Unit =
+    try {
+      SparkSession.setDefaultSession(SparkSpec.session)
+      SparkSession.setActiveSession(SparkSpec.session)
+    } finally super.afterAll()
 
   test("cosine_sim is callable from SQL and matches the exact value") {
     val r = ext.sql(

@@ -357,6 +357,13 @@ class SearchPathSpec extends SparkSpec {
   }
 
   test("a search runs one Spark job: the WAND fan-out") {
+    // 16 shards over defaultParallelism (4) cores, so a dense query
+    // packs several shards into each task
+    val dir = tempDir("graft-searchpath-wide")
+    IndexBuilder.build(spark, TranscriptGen.corpus(spark, 150), dir,
+      IndexBuilder.Config(blockSize = 16, numShards = 16, numPartitions = 8))
+    val wide = new SearchEngine(spark, dir)
+    val p = spark.sparkContext.defaultParallelism
     val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val tasksRun = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -372,12 +379,13 @@ class SearchPathSpec extends SparkSpec {
       QuerySpec("needle5alpha needle5beta", conjunctive = true), // rare AND
       QuerySpec("needle3alpha needle11beta"), // rare OR
       QuerySpec("t00000 t00001")) // dense OR
-    val routed = specs.map(s => engine.routedShards(s.text, s.conjunctive).length)
-    val Seq(rareAnd, rareOr, dense) = routed.takeRight(3)
-    assert(rareAnd == 1 && rareOr < engine.stats.numShards && dense == engine.stats.numShards)
+    val routed = specs.map(s => wide.routedShards(s.text, s.conjunctive).toSeq)
+    val Seq(rareAnd, rareOr, dense) = routed.takeRight(3).map(_.length)
+    assert(rareAnd == 1 && rareOr < p && dense == wide.stats.numShards && dense > p)
+    val tasks = routed.map(r => math.min(r.length, p))
     spark.sparkContext.addSparkListener(listener)
     val hits = try {
-      val hits = specs.map(engine.search(_).hits.length)
+      val hits = specs.map(wide.search(_).hits.length)
       // listener events arrive asynchronously: wait for them to settle
       val deadline = System.currentTimeMillis() + 10000
       var last = -1
@@ -388,8 +396,50 @@ class SearchPathSpec extends SparkSpec {
       hits
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(hits.takeRight(3).forall(_ > 0))
-    // events arrive in submission order: job i is search i's fan-out
-    assert(jobTasks.asScala.toSeq == routed)
-    assert(tasksRun.get == routed.sum)
+    // events arrive in submission order: job i is search i's fan-out,
+    // its routed shards packed into min(routed, P) tasks
+    assert(jobTasks.asScala.toSeq == tasks)
+    assert(tasksRun.get == tasks.sum)
+    // the shards the tasks report visiting are exactly the routed
+    // ones, each once
+    for ((s, r) <- specs.zip(routed)) {
+      val visited = wide.fanOut(s.text, 10, 0.0, s.conjunctive).map(_._1)
+      assert(visited.sorted.toSeq == r, s.text)
+    }
+  }
+
+  test("SegmentIO resident shard: filled under generation g, re-read after invalidateDlCache") {
+    val dir = tempDir("graft-resident")
+    IndexBuilder.build(spark, TranscriptGen.corpus(spark, 20), dir,
+      IndexBuilder.Config(blockSize = 16, numShards = 2, numPartitions = 2))
+    val g = SegmentIO.generation(dir)
+    val before = SegmentIO.residentShard(dir, g, 0)
+    assert(SegmentIO.residentShard(dir, g, 0) eq before) // served resident
+    // the resident copy is the shard's postings, block_id-sorted per
+    // term, and its dl pages
+    def content(bs: Iterable[SegmentIO.PostingBlock]) = bs.map(b => (b.term, b.block_id, b.n,
+      b.first_doc, b.last_doc, b.doc_bytes.toSeq, b.tf_bytes.toSeq, b.block_max_tf,
+      b.block_min_dl, b.sum_tf, b.shard)).toSet
+    assert(content(before.postings.values.flatten) ==
+      content(SegmentIO.readPostings(spark, dir).collect().filter(_.shard == 0)))
+    assert(before.postings.values.forall(bs => bs.map(_.block_id).toSeq == bs.map(_.block_id).sorted.toSeq))
+    assert(before.dlPages.flatten.length ==
+      SegmentIO.readDocs(spark, dir).filter(col("shard") === 0).count())
+    val terms = before.postings.keys.take(3).toArray
+    assert(SegmentIO.readShardPostings(dir, 0, terms :+ "nosuchterm").toSeq ==
+      terms.toSeq.flatMap(before.postings(_)))
+    // rewrite shard 0 in place, as an append re-encodes its boundary
+    // shard, then bump the generation as every mutation path does
+    IndexBuilder.deleteRecursively(java.nio.file.Paths.get(SegmentIO.postingsPath(dir), "shard=0"))
+    SegmentIO.invalidateDlCache(dir)
+    val g1 = SegmentIO.generation(dir)
+    assert(g1 == g + 1)
+    val after = SegmentIO.residentShard(dir, g1, 0)
+    assert(after.postings.isEmpty && after.dlPages.nonEmpty) // re-read, not served
+    assert(SegmentIO.residentShard(dir, g1, 0) eq after)
+    // a task planned under g that fills after the bump is not kept
+    val late = SegmentIO.residentShard(dir, g, 0)
+    assert(late.postings.isEmpty && !(late eq before))
+    assert(!(SegmentIO.residentShard(dir, g, 0) eq late))
   }
 }
