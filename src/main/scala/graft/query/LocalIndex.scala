@@ -1,7 +1,5 @@
 package graft.query
 
-import scala.collection.parallel.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 
 import graft.index.SegmentIO
@@ -60,13 +58,15 @@ class LocalIndex(spark: SparkSession, dir: String) {
     ShardSearch.query(Tokenizer.tokenize(queryText).distinct.sorted,
         dict.get(_).map(ShardSearch.weights(_, stats)), stats, k, minScore, conjunctive)
       .fold(Array.empty[(Long, Double)]) { q =>
-        // shards traverse in parallel (the in-JVM analog of per-executor
-        // shard fan-out); per-shard results are deterministic, and the
-        // merge re-sorts, so parallelism cannot affect output
+        // shards run one after another on the calling thread: a shard's
+        // WAND takes tens of µs, so a thread-pool fan-out saves ~0.2 ms
+        // of a sub-ms call but makes it wait for the slowest pool
+        // thread, and under CPU contention that wait swings the call's
+        // latency from run to run
         val routed = ShardSearch.route(q, stats.numShards)(dict(_).shards)
-        ShardSearch.merge(routed.par.map { shard =>
+        ShardSearch.merge(routed.map { shard =>
           ShardSearch.topK(q, shard, postings(_).get(shard),
             norms.getOrElse(shard, Array.empty[Array[Int]]))
-        }.seq, k)
+        }, k)
       }
 }
