@@ -2,7 +2,8 @@ package graft.index
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 import org.apache.spark.sql.functions._
 
 import graft.model.Turn
@@ -157,10 +158,21 @@ object IndexBuilder {
     */
   private def long0(v: Any): Long = if (v == null) 0L else v.asInstanceOf[Long]
 
-  private def timed[T](stage: String)(f: => T): T = {
+  /** Runs `f` as `stage` = `<op>:<name>` (op `build` or `append`):
+    * its Spark jobs carry `stage` as their description, the previous
+    * description is restored afterwards, and the wall time goes to
+    * stderr as `[build] <name>` (`[build] append.<name>` for an
+    * append). The description is a thread-local property, so a stage
+    * run in a Future calls this inside the Future's body.
+    */
+  private def timed[T](spark: SparkSession, stage: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(stage)
     val t0 = System.nanoTime()
-    val r = f
-    System.err.println(f"[build] $stage: ${(System.nanoTime() - t0) / 1e9}%.2fs")
+    val r = try f finally sc.setJobDescription(prev)
+    val label = stage.stripPrefix("build:").replace(':', '.')
+    System.err.println(f"[build] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
     r
   }
 
@@ -173,7 +185,7 @@ object IndexBuilder {
     *         the write job itself (XOR-foldable across group writes)
     */
   private def writePostings(dir: String, blocks: Dataset[PostingBlock]): Long = {
-    val obs = new org.apache.spark.sql.Observation(s"postings-${System.nanoTime()}")
+    val obs = new Observation(s"postings-${System.nanoTime()}")
     blocks.toDF()
       .repartition(col("shard"))
       .sortWithinPartitions("shard", "term", "block_id")
@@ -187,23 +199,20 @@ object IndexBuilder {
 
   /** Paged norms for the given docs slice, written with dynamic
     * partition overwrite (append rebuilds only shards >= boundary).
-    * The norms manifest aggregates ride the write job itself via
-    * Observation — no read-back pass.
+    *
+    * @return (rows, lineage checksum) of the written pages, observed
+    *         during the write job itself — no read-back pass
     */
   private def writeNorms(
       spark: SparkSession,
       dir: String,
       docs: Dataset[(Int, Long, Int)], // (shard, doc_id, dl)
       docsPerShard: Long,
-      pageSize: Int,
-      // Some(n): this write covers the WHOLE norms relation, so the
-      // observed aggregates are the manifest. None (partial append
-      // rewrite): the caller writes the manifest from a full read-back.
-      manifestNumDocs: Option[Long]): Unit = {
+      pageSize: Int): (Long, Long) = {
     import spark.implicits._
     val dps = docsPerShard
     val p = pageSize
-    val obs = new org.apache.spark.sql.Observation(s"norms-${System.nanoTime()}")
+    val obs = new Observation(s"norms-${System.nanoTime()}")
     docs
       .groupByKey { case (s, d, _) => (s, ((d - s.toLong * dps) / p).toInt) }
       .mapGroups { (key: (Int, Int), rows: Iterator[(Int, Long, Int)]) =>
@@ -221,23 +230,32 @@ object IndexBuilder {
       .partitionBy("shard")
       .parquet(normsPath(dir))
     val row = obs.get
-    manifestNumDocs.foreach(n =>
-      writeManifest(dir, StageManifest("norms", n,
-        row("rows").asInstanceOf[Long], long0(row("x")), Nil)))
+    (row("rows").asInstanceOf[Long], long0(row("x")))
   }
+
+  /** [[normsChecksum]] of norms rows read directly: Spark's own
+    * xxhash64 expression over the same columns, evaluated in this
+    * process instead of in a job.
+    */
+  private def normsChecksumOf(rows: Seq[NormsRow]): Long =
+    rows.iterator.map { r =>
+      new XxHash64(Seq[Any](r.shard, r.page, r.n, r.first_doc).map(Literal(_)))
+        .eval().asInstanceOf[Long]
+    }.foldLeft(0L)(_ ^ _)
 
   /** Overall postings manifest: per-shard rows from parquet footers
     * (driver-side metadata, NO Spark job) + a lineage checksum that
     * either rode the write jobs (fresh build: XOR of group
-    * observations) or, when some groups were resumed from a previous
-    * process, comes from one column-pruned read-back.
+    * observations; append: composed from the committed manifest) or,
+    * when some groups were resumed from a previous process or a torn
+    * append is rolled back, comes from one column-pruned read-back.
     */
   private def writePostingsManifest(
       spark: SparkSession, dir: String, numDocs: Long,
       observedChecksum: Option[Long]): Unit = {
     val perShard = shardRowCounts(postingsPath(dir))
     val checksum = observedChecksum.getOrElse(
-      long0(spark.read.parquet(postingsPath(dir)).agg(postingsChecksum).head().get(0)))
+      long0(readPostings(spark, dir).agg(postingsChecksum).head().get(0)))
     writeManifest(dir, StageManifest("postings", numDocs,
       perShard.map(_._2).sum, checksum, perShard))
   }
@@ -277,10 +295,9 @@ object IndexBuilder {
       spark: SparkSession, dir: String, numDocs: Long, totalShards: Int): Unit = {
     import spark.implicits._
     val denseMin = math.max(1L, math.ceil(DenseRoutingFraction * totalShards).toLong)
-    val obs = new org.apache.spark.sql.Observation(s"dict-${System.nanoTime()}")
-    spark.read.parquet(postingsPath(dir))
-      .select($"term", $"n", $"sum_tf", $"block_max_tf", $"block_min_dl",
-        $"shard".cast("int").as("shard"))
+    val obs = new Observation(s"dict-${System.nanoTime()}")
+    readPostings(spark, dir)
+      .select($"term", $"n", $"sum_tf", $"block_max_tf", $"block_min_dl", $"shard")
       .groupBy($"term")
       .agg(sum($"n").cast("long").as("df"), sum($"sum_tf").cast("long").as("cf"),
         max($"block_max_tf").cast("int").as("max_tf"),
@@ -304,7 +321,7 @@ object IndexBuilder {
   }
 
   private def writeNormsManifest(spark: SparkSession, dir: String, numDocs: Long): Unit = {
-    val m = spark.read.parquet(normsPath(dir)).agg(count(lit(1)), normsChecksum).head()
+    val m = readNorms(spark, dir).agg(count(lit(1)), normsChecksum).head()
     writeManifest(dir, StageManifest("norms", numDocs, m.getLong(0), long0(m.get(1)), Nil))
   }
 
@@ -331,7 +348,7 @@ object IndexBuilder {
     // fresh-build rank lineage (reused shuffle files): shard-group
     // postings passes re-map it with a shard filter BEFORE tokenize
     var rankedMem: Option[org.apache.spark.rdd.RDD[(Turn, Long)]] = None
-    if (!stageDone(dir, "docs")) timed("docs") {
+    if (!stageDone(dir, "docs")) timed(spark, "build:docs") {
       // the input lineage is walked several times (count, range-
       // partitioner sample, sort, rank) — materialize generated
       // inputs once; file-backed inputs re-scan instead
@@ -341,18 +358,18 @@ object IndexBuilder {
       // regardless of n); otherwise count once to derive dps. n itself
       // always comes from the manifest aggregation below.
       val docsPerShard = cfg.docsPerShard.getOrElse {
-        val n = timed("docs.count")(cached.count())
+        val n = timed(spark, "build:docs.count")(cached.count())
         math.max(1L, (n + cfg.numShards - 1) / cfg.numShards)
       }
       val ranked = rankTurns(cached, cfg.numPartitions)
-      val ids = timed("docs.assign")(
+      val ids = timed(spark, "build:docs.assign")(
         tokenizeRanked(spark, ranked, docsPerShard, baseId = 0L))
       rankedMem = Some(ranked)
       // global manifest aggregates (count, checksum, token sum) ride
       // the write job via Observation; per-shard rows come from the
       // written parquet footers (driver-side metadata, no job)
-      val obs = new org.apache.spark.sql.Observation(s"docs-${System.nanoTime()}")
-      timed("docs.write")(
+      val obs = new Observation(s"docs-${System.nanoTime()}")
+      timed(spark, "build:docs.write")(
         ids.toDF().drop("tk")
           .observe(obs, count(lit(1)).as("rows"), docsChecksum.as("x"),
             sum($"dl").as("tok"))
@@ -361,7 +378,7 @@ object IndexBuilder {
       val n = row("rows").asInstanceOf[Long]
       val checksum = long0(row("x"))
       val totalTokens = long0(row("tok"))
-      val perShard = timed("docs.manifest")(shardRowCounts(docsPath(dir)))
+      val perShard = timed(spark, "build:docs.manifest")(shardRowCounts(docsPath(dir)))
       val numShards = math.max(1L, (n + docsPerShard - 1) / docsPerShard).toInt
       val avgdl = if (n == 0) 0.0 else totalTokens.toDouble / n
       writeStats(dir, IndexStats(n, avgdl, totalTokens, numShards,
@@ -377,7 +394,7 @@ object IndexBuilder {
     // ---- stage 2: corpus statistics (df/cf live in the dictionary;
     // num_docs/avgdl/total_tokens were folded into the docs-stage
     // manifest aggregation — this stage just marks them final) ----
-    if (!stageDone(dir, "stats")) timed("stats") {
+    if (!stageDone(dir, "stats")) timed(spark, "build:stats") {
       val s0 = readStats(dir)
       writeManifest(dir, StageManifest("stats", s0.numDocs, 1, s0.totalTokens, Nil))
     }
@@ -385,7 +402,7 @@ object IndexBuilder {
 
     // ---- stage 3: postings — the build's ONE wide shuffle, in
     // cfg.postingsGroups independently-committed shard groups ----
-    if (!stageDone(dir, "postings")) timed("postings") {
+    if (!stageDone(dir, "postings")) timed(spark, "build:postings") {
       val groups = math.max(1, cfg.postingsGroups)
       // a group marker is only trustworthy while its committed data
       // exists: if the postings dir is gone (wiped, not crashed),
@@ -396,7 +413,7 @@ object IndexBuilder {
       var obsXor = 0L
       var allFresh = true
       (0 until groups).foreach { g =>
-        if (!stageDone(dir, s"postings_g$g")) timed(s"postings.group$g") {
+        if (!stageDone(dir, s"postings_g$g")) timed(spark, s"build:postings.group$g") {
           // group input: fresh build re-maps the reused rank shuffle
           // with the shard filter BEFORE tokenize (1/G of the tokenize
           // work per pass); resume reads only the matching shard dirs
@@ -410,7 +427,7 @@ object IndexBuilder {
             }
           val blocks = encodeDirect(spark, rawTokens(spark, docsG),
             stats.blockSize, cfg.numPartitions)
-          obsXor ^= timed(s"postings.write$g")(writePostings(dir, blocks))
+          obsXor ^= timed(spark, s"build:postings.write$g")(writePostings(dir, blocks))
           writeManifest(dir, StageManifest(s"postings_g$g", stats.numDocs, 0L, 0L, Nil))
         } else allFresh = false
       }
@@ -432,16 +449,21 @@ object IndexBuilder {
       import scala.concurrent.ExecutionContext.Implicits.global
       val fDict =
         if (stageDone(dir, "dictionary")) Future.unit
-        else Future(timed("dictionary")(
+        else Future(timed(spark, "build:dictionary")(
           writeDictionary(spark, dir, stats.numDocs, stats.numShards)))
       val fNorms =
         if (stageDone(dir, "norms")) Future.unit
-        else Future(timed("norms")(writeNorms(spark, dir,
-          // dl comes from the written docs table (3-column pruned
-          // read) — norms never re-tokenize
-          readDocs(spark, dir)
-            .select($"shard", $"doc_id", $"dl").as[(Int, Long, Int)],
-          stats.docsPerShard, stats.normsPageSize, Some(stats.numDocs))))
+        else Future(timed(spark, "build:norms") {
+          // the write covers the whole norms relation, so its observed
+          // aggregates are the manifest
+          val (rows, checksum) = writeNorms(spark, dir,
+            // dl comes from the written docs table (3-column pruned
+            // read) — norms never re-tokenize
+            readDocs(spark, dir)
+              .select($"shard", $"doc_id", $"dl").as[(Int, Long, Int)],
+            stats.docsPerShard, stats.normsPageSize)
+          writeManifest(dir, StageManifest("norms", stats.numDocs, rows, checksum, Nil))
+        })
       Await.result(fDict, Duration.Inf)
       Await.result(fNorms, Duration.Inf)
     }
@@ -456,13 +478,15 @@ object IndexBuilder {
     * anti-join): index only the new turns, touching exactly the shard
     * dirs the new doc ids land in.
     *
-    *  - delta = anti-join of the incoming turns against the indexed
-    *    doc keys; no-op if empty.
-    *  - fast path requires every delta key to sort AFTER the existing
-    *    max (conv_id, turn_idx) — doc_id = global sort rank, so an
-    *    out-of-order key would renumber existing docs. Out-of-order
-    *    deltas auto-fall back to [[compactWith]] (full rebuild +
-    *    dir swap), so any delta ends queryable with no manual step.
+    *  - delta: the largest indexed key is doc numDocs − 1's (doc_id
+    *    is the sort rank). If one aggregate finds every incoming key
+    *    sorting after it, the input IS the delta; otherwise delta =
+    *    anti-join of the incoming turns against the indexed keys;
+    *    no-op if empty.
+    *  - an append requires every delta key to sort AFTER the indexed
+    *    max. Out-of-order (or null) keys auto-fall back to
+    *    [[compactWith]] (full rebuild + dir swap), so any delta ends
+    *    queryable with no manual step.
     *  - crash safety: an in-progress marker brackets the mutation
     *    window; a torn append is detected on the next entry and
     *    rolled back by [[recoverTornAppend]] before proceeding.
@@ -473,9 +497,14 @@ object IndexBuilder {
     *  - the boundary shard (partially filled by the old corpus) is
     *    re-encoded from its decoded old postings + the delta tokens;
     *    all-new shards encode from delta tokens alone. Dynamic
-    *    partition overwrite replaces exactly those shard dirs.
+    *    partition overwrite replaces exactly those shard dirs. Only
+    *    the boundary shard dirs are read, never a whole table.
     *  - dictionary is a derived agg → recomputed; norms rebuild for
-    *    shards >= boundary only; stats/manifests refresh.
+    *    shards >= boundary only, from the boundary's old docs and the
+    *    delta.
+    *  - manifests are composed, not read back: each checksum is a
+    *    bit_xor, so new = committed ⊕ the old boundary shard's rows
+    *    (postings, norms) ⊕ what the append's write observed.
     *
     * Output is content-identical to a full build over the union when
     * the full build uses the same fixed docsPerShard (tested in
@@ -499,7 +528,8 @@ object IndexBuilder {
     // mutation and the snapshot commit leaves the marker in place;
     // silently proceeding would make the anti-join treat uncommitted
     // docs as indexed and a later append re-issue their doc ids
-    if (appendInProgress(dir)) recoverTornAppend(spark, dir, stats0)
+    if (appendInProgress(dir))
+      timed(spark, "append:recover")(recoverTornAppend(spark, dir, stats0))
     // belt-and-braces: committed stats are the doc-id authority
     // (footer-metadata counts — no Spark job)
     val docsOnDisk = SegmentIO.shardRowCounts(docsPath(dir)).map(_._2).sum
@@ -508,90 +538,127 @@ object IndexBuilder {
         s"commit says ${stats0.numDocs} — index is torn beyond the " +
         "marker protocol (manual intervention or full rebuild required)")
 
-    val oldKeys = readDocs(spark, dir).select($"conv_id", $"turn_idx")
-    val delta = newTurns
-      .join(oldKeys, Seq("conv_id", "turn_idx"), "left_anti")
-      .as[Turn]
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nd = delta.count()
-    if (nd == 0) { delta.unpersist(); return stats0 }
-
-    // append-only key space check: doc_id = global sort rank, so an
-    // out-of-order key would renumber existing docs. Instead of
-    // failing (the reference's most common growth pattern — "found 5
-    // more papers, add them", `src/pubmed_downloader.py:465-484` —
-    // arrives in arbitrary key order), fall back to a FULL COMPACTION:
-    // rebuild over union(existing, delta) into a sibling dir with the
-    // same fixed docsPerShard, then swap. Content-identical to a
+    val dps = stats0.docsPerShard
+    val oldN = stats0.numDocs
+    // append-only key space check: doc_id = global sort rank, so a key
+    // that does not sort after doc oldN - 1's would renumber existing
+    // docs. Instead of failing (the reference's most common growth
+    // pattern — "found 5 more papers, add them",
+    // `src/pubmed_downloader.py:465-484` — arrives in arbitrary key
+    // order), such a delta falls back to a FULL COMPACTION: rebuild
+    // over union(existing, delta) into a sibling dir with the same
+    // fixed docsPerShard, then swap. Content-identical to a
     // from-scratch build (IndexSpec guards it).
-    val maxOld = oldKeys.agg(max(struct($"conv_id", $"turn_idx"))).collect()(0)
-      .getStruct(0)
-    val minNew = delta.agg(min(struct($"conv_id", $"turn_idx"))).collect()(0)
-      .getStruct(0)
-    val ok = maxOld == null ||
-      minNew.getString(0) > maxOld.getString(0) ||
-      (minNew.getString(0) == maxOld.getString(0) &&
-        minNew.getInt(1) > maxOld.getInt(1))
-    if (!ok) {
+    val sortsAfter =
+      if (oldN == 0) lit(true)
+      else {
+        val last = readShardDocs(dir, ((oldN - 1) / dps).toInt, Seq(oldN - 1),
+          withText = false).head
+        // struct order is the sort's order, null conv_id first
+        struct($"conv_id", $"turn_idx") > struct(typedLit(last.conv_id), lit(last.turn_idx))
+      }
+    /** (rows, rows not sorting after the indexed keys), one job */
+    def keyCounts(ds: Dataset[Turn]): (Long, Long) = {
+      val r = ds.agg(count(lit(1)), sum(when(sortsAfter, 0L).otherwise(1L))).head()
+      (r.getLong(0), long0(r.get(1)))
+    }
+    val (delta, nd, inOrder) = timed(spark, "append:keys") {
+      val (n, late) = keyCounts(newTurns)
+      if (late == 0) (newTurns, n, true)
+      else {
+        val d = newTurns
+          .join(readDocs(spark, dir).select($"conv_id", $"turn_idx"),
+            Seq("conv_id", "turn_idx"), "left_anti")
+          .as[Turn]
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val (nd, lateD) = keyCounts(d)
+        (d, nd, lateD == 0)
+      }
+    }
+    // only the anti-join's output is this method's to unpersist
+    def release(): Unit = if (!(delta eq newTurns)) delta.unpersist()
+    if (nd == 0) { release(); return stats0 }
+    if (!inOrder) {
       val st = compactWith(spark, delta, dir, stats0, numPartitions)
-      delta.unpersist()
+      release()
       return st
     }
 
-    val dps = stats0.docsPerShard
-    val oldN = stats0.numDocs
-    val deltaIds = assignDocIds(spark, delta, numPartitions, dps, baseId = oldN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // first mutation starts here — mark the append in progress so a
-    // crash before the snapshot commit is detected on the next entry
-    SegmentIO.writeAppendMarker(dir)
-    timed("append.docs")(deltaIds.toDF().drop("tk")
-      .write.mode("append").partitionBy("shard").parquet(docsPath(dir)))
+    // committed manifests, read before the first mutation rewrites them
+    val (_, docsX0) = manifestTotals(dir, "docs")
+    val (_, postingsX0) = manifestTotals(dir, "postings")
+    val (normsRows0, normsX0) = manifestTotals(dir, "norms")
 
-    val deltaTokens = long0(deltaIds.agg(sum($"dl")).head().get(0))
-    val newN = oldN + nd
-    val totalTokens = stats0.totalTokens + deltaTokens
+    val (deltaIds, docsObs) = timed(spark, "append:docs") {
+      val ids = assignDocIds(spark, delta, numPartitions, dps, baseId = oldN)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      // first mutation starts here — mark the append in progress so a
+      // crash before the snapshot commit is detected on the next entry
+      SegmentIO.writeAppendMarker(dir)
+      val obs = new Observation(s"append-docs-${System.nanoTime()}")
+      ids.toDF().drop("tk")
+        .observe(obs, count(lit(1)).as("rows"), docsChecksum.as("x"), sum($"dl").as("tok"))
+        .write.mode("append").partitionBy("shard").parquet(docsPath(dir))
+      (ids, obs.get)
+    }
+    val newN = oldN + docsObs("rows").asInstanceOf[Long]
+    val totalTokens = stats0.totalTokens + long0(docsObs("tok"))
     val stats1 = stats0.copy(
       numDocs = newN,
       avgdl = if (newN == 0) 0.0 else totalTokens.toDouble / newN,
       totalTokens = totalTokens,
       numShards = math.max(1L, (newN + dps - 1) / dps).toInt)
 
-    // ---- postings: delta tokens + (if partially filled) the decoded
-    // boundary shard, re-encoded together ----
+    // ---- the boundary shard, if partially filled: its old docs and
+    // postings are re-encoded / re-paged with the delta's ----
     val boundary = (oldN / dps).toInt
     val boundaryPartial = oldN % dps != 0
-    val deltaToks = rawTokens(spark, deltaIds)
-    val input =
-      if (!boundaryPartial) deltaToks
-      else boundaryTokens(spark, dir, boundary, readDocs(spark, dir).toDF()
-        .filter($"shard" === boundary && $"doc_id" < oldN))
-        .union(deltaToks.select($"doc_id", $"dl", $"shard", $"term", $"tfinc"))
-    val blocks = encodeDirect(spark, input, stats0.blockSize, numPartitions)
-    timed("append.postings")(writePostings(dir, blocks))
+    lazy val boundaryDocs = readDocs(spark, dir, Seq(boundary)).filter($"doc_id" < oldN)
+    val deltaDls = deltaIds.select($"shard", $"doc_id", $"dl")
 
-    // ---- postings manifest + dictionary: derived, recompute (the
-    // observed checksum covers only the rewritten shards → read-back) ----
-    writePostingsManifest(spark, dir, newN, observedChecksum = None)
-    timed("append.dictionary")(
+    // ---- postings: delta tokens + (if partially filled and with any
+    // postings) the decoded boundary shard, re-encoded together; the
+    // boundary read observes the checksum of the rows it replaces ----
+    val boundaryPostingsObs = new Observation(s"append-boundary-${System.nanoTime()}")
+    val reencode = boundaryPartial &&
+      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(postingsPath(dir), s"shard=$boundary"))
+    val postingsX = timed(spark, "append:postings") {
+      val deltaToks = rawTokens(spark, deltaIds)
+      val toks =
+        if (!reencode) deltaToks
+        else boundaryTokens(spark, boundary,
+          readPostings(spark, dir, Seq(boundary))
+            .observe(boundaryPostingsObs, postingsChecksum.as("x")),
+          boundaryDocs.toDF())
+          .union(deltaToks.select($"doc_id", $"dl", $"shard", $"term", $"tfinc"))
+      writePostings(dir, encodeDirect(spark, toks, stats0.blockSize, numPartitions))
+    }
+    val oldBoundaryPostingsX = if (reencode) long0(boundaryPostingsObs.get("x")) else 0L
+    writePostingsManifest(spark, dir, newN,
+      Some(postingsX0 ^ oldBoundaryPostingsX ^ postingsX))
+
+    // ---- dictionary: derived, recomputed globally ----
+    timed(spark, "append:dictionary")(
       writeDictionary(spark, dir, newN, stats1.numShards))
 
-    // ---- norms: rebuild shards >= boundary from the docs table ----
-    timed("append.norms")(writeNorms(spark, dir,
-      readDocs(spark, dir).filter($"shard" >= boundary)
-        .select($"shard", $"doc_id", $"dl").as[(Int, Long, Int)],
-      dps, stats0.normsPageSize, None))
-    writeNormsManifest(spark, dir, newN)
+    // ---- norms: rebuild shards >= boundary ----
+    val oldPages = if (boundaryPartial) readShardNorms(dir, boundary).toSeq else Nil
+    val (normsRows, normsX) = timed(spark, "append:norms")(writeNorms(spark, dir,
+      (if (boundaryPartial) boundaryDocs.select($"shard", $"doc_id", $"dl").union(deltaDls)
+        else deltaDls).as[(Int, Long, Int)],
+      dps, stats0.normsPageSize))
+    writeManifest(dir, StageManifest("norms", newN, normsRows0 - oldPages.length + normsRows,
+      normsX0 ^ normsChecksumOf(oldPages) ^ normsX, Nil))
 
     // ---- stats + docs manifest refresh ----
     writeStats(dir, stats1)
-    writeDocsAndStatsManifests(spark, dir, newN, totalTokens)
+    writeDocsAndStatsManifests(dir, newN, totalTokens, docsX0 ^ long0(docsObs("x")))
     writeSnapshot(dir, Seq("docs", "stats", "dictionary", "postings", "norms"))
     SegmentIO.clearAppendMarker(dir) // snapshot committed — append done
     SegmentIO.invalidateDlCache(dir) // norms rewritten in place
 
     deltaIds.unpersist()
-    delta.unpersist()
+    release()
     stats1
   }
 
@@ -654,8 +721,8 @@ object IndexBuilder {
           !java.nio.file.Files.exists(shardDir))
         java.nio.file.Files.move(tmpShard, shardDir)
       // restore the boundary docs dir to its committed prefix
-      val keep = readDocs(spark, dir)
-        .filter($"shard" === boundary && $"doc_id" < oldN)
+      val keep = readDocs(spark, dir, Seq(boundary))
+        .filter($"doc_id" < oldN)
         .toDF().drop("shard")
         .orderBy("doc_id")
         .persist()
@@ -675,12 +742,13 @@ object IndexBuilder {
         java.nio.file.Files.move(tmpShard, shardDir)
         // re-encode boundary postings from decode ⋈ restored docs
         writePostings(dir, encodeDirect(spark,
-          boundaryTokens(spark, dir, boundary, keep), stats0.blockSize,
+          boundaryTokens(spark, boundary, readPostings(spark, dir, Seq(boundary)), keep),
+          stats0.blockSize,
           math.max(1, spark.sparkContext.defaultParallelism)))
         writeNorms(spark, dir,
           keep.select(lit(boundary).as("shard"), $"doc_id", $"dl")
             .as[(Int, Long, Int)],
-          dps, stats0.normsPageSize, None)
+          dps, stats0.normsPageSize)
       } else rmShard(docsPath(dir), boundary)
       keep.unpersist()
     }
@@ -692,22 +760,22 @@ object IndexBuilder {
     writeDictionary(spark, dir, oldN, stats0.numShards)
     writePostingsManifest(spark, dir, oldN, observedChecksum = None)
     writeNormsManifest(spark, dir, oldN)
-    writeDocsAndStatsManifests(spark, dir, oldN, stats0.totalTokens)
+    writeDocsAndStatsManifests(dir, oldN, stats0.totalTokens,
+      long0(readDocs(spark, dir).agg(docsChecksum).head().get(0)))
     writeSnapshot(dir, Seq("docs", "stats", "dictionary", "postings", "norms"))
     SegmentIO.clearAppendMarker(dir)
     SegmentIO.invalidateDlCache(dir)
   }
 
   /** Encoder rows (doc_id, dl, shard, term, tfinc) of the boundary
-    * shard's stored postings: its blocks decoded back to (term, doc_id,
+    * shard's stored postings `blocks`: decoded back to (term, doc_id,
     * tf) and joined to `docs` for dl. Postings of doc ids missing from
     * `docs` drop out, which is how recovery sheds torn rows.
     */
-  private def boundaryTokens(
-      spark: SparkSession, dir: String, boundary: Int, docs: DataFrame): DataFrame = {
+  private def boundaryTokens(spark: SparkSession, boundary: Int,
+      blocks: Dataset[PostingBlock], docs: DataFrame): DataFrame = {
     import spark.implicits._
-    readPostings(spark, dir)
-      .filter($"shard" === boundary)
+    blocks
       .flatMap { b =>
         val ids = Varbyte.decodeDeltas(b.doc_bytes, b.n)
         val tfs = Varbyte.decodeInts(b.tf_bytes, b.n)
@@ -718,16 +786,16 @@ object IndexBuilder {
       .select($"doc_id", $"dl", lit(boundary).as("shard"), $"term", $"tf".as("tfinc"))
   }
 
-  /** Recompute the docs-table manifest and the stats manifest from
-    * the tables on disk, the docs manifest the way a fresh build writes
-    * it: per-shard rows from parquet footers plus the lineage checksum.
-    * Shared by the append tail and torn-append recovery — recovery
-    * must restore EVERY manifest the append window can dirty, not only
-    * the derived (dictionary/postings/norms) ones.
+  /** Write the docs-table manifest and the stats manifest, the docs
+    * manifest the way a fresh build writes it: per-shard rows from
+    * parquet footers plus the lineage `checksum` (the append composes
+    * it; recovery reads it back). Shared by the append tail and
+    * torn-append recovery — recovery must restore EVERY manifest the
+    * append window can dirty, not only the derived
+    * (dictionary/postings/norms) ones.
     */
   private def writeDocsAndStatsManifests(
-      spark: SparkSession, dir: String, n: Long, totalTokens: Long): Unit = {
-    val checksum = long0(spark.read.parquet(docsPath(dir)).agg(docsChecksum).head().get(0))
+      dir: String, n: Long, totalTokens: Long, checksum: Long): Unit = {
     writeManifest(dir, StageManifest("docs", n, n, checksum, shardRowCounts(docsPath(dir))))
     writeManifest(dir, StageManifest("stats", n, 1, totalTokens, Nil))
   }

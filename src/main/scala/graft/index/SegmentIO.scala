@@ -6,6 +6,7 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.HadoopReadOptions
@@ -19,7 +20,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.InputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
 import org.apache.spark.sql.execution.datasources.DataSourceUtils
 import org.apache.spark.sql.functions._
@@ -208,6 +209,13 @@ object SegmentIO {
     Files.write(manifestPath(dir, m.stage), json.getBytes(StandardCharsets.UTF_8))
   }
 
+  /** (output rows, checksum) of stage `stage`'s written manifest. */
+  def manifestTotals(dir: String, stage: String): (Long, Long) = {
+    val json = new String(Files.readAllBytes(manifestPath(dir, stage)), StandardCharsets.UTF_8)
+    def f(k: String): Long = s""""$k":(-?[0-9]+)""".r.findFirstMatchIn(json).get.group(1).toLong
+    (f("output_rows"), f("checksum"))
+  }
+
   def stageDone(dir: String, stage: String): Boolean =
     Files.exists(manifestPath(dir, stage))
 
@@ -260,33 +268,43 @@ object SegmentIO {
 
   // ---- readers ----
 
-  def readDocs(spark: SparkSession, dir: String): Dataset[IndexedTurn] = {
-    import spark.implicits._
-    // shard is a partition-directory column — cast pins its type
-    spark.read.parquet(docsPath(dir))
-      .select(col("doc_id"), col("conv_id"), col("turn_idx"), col("role"),
-        col("text"), col("tool"), col("ts"), col("dl"),
-        col("shard").cast("int").as("shard"))
-      .as[IndexedTurn]
+  /** A table read with its schema pinned to the row class `T`, so
+    * Spark runs no schema-inference job; `shard` is read as the int
+    * partition column. With `shards` non-empty, only those `shard=N`
+    * dirs that exist are listed (under `basePath`, so `shard` stays a
+    * column) and the rest of the table is never touched: a table of
+    * more than 32 shard dirs otherwise costs a parallel listing job
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`).
+    */
+  private def readTable[T <: Product: TypeTag](
+      spark: SparkSession, path: String, shards: Seq[Int] = Nil): Dataset[T] = {
+    val enc = Encoders.product[T]
+    val reader = spark.read.schema(enc.schema)
+    val df =
+      if (shards.isEmpty) reader.parquet(path)
+      else {
+        val dirs = shards.map(s => s"$path/shard=$s").filter(d => Files.isDirectory(Paths.get(d)))
+        if (dirs.isEmpty) return spark.emptyDataset(enc)
+        reader.option("basePath", path).parquet(dirs: _*)
+      }
+    df.select(enc.schema.fieldNames.map(col).toIndexedSeq: _*).as(enc)
   }
+
+  /** The docs table, or only its `shards` when given. */
+  def readDocs(spark: SparkSession, dir: String, shards: Seq[Int] = Nil): Dataset[IndexedTurn] =
+    readTable[IndexedTurn](spark, docsPath(dir), shards)
 
   /** Build-side reader: reconstructs the token array from the stored
     * text (the resume path's single tokenize).
     */
   def readDocsTk(spark: SparkSession, dir: String): Dataset[IndexedTurnTk] = {
     import spark.implicits._
-    spark.read.parquet(docsPath(dir))
-      .select(col("doc_id"), col("conv_id"), col("turn_idx"), col("role"),
-        col("text"), col("tool"), col("ts"), col("dl"),
-        col("shard").cast("int").as("shard"),
-        graft.tokenize.Tokenizer.tokensCol(col("text")).as("tk"))
+    readDocs(spark, dir).withColumn("tk", graft.tokenize.Tokenizer.tokensCol(col("text")))
       .as[IndexedTurnTk]
   }
 
-  def readDict(spark: SparkSession, dir: String): Dataset[DictEntry] = {
-    import spark.implicits._
-    spark.read.parquet(dictPath(dir)).as[DictEntry]
-  }
+  def readDict(spark: SparkSession, dir: String): Dataset[DictEntry] =
+    readTable[DictEntry](spark, dictPath(dir))
 
   /** Every parquet file directly under `path`, read with plain
     * parquet-hadoop: no Spark job, no shuffle. `filter` goes to the
@@ -561,23 +579,10 @@ object SegmentIO {
     }
   }
 
-  def readNorms(spark: SparkSession, dir: String): Dataset[NormsRow] = {
-    import spark.implicits._
-    spark.read.parquet(normsPath(dir))
-      .select(col("shard").cast("int").as("shard"), col("page"), col("n"),
-        col("first_doc"), col("dl_bytes"))
-      .as[NormsRow]
-  }
+  def readNorms(spark: SparkSession, dir: String): Dataset[NormsRow] =
+    readTable[NormsRow](spark, normsPath(dir))
 
-  def readPostings(spark: SparkSession, dir: String): Dataset[PostingBlock] = {
-    import spark.implicits._
-    // shard comes back as a partition-directory column — cast pins the
-    // type regardless of partition-inference settings
-    spark.read.parquet(postingsPath(dir))
-      .select(col("term"), col("block_id"), col("n"), col("first_doc"),
-        col("last_doc"), col("doc_bytes"), col("tf_bytes"),
-        col("block_max_tf"), col("block_min_dl"), col("sum_tf"),
-        col("shard").cast("int").as("shard"))
-      .as[PostingBlock]
-  }
+  /** The postings table, or only its `shards` when given. */
+  def readPostings(spark: SparkSession, dir: String, shards: Seq[Int] = Nil): Dataset[PostingBlock] =
+    readTable[PostingBlock](spark, postingsPath(dir), shards)
 }

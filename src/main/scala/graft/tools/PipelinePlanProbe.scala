@@ -36,7 +36,8 @@ import graft.ops.{Hashing, Pack, Similarity}
   *  - RangeJoin.pointInInterval plans as an equi-join on
   *    (key, bucket), never a nested-loop/cartesian.
   *
-  * Run: `sbt -batch "runMain graft.tools.PipelinePlanProbe"`.
+  * Run: `sbt -batch "runMain graft.tools.PipelinePlanProbe"`. Its IVF
+  * and index fixtures live under one temp dir, deleted when it ends.
   */
 object PipelinePlanProbe {
   def main(args: Array[String]): Unit = {
@@ -44,6 +45,15 @@ object PipelinePlanProbe {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val root = java.nio.file.Files.createTempDirectory("graft-planprobe")
+    try probe(spark, root)
+    finally {
+      IndexBuilder.deleteRecursively(root)
+      spark.stop()
+    }
+  }
+
+  private def probe(spark: SparkSession, root: java.nio.file.Path): Unit = {
     import spark.implicits._
 
     val docs = (0L until 100000L)
@@ -82,12 +92,7 @@ object PipelinePlanProbe {
     assert(nBins > 0)
 
     // ---- IVF pruned serving: static cid partition filter, one scan
-    def rmrf(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rmrf)
-      f.delete()
-    }
-    val ivfDir = "/dev/shm/graft-planprobe-ivf"
-    rmrf(new java.io.File(ivfDir))
+    val ivfDir = root.resolve("ivf").toString
     val emb = (0L until 200L)
       .map(i => (i, Array.tabulate(8)(d => math.sin(i * 13 + d * 5).toFloat).toSeq))
       .toDF("vec_id", "embedding")
@@ -110,8 +115,7 @@ object PipelinePlanProbe {
 
     // ---- BM25 retrieval: min(routed, P) tasks visit exactly the
     // dictionary-routed shards
-    val idxDir = "/dev/shm/graft-planprobe-idx"
-    rmrf(new java.io.File(idxDir))
+    val idxDir = root.resolve("idx").toString
     IndexBuilder.build(spark, TranscriptGen.corpus(spark, 2000L), idxDir,
       IndexBuilder.Config(blockSize = 64, numShards = 16, numPartitions = 4))
     val eng = new SearchEngine(spark, idxDir)
@@ -226,6 +230,5 @@ object PipelinePlanProbe {
     assert(mh.count() >= 0)
 
     println("[pipeline-plan-probe] ALL ASSERTIONS PASSED")
-    spark.stop()
   }
 }

@@ -26,6 +26,10 @@ import graft.index.{IndexBuilder, SegmentIO}
   * list length ≤ DenseRoutingFraction × shards — the v6 bound).
   *
   * Usage: runMain graft.tools.RouteProbe [convs] [shards] [dir]
+  *
+  * The default dir, `/dev/shm/graft-routeprobe-<shards>`, is a
+  * resumable cache by design: it is kept after the run, and a re-run
+  * finds the build's stages done and only probes. Delete it by hand.
   */
 object RouteProbe {
   def main(args: Array[String]): Unit = {

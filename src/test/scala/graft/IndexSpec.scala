@@ -30,6 +30,10 @@ class IndexSpec extends SparkSpec {
         java.nio.charset.StandardCharsets.UTF_8)
     }.toMap
 
+  private def docsContent(dir: String): Set[(Long, String, Int, Int, Int)] =
+    SegmentIO.readDocs(spark, dir).collect()
+      .map(r => (r.doc_id, r.conv_id, r.turn_idx, r.dl, r.shard)).toSet
+
   lazy val baseDir: String = {
     val dir = tempDir("graft-idx-base")
     IndexBuilder.build(spark, TranscriptGen.corpus(spark, NumConvs), dir,
@@ -262,6 +266,9 @@ class IndexSpec extends SparkSpec {
     assert(st == SegmentIO.readStats(fullDir))
     assert(postingsContent(chainDir) == postingsContent(fullDir),
       "two chained appends must equal one full build")
+    // the second append composes its manifests from the first's
+    assert(manifests(chainDir) == manifests(fullDir),
+      "chained append manifests must equal the full build's")
   }
 
   test("compaction swap crash heals: complete .compacting promotes on next append") {
@@ -310,6 +317,104 @@ class IndexSpec extends SparkSpec {
     IndexBuilder.appendBuild(spark, b.as[graft.model.Turn], incrDir, numPartitions = 8)
     assert(postingsContent(incrDir) == postingsContent(fullDir))
     assert(SegmentIO.readStats(incrDir) == SegmentIO.readStats(fullDir))
+    // no old boundary part in any checksum
+    assert(manifests(incrDir) == manifests(fullDir),
+      "exact-boundary append manifests must equal the full build's")
+  }
+
+  test("append of a batch mixing indexed and new keys appends only the new ones") {
+    import spark.implicits._
+    val all = TranscriptGen.corpus(spark, NumConvs)
+    val a = all.filter($"conv_id" < "c00000080")
+    val cfgFixed = IndexBuilder.Config(blockSize = 8, numPartitions = 8,
+      docsPerShard = Some(300), normsPageSize = 64)
+    val fullDir = tempDir("graft-idx-mixed-full")
+    IndexBuilder.build(spark, all, fullDir, cfgFixed)
+    val dir = tempDir("graft-idx-mixed")
+    IndexBuilder.build(spark, a.as[graft.model.Turn], dir, cfgFixed)
+    def files(table: String) = new java.io.File(s"$dir/$table/shard=0").list().toSet
+    val shard0 = Seq("docs", "postings", "norms").map(files)
+    // already-indexed keys (early and late in A) next to every new key
+    val batch = all.filter($"conv_id" >= "c00000070" || $"conv_id" < "c00000005")
+    val st = IndexBuilder.appendBuild(spark, batch.as[graft.model.Turn], dir, numPartitions = 8)
+    assert(st == SegmentIO.readStats(fullDir))
+    assert(postingsContent(dir) == postingsContent(fullDir))
+    assert(docsContent(dir) == docsContent(fullDir))
+    assert(manifests(dir) == manifests(fullDir),
+      "mixed-batch append manifests must equal the full build's")
+    // appended, not compacted: shard 0's files were never rewritten
+    assert(Seq("docs", "postings", "norms").map(files) == shard0)
+  }
+
+  test("append of a null conv_id compacts: equal to a from-scratch build over the union") {
+    import spark.implicits._
+    val all = TranscriptGen.corpus(spark, NumConvs)
+    val a = all.filter($"conv_id" < "c00000080")
+    val b = all.filter($"conv_id" >= "c00000080")
+    val cfgFixed = IndexBuilder.Config(blockSize = 8, numPartitions = 8,
+      docsPerShard = Some(300), normsPageSize = 64)
+    // a null key sorts first, so it is never after the indexed keys
+    val nullKey = Seq(graft.model.Turn(null, 0, "user", "a turn without conversation",
+      "", java.sql.Timestamp.valueOf("2026-01-01 00:00:00"))).toDS()
+    val dir = tempDir("graft-idx-nullkey")
+    IndexBuilder.build(spark, a.as[graft.model.Turn], dir, cfgFixed)
+    val st = IndexBuilder.appendBuild(spark, b.as[graft.model.Turn].union(nullKey), dir,
+      numPartitions = 8)
+    val fullDir = tempDir("graft-idx-nullkey-full")
+    IndexBuilder.build(spark, all.union(nullKey), fullDir, cfgFixed)
+    assert(SegmentIO.readDocs(spark, fullDir).filter($"doc_id" === 0).head().conv_id == null)
+    assert(st == SegmentIO.readStats(fullDir))
+    assert(postingsContent(dir) == postingsContent(fullDir))
+    assert(docsContent(dir) == docsContent(fullDir))
+    assert(manifests(dir) == manifests(fullDir))
+  }
+
+  test("an append over more than 32 shard dirs runs at most 10 Spark jobs") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val all = TranscriptGen.corpus(spark, NumConvs)
+    val a = all.filter($"conv_id" < "c00000080")
+    val b = all.filter($"conv_id" >= "c00000080")
+    val nA = TranscriptGen.localCorpus(NumConvs).count(_.conv_id < "c00000080")
+    val dps = 25L
+    assert(nA / dps > 32 && nA % dps != 0,
+      "precondition: over 32 shard dirs and a partial boundary shard")
+    val dir = tempDir("graft-idx-jobs")
+    IndexBuilder.build(spark, a.as[graft.model.Turn], dir, IndexBuilder.Config(blockSize = 8,
+      numPartitions = 4, docsPerShard = Some(dps), normsPageSize = 64))
+    // job descriptions, in submission order, between two marker jobs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("(none)"))
+    }
+    val sc = spark.sparkContext
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(0), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    // builds run with AQE off, as in graft.Bench
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      marker("marker:start")
+      IndexBuilder.appendBuild(spark, b.as[graft.model.Turn], dir, numPartitions = 4)
+      marker("marker:end")
+      val deadline = System.currentTimeMillis() + 10000
+      while (!jobs.contains("marker:end") && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+    } finally {
+      spark.conf.unset("spark.sql.adaptive.enabled")
+      sc.removeSparkListener(listener)
+    }
+    val seen = jobs.asScala.toSeq
+    val appendJobs = seen.dropWhile(_ != "marker:start").drop(1).takeWhile(_ != "marker:end")
+    assert(seen.contains("marker:end"))
+    val perStage = appendJobs.groupBy(identity).map { case (d, js) => s"$d: ${js.size}" }
+    assert(appendJobs.size <= 10,
+      s"${appendJobs.size} jobs in one append, per stage: ${perStage.toSeq.sorted.mkString(", ")}")
   }
 
   test("shard-group resume: only missing groups rebuild, committed shards untouched") {
