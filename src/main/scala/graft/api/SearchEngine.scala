@@ -2,8 +2,6 @@ package graft.api
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import scala.collection.parallel.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport, DateTimeUtils}
 import org.apache.spark.sql.internal.SQLConf
@@ -19,10 +17,10 @@ import graft.tokenize.Tokenizer
   * `SemanticSearchEngine.search` lifecycle (`src/search_engine.py:141-360`;
   * SURVEY §3.1):
   *
-  *   parse → dictionary lookup (driver-cached; misses read the
-  *   term-sorted dictionary files directly) → routed per-shard
-  *   block-max WAND / posting intersection → top-k' merge → doc-store
-  *   fetch of the hit set → residual filters (ts range / role / tool,
+  *   parse → dictionary lookup (the resident dictionary) → routed
+  *   per-shard block-max WAND / posting intersection → top-k' merge →
+  *   doc-store fetch of the hit set (the resident doc-store rows) →
+  *   residual filters (ts range / role / tool,
   *   applied post-retrieval with 5x over-fetch exactly like the
   *   reference, `src/search_engine.py:198-212,247-289`) → proximity
   *   rerank → truncate k → 4-dp score rounding (`:281`) → keyword
@@ -36,108 +34,59 @@ import graft.tokenize.Tokenizer
   * generation-keyed resident copy of the shard; the driver merges the
   * per-shard top-k lists (see [[fanOut]]). Everything around it is
   * bounded (at most MaxTopK candidates), so, as in the reference, it
-  * runs in process: the dictionary and doc-store lookups are direct
-  * parquet reads ([[SegmentIO.readDictTerms]],
-  * [[SegmentIO.readShardDocs]]), and
+  * runs in process: the dictionary and the doc-store rows come from
+  * `SegmentIO`'s resident cache ([[SegmentIO.residentDict]],
+  * [[SegmentIO.residentDocs]]), filled on first use and kept across
+  * queries like the reference's in-RAM index and id map
+  * (`src/search_engine.py:48-70`), so a warm search reads no file; and
   * filters, rerank, rounding and boost are plain Scala with the
   * semantics of the equivalent Spark column expressions (null fields,
   * `lower`, `round`, `pow`, sort order) — a planned query per search
   * would cost more than all of this work for ≤ MaxTopK rows.
-  *
-  * Loaded segment metadata (stats, dictionary entries) is cached
-  * across queries, the analog of the reference's lazy index init
-  * (`src/search_engine.py:48-70`).
   */
 class SearchEngine(spark: SparkSession, indexDir: String) {
   import spark.implicits._
+  import SearchEngine.Snapshot
 
   val MaxTopK = 10000 // reference MAX_TOP_K, config/config.py:271
   val OverFetchFactor = 5 // reference search_k = top_k * 5
 
-  /** Driver-resident dictionary cache, term → Some((idf, maxScore,
-    * shard list)) / None for a confirmed zero-df term — the analog of
-    * the reference's resident in-RAM index
-    * (`src/search_engine.py:48-70`). Only terms actually queried are
-    * cached (bounded: whole-cache eviction like SegmentIO's resident
-    * shards), so repeat queries skip the dictionary read entirely.
-    *
-    * Freshness: idf derives from the `stats` snapshot, and BOTH are
-    * keyed to the segment's mutation generation (bumped by every
-    * in-place mutation path — append, recovery, compaction — via
-    * `SegmentIO.invalidateDlCache`). A query after an append sees the
-    * new stats, new dictionary entries, and the new shard routing
-    * lists; without this an appended shard would be invisible to a
-    * live engine forever. The fan-out ships the same generation to the
-    * executors' resident-shard cache ([[SegmentIO.residentShard]]).
+  /** The segment's stats under its current mutation generation, read
+    * again only when the generation moves (every in-place mutation —
+    * append, recovery, compaction — bumps it via
+    * `SegmentIO.invalidateDlCache`). A search takes one snapshot and
+    * uses its generation for the dictionary, the fan-out's resident
+    * shards and the doc store alike, so a query after an append sees
+    * the new stats, dictionary entries, routing lists and docs, and a
+    * query never mixes two generations' resident data.
     */
-  private val dictCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[(Double, Double, Seq[Int])]]
-  private val MaxCachedTerms = 262144
-
-  @volatile private var statsSnapshot: SegmentIO.IndexStats = _
-  @volatile private var gen: Long = -1L
-  private def ensureFresh(): Unit = {
+  @volatile private var current: Snapshot = _
+  private def snapshot(): Snapshot = {
     val g = SegmentIO.generation(indexDir)
-    if (statsSnapshot == null || g != gen) synchronized {
-      if (statsSnapshot == null || g != gen) {
-        dictCache.clear()
-        statsSnapshot = SegmentIO.readStats(indexDir)
-        gen = g
-      }
+    val s = current
+    if (s != null && s.gen == g) s
+    else synchronized {
+      if (current == null || current.gen != g) current = Snapshot(g, SegmentIO.readStats(indexDir))
+      current
     }
   }
-  def stats: SegmentIO.IndexStats = { ensureFresh(); statsSnapshot }
-
-  private def termMetaFor(terms: Array[String]): Map[String, (Double, Double, Seq[Int])] = {
-    ensureFresh() // MUST lead: a fully-cached term set would otherwise
-    // never consult `stats` and serve stale entries across a mutation
-    val fetchGen = gen // generation the fetch below is valid under
-    //
-    // snapshot-then-merge: the return value is assembled from LOCAL
-    // maps only, never re-read from the shared cache — a whole-cache
-    // eviction below (or a concurrent generation clear) between the
-    // snapshot and the return would otherwise null out entries for
-    // terms that were present a moment ago
-    val snap: Map[String, Option[(Double, Double, Seq[Int])]] =
-      terms.flatMap(t => Option(dictCache.get(t)).map(t -> _)).toMap
-    val missing = terms.filterNot(snap.contains)
-    val fetched: Map[String, Option[(Double, Double, Seq[Int])]] =
-      if (missing.isEmpty) Map.empty
-      else {
-        if (dictCache.size > MaxCachedTerms) dictCache.clear()
-        val found = SegmentIO.readDictTerms(indexDir, missing)
-          .map { d =>
-            val (idf, bound) = ShardSearch.weights(d, stats)
-            d.term -> (idf, bound, d.shards)
-          }.toMap
-        val entries = missing.map(t => t -> found.get(t)).toMap
-        // stale-reinsert guard: a mutation (append/compaction) may have
-        // advanced the segment generation AFTER ensureFresh cleared the
-        // cache and BEFORE this fetch completed — inserting then would
-        // pin pre-mutation idf/bound/routing values past the clear.
-        // The entries still serve THIS query (computed under fetchGen's
-        // consistent snapshot); they just must not outlive it.
-        if (SegmentIO.generation(indexDir) == fetchGen)
-          entries.foreach { case (t, v) => dictCache.put(t, v) }
-        entries
-      }
-    (snap ++ fetched).collect { case (t, Some(v)) => t -> v }
-  }
+  def stats: SegmentIO.IndexStats = snapshot().stats
 
   /** The shard-level query and the shards it routes to, or None when
     * no shard can match (no indexable term, no term in the dictionary,
     * or an AND query with a zero-df term).
     */
   private def plan(
+      s: Snapshot,
       queryText: String,
       k: Int,
       minScore: Double,
       conjunctive: Boolean): Option[(ShardSearch.Query, Array[Int])] = {
     val qTerms = Tokenizer.tokenize(queryText).distinct.sorted
     if (qTerms.isEmpty) return None
-    val termMeta = termMetaFor(qTerms)
-    ShardSearch.query(qTerms, termMeta.get(_).map(m => (m._1, m._2)), stats, k, minScore,
-      conjunctive).map(q => q -> ShardSearch.route(q, stats.numShards)(termMeta(_)._3))
+    val dict = SegmentIO.residentDict(indexDir, s.gen)
+    ShardSearch.query(qTerms, dict.get(_).map(ShardSearch.weights(_, s.stats)), s.stats, k,
+      minScore, conjunctive).map(q => q -> ShardSearch.route(q, s.stats.numShards)(dict(_).shards))
   }
 
   /** The shard set a query fans out to: exactly the shards
@@ -147,7 +96,7 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * counts with exactly the serving path's routing).
     */
   def routedShards(queryText: String, conjunctive: Boolean = false): Array[Int] =
-    plan(queryText, 0, 0.0, conjunctive).fold(Array.empty[Int])(_._2)
+    plan(snapshot(), queryText, 0, 0.0, conjunctive).fold(Array.empty[Int])(_._2)
 
   /** Retrieval core: BM25 top-k as (doc_id, score) — exact scores,
     * no rounding (rounding is an output-boundary contract only) —
@@ -163,7 +112,7 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
       k: Int,
       minScore: Double = 0.0,
       conjunctive: Boolean = false): DataFrame =
-    topHits(queryText, k, minScore, conjunctive).toSeq.toDF("doc_id", "score")
+    topHits(snapshot(), queryText, k, minScore, conjunctive).toSeq.toDF("doc_id", "score")
 
   /** Round half-up to 4 dp — the output contract of the reference
     * result row (`src/search_engine.py:281`), as Spark's `round()`
@@ -174,10 +123,10 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
   /** BM25 top-k as (doc_id, exact score): the merge
     * ([[ShardSearch.merge]]) of the search's one Spark job, [[fanOut]].
     */
-  private def topHits(
-      queryText: String, k: Int, minScore: Double, conjunctive: Boolean): Array[(Long, Double)] = {
+  private def topHits(s: Snapshot, queryText: String, k: Int, minScore: Double,
+      conjunctive: Boolean): Array[(Long, Double)] = {
     val kk = math.min(k, MaxTopK)
-    ShardSearch.merge(fanOut(queryText, kk, minScore, conjunctive).map(_._2), kk)
+    ShardSearch.merge(fanOut(queryText, kk, minScore, conjunctive, s).map(_._2), kk)
   }
 
   /** The search's one Spark job: each routed shard's top-k, as
@@ -206,31 +155,28 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * a warm shard's WAND.
     */
   private[graft] def fanOut(queryText: String, k: Int, minScore: Double,
-      conjunctive: Boolean): Array[(Int, Array[(Long, Double)])] =
-    plan(queryText, k, minScore, conjunctive) match {
+      conjunctive: Boolean, s: Snapshot = snapshot()): Array[(Int, Array[(Long, Double)])] =
+    plan(s, queryText, k, minScore, conjunctive) match {
       case Some((q, routed)) if routed.nonEmpty =>
-        val (dir, g) = (indexDir, gen) // the generation `plan` ran under
+        val (dir, g) = (indexDir, s.gen) // the generation `plan` ran under
         val sc = spark.sparkContext
         sc.runJob(sc.parallelize(routed.toSeq, math.min(routed.length, sc.defaultParallelism)),
           (shards: Iterator[Int]) => shards.map { shard =>
-            val s = SegmentIO.residentShard(dir, g, shard)
-            shard -> ShardSearch.topK(q, shard, s.postings.get, s.dlPages)
+            val r = SegmentIO.residentShard(dir, g, shard)
+            shard -> ShardSearch.topK(q, shard, r.postings.get, r.dlPages)
           }.toArray).flatten
       case _ => Array.empty
     }
 
-  /** A bounded hit set with its doc-store rows, in hit order: only the
-    * hit shards are read, in parallel, each with a doc_id-set predicate
-    * ([[SegmentIO.readShardDocs]]); `text` only when asked for. A hit
-    * with no doc-store row is dropped, as an inner join drops it.
+  /** A bounded hit set with its doc-store rows, in hit order, from the
+    * hit shards' resident rows ([[SegmentIO.residentDocs]]) under the
+    * search's generation. A hit with no doc-store row is dropped, as an
+    * inner join drops it.
     */
-  private def withDocs(hits: Array[(Long, Double)], withText: Boolean): Array[(IndexedTurn, Double)] = {
-    val dps = stats.docsPerShard
-    val docs = hits.map(_._1).groupBy(_ / dps).toSeq.par
-      .flatMap { case (shard, ids) => SegmentIO.readShardDocs(indexDir, shard.toInt, ids, withText) }
-      .seq.map(d => d.doc_id -> d).toMap
-    hits.flatMap { case (d, sc) => docs.get(d).map(_ -> sc) }
-  }
+  private def withDocs(s: Snapshot, hits: Array[(Long, Double)]): Array[(IndexedTurn, Double)] =
+    hits.flatMap { case (d, sc) =>
+      SegmentIO.residentDocs(indexDir, s.gen, (d / s.stats.docsPerShard).toInt).get(d).map(_ -> sc)
+    }
 
   /** Index-backed BM25 top-k as (caller-keyed id, exact score) — the
     * serving-side retriever for hybrid fusion ([[graft.ops.Hybrid]]
@@ -239,9 +185,9 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * inverted by `Corpus.docIdFromConv`). Routed WAND retrieve
     * (rank-and-score-identical to the exhaustive oracle —
     * EngineParitySpec, HybridServeSpec), then the bounded hit set maps
-    * internal→caller ids through the doc store ([[withDocs]], no
-    * text). Ordered (score desc, id asc); scores exact (rounding is an
-    * output-boundary contract).
+    * internal→caller ids through the doc store ([[withDocs]]). Ordered
+    * (score desc, id asc); scores exact (rounding is an output-boundary
+    * contract).
     *
     * @param idFromConv maps the segment's conv_id back to the caller's
     *                   id space
@@ -252,7 +198,8 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
       idFromConv: String => Long,
       minScore: Double = 0.0,
       conjunctive: Boolean = false): Array[(Long, Double)] = {
-    withDocs(topHits(queryText, k, minScore, conjunctive), withText = false)
+    val s = snapshot()
+    withDocs(s, topHits(s, queryText, k, minScore, conjunctive))
       .map { case (d, sc) => (idFromConv(d.conv_id), sc) }
       .sortBy { case (id, sc) => (-sc, id) }
   }
@@ -271,9 +218,8 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
       if (hasResidual || spec.rerank) k * OverFetchFactor else k, MaxTopK)
     val effMinScore = if (spec.rerank) 0.0 else minScore
 
-    val needText = spec.rerank || spec.boostTerms.nonEmpty || spec.penalizeTerms.nonEmpty
-    val candidates =
-      withDocs(topHits(spec.text, kPrime, effMinScore, spec.conjunctive), needText)
+    val s = snapshot()
+    val candidates = withDocs(s, topHits(s, spec.text, kPrime, effMinScore, spec.conjunctive))
     val rows = SearchEngine.rank(spec, k, candidates, SearchEngine.semantics(spark))
 
     val includeSet = spec.includeKeys.toSet
@@ -293,6 +239,9 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
 }
 
 object SearchEngine {
+
+  /** The segment generation a search runs under, and its stats. */
+  private[graft] final case class Snapshot(gen: Long, stats: SegmentIO.IndexStats)
 
   /** The session settings that Spark's expressions consult and the
     * plain-Scala path must follow: ICU vs JVM case mapping in `lower`,

@@ -265,7 +265,7 @@ object IndexBuilder {
     * an explicit one. Caps every dictionary row at
     * O(DenseRoutingFraction × numShards) routing entries — without it,
     * a common term on a 10⁴-shard corpus carries a 10⁴-entry array and
-    * the dictionary (and the driver's per-term cache) becomes
+    * the dictionary (and the resident copy serving reads) becomes
     * routing-dominated. A dict entry exists only for terms with ≥ 1
     * posting, so an empty list is unambiguous. Routing stays SOUND:
     * the sentinel expands to a superset of the true shard set, and
@@ -309,10 +309,10 @@ object IndexBuilder {
       .withColumn("shards",
         when(size($"shards") >= lit(denseMin), array().cast("array<int>"))
           .otherwise($"shards"))
-      .orderBy($"term")
-      // observed ABOVE the sort: below it, the range partitioner's
-      // sampling job runs the observer too, doubling the row count and
-      // XOR-cancelling the checksum to 0
+      // term order within each of the aggregate's hash-by-term
+      // partitions: no global sort, so no range-sampling job, and each
+      // file's rows depend only on the index, not on the session
+      .sortWithinPartitions($"term")
       .observe(obs, count(lit(1)).as("rows"), dictChecksum.as("x"))
       .write.mode("overwrite").parquet(dictPath(dir))
     val row = obs.get

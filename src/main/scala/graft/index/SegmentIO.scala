@@ -18,7 +18,6 @@ import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.InputFile
-import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, RebaseDateTime}
@@ -36,7 +35,8 @@ import org.apache.spark.sql.internal.SQLConf
   *                within files (text + dl; tokens are NOT stored —
   *                they live only in the build process, see
   *                [[IndexedTurnTk]])
-  *   dictionary/  parquet, term-sorted: term, df, cf, max_tf,
+  *   dictionary/  parquet, hash-partitioned by term into files,
+  *                term-sorted within each: term, df, cf, max_tf,
   *                min_dl, shards (v5 routing list)
   *   postings/    parquet, partitionBy(shard) dirs, (term, block_id)-
   *                sorted within files — a shard dir is the unit of
@@ -127,7 +127,7 @@ object SegmentIO {
     * its terms' shard lists instead of fanning out to every shard of
     * a 10⁴-shard corpus. An EMPTY list is the v6 dense-term sentinel,
     * meaning "all shards" (IndexBuilder.DenseRoutingFraction) — it
-    * keeps dictionary rows and the driver's term cache
+    * keeps dictionary rows and the resident dictionary
     * O(fraction × numShards) bounded instead of letting common terms
     * carry full 10⁴-entry arrays.
     */
@@ -339,13 +339,6 @@ object SegmentIO {
     override protected def getReadSupport(): ReadSupport[Group] = support
   }
 
-  /** `term` equals one of `terms` — the pushdown predicate of the
-    * term-sorted dictionary files.
-    */
-  private def termIn(terms: Iterable[String]): FilterPredicate =
-    terms.map(t => FilterApi.eq(FilterApi.binaryColumn("term"), Binary.fromString(t)): FilterPredicate)
-      .reduce(FilterApi.or)
-
   /** Direct read of ONE shard's norms pages straight from its
     * `norms/shard=N` partition directory: each shard's load opens only
     * its own shard dir (the partitionBy(shard) layout IS the pruning),
@@ -382,37 +375,80 @@ object SegmentIO {
       postings.valuesIterator.flatten.map(b => (b.doc_bytes.length + b.tf_bytes.length).toLong).sum
   }
 
-  /** Executor-resident shards, keyed (dir, generation, shard): the
+  /** Resident segment data, keyed (dir, generation, table, shard): the
     * serving analog of a Lucene node keeping its shards open across
-    * queries, and of the reference's resident in-RAM index
-    * (`src/search_engine.py:48-70`). A warm search task runs WAND only.
+    * queries, and of the reference's resident in-RAM index and id map
+    * (`src/search_engine.py:48-70`). It holds each shard's postings and
+    * norms ([[residentShard]], read by the search tasks), each shard's
+    * doc-store rows ([[residentDocs]]) and the dictionary
+    * ([[residentDict]], shard -1), so a warm search reads no file.
     *
     * The generation in the key is the one the driver planned the query
     * under, so an entry filled before a mutation is never served after
-    * it — not even one a racing task filled after [[invalidateDlCache]]
+    * it — not even one a racing reader filled after [[invalidateDlCache]]
     * ran: that entry carries the old generation, and a fill whose
-    * generation is already superseded here is not kept at all (the
-    * dictionary cache's stale-reinsert rule).
+    * generation is already superseded here is not kept at all.
     *
-    * Bounded by bytes ([[ResidentShard.bytes]]) at 1/8 of the JVM's max
-    * heap; a fill that would pass the cap clears the whole cache first.
+    * Bounded by estimated bytes at 1/8 of the JVM's max heap; a fill
+    * that would pass the cap clears the whole cache first.
     * `residentBytes` and every insert or removal are guarded by the
     * map's monitor; lookups take no lock.
     */
   private val resident =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Int), ResidentShard]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, String, Int), (AnyRef, Long)]()
   private var residentBytes = 0L
   private val MaxResidentBytes = Runtime.getRuntime.maxMemory / 8
+
+  /** The entry for `(dir, gen, table, shard)`, filled on first use by
+    * `load` and counted as `bytes` of it.
+    */
+  private def residentEntry[V <: AnyRef](dir: String, gen: Long, table: String, shard: Int)(
+      load: => V)(bytes: V => Long): V = {
+    val key = (dir, gen, table, shard)
+    val hit = resident.get(key)
+    if (hit != null) hit._1.asInstanceOf[V]
+    else {
+      val loaded = load
+      val size = bytes(loaded)
+      resident.synchronized {
+        val kept = resident.get(key)
+        if (kept != null) kept._1.asInstanceOf[V]
+        else {
+          if (gen >= generation(dir)) {
+            if (residentBytes + size > MaxResidentBytes) {
+              resident.clear()
+              residentBytes = 0L
+            }
+            resident.put(key, (loaded, size))
+            residentBytes += size
+          }
+          loaded
+        }
+      }
+    }
+  }
+
+  /** Bytes the resident entries are counted at, in total. */
+  private[graft] def residentTotalBytes: Long = resident.synchronized(residentBytes)
+
+  /** Fixed per-row estimate of a resident doc-store or dictionary row:
+    * the row object, its boxed fields and string headers, and its map
+    * entry. Strings add 2 bytes per char.
+    */
+  private val RowBytes = 256L
+  private def charBytes(s: String): Long = if (s == null) 0L else 2L * s.length
+  private[graft] def docsBytes(rows: Map[Long, IndexedTurn]): Long =
+    rows.valuesIterator.map(d => RowBytes + charBytes(d.conv_id) + charBytes(d.role) +
+      charBytes(d.text) + charBytes(d.tool)).sum
+  private[graft] def dictBytes(dict: Map[String, DictEntry]): Long =
+    dict.valuesIterator.map(d => RowBytes + charBytes(d.term) + 4L * d.shards.length).sum
 
   /** Shard `shard` of `dir` as of mutation generation `gen`, loaded on
     * first use from one unfiltered read of `postings/shard=N` plus the
     * shard's norms. A shard with no files is empty, and matches nothing.
     */
-  private[graft] def residentShard(dir: String, gen: Long, shard: Int): ResidentShard = {
-    val key = (dir, gen, shard)
-    val hit = resident.get(key)
-    if (hit != null) hit
-    else {
+  private[graft] def residentShard(dir: String, gen: Long, shard: Int): ResidentShard =
+    residentEntry(dir, gen, "postings", shard) {
       val blocks = readParquetDir(s"${postingsPath(dir)}/shard=$shard", None,
           new GroupReadSupport()) { (_, g) =>
         PostingBlock(
@@ -424,23 +460,35 @@ object SegmentIO {
           g.getInteger("block_max_tf", 0), g.getInteger("block_min_dl", 0),
           g.getLong("sum_tf", 0), shard)
       }
-      val loaded = ResidentShard(decodeDlPages(readShardNorms(dir, shard)),
+      ResidentShard(decodeDlPages(readShardNorms(dir, shard)),
         blocks.groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.block_id) })
-      resident.synchronized {
-        if (gen >= generation(dir) && !resident.containsKey(key)) {
-          if (residentBytes + loaded.bytes > MaxResidentBytes) {
-            resident.clear()
-            residentBytes = 0L
-          }
-          resident.put(key, loaded)
-          residentBytes += loaded.bytes
-        }
-      }
-      loaded
-    }
-  }
+    }(_.bytes)
 
-  /** Drop the resident shards of a segment rewritten in place
+  /** Shard `shard`'s doc-store rows (text included) by doc_id, as of
+    * generation `gen`, loaded on first use from one unfiltered read of
+    * `docs/shard=N`. Values equal what [[readDocs]] collects.
+    */
+  private[graft] def residentDocs(dir: String, gen: Long, shard: Int): Map[Long, IndexedTurn] =
+    residentEntry(dir, gen, "docs", shard) {
+      readDocRows(dir, shard, None, withText = true).map(d => d.doc_id -> d).toMap
+    }(docsBytes)
+
+  /** The dictionary by term, as of generation `gen`, loaded on first
+    * use from one read of every `dictionary/` file. Values equal what
+    * [[readDict]] collects.
+    */
+  private[graft] def residentDict(dir: String, gen: Long): Map[String, DictEntry] =
+    residentEntry(dir, gen, "dictionary", -1) {
+      readParquetDir(dictPath(dir), None, new GroupReadSupport()) { (_, g) =>
+        val shards = g.getGroup("shards", 0)
+        DictEntry(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
+          g.getInteger("max_tf", 0), g.getInteger("min_dl", 0),
+          (0 until shards.getFieldRepetitionCount("list"))
+            .map(i => shards.getGroup("list", i).getInteger("element", 0)))
+      }.map(d => d.term -> d).toMap
+    }(dictBytes)
+
+  /** Drop the resident entries of a segment rewritten in place
     * (append, torn-append recovery, compaction, rebuild) and bump its
     * generation — called by the builder. Complete in local[*] mode
     * where executors share the driver JVM (all tests / bench / driver
@@ -449,14 +497,13 @@ object SegmentIO {
     * as new paths.
     */
   private[graft] def invalidateDlCache(dir: String): Unit = resident.synchronized {
-    // the generation doubles as the segment's change signal: driver-side
-    // caches (SearchEngine's dictionary/stats snapshot) re-validate
-    // against it
+    // the generation doubles as the segment's change signal: the
+    // driver's stats snapshot (SearchEngine) re-validates against it
     dirGeneration.merge(dir, java.lang.Long.valueOf(1L),
       (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
     resident.entrySet.removeIf { e =>
       val drop = e.getKey._1 == dir
-      if (drop) residentBytes -= e.getValue.bytes
+      if (drop) residentBytes -= e.getValue._2
       drop
     }
   }
@@ -471,8 +518,7 @@ object SegmentIO {
 
   /** Shared read-only Hadoop conf for the direct parquet reads:
     * `new Configuration()` re-parses the XML default resources on every
-    * call — a real per-call cost on the serving path (dictionary
-    * misses, doc-store fetches, resident-shard loads).
+    * call — a real per-call cost on every resident fill and direct read.
     */
   private[graft] lazy val sharedHadoopConf =
     new org.apache.hadoop.conf.Configuration()
@@ -486,40 +532,31 @@ object SegmentIO {
     terms.flatMap(t => s.postings.getOrElse(t, Array.empty[PostingBlock]))
   }
 
-  /** Direct read of the dictionary rows of a term set — the serving
-    * path's dictionary-miss lookup. A term predicate over the
-    * term-sorted `dictionary/` files skips non-matching row groups and
-    * pages, so a lookup reads a few pages on the driver instead of
-    * running a Spark job. Terms without a row are absent from the
-    * result.
-    */
-  def readDictTerms(dir: String, terms: Iterable[String]): Array[DictEntry] =
-    if (terms.isEmpty) Array.empty
-    else readParquetDir(dictPath(dir), Some(termIn(terms)), new GroupReadSupport()) { (_, g) =>
-      val shards = g.getGroup("shards", 0)
-      DictEntry(g.getString("term", 0), g.getLong("df", 0), g.getLong("cf", 0),
-        g.getInteger("max_tf", 0), g.getInteger("min_dl", 0),
-        (0 until shards.getFieldRepetitionCount("list"))
-          .map(i => shards.getGroup("list", i).getInteger("element", 0)))
-    }
-
   /** Direct read of ONE shard's doc-store rows for a doc-id set,
     * straight from its `docs/shard=N` dir. Docs files are
     * doc_id-sorted, so the doc_id-set predicate skips whole pages;
     * `text` is read only when `withText` (it is most of a row's bytes),
     * else it comes back null.
-    * Values equal what [[readDocs]] collects, `ts` included: it is
-    * decoded by the file's physical type, as Spark's parquet reader
-    * does it (see [[DocsReadSupport]]).
     */
   def readShardDocs(dir: String, shard: Int, docIds: Iterable[Long],
       withText: Boolean = true): Array[IndexedTurn] = {
     if (docIds.isEmpty) return Array.empty
     val ids = new java.util.HashSet[java.lang.Long]()
     docIds.foreach(d => ids.add(d))
-    val pred = FilterApi.in[java.lang.Long, Operators.LongColumn](FilterApi.longColumn("doc_id"), ids)
-    readParquetDir(s"${docsPath(dir)}/shard=$shard", Some(pred),
-        new DocsReadSupport(withText)) { (rs, g) =>
+    readDocRows(dir, shard,
+      Some(FilterApi.in[java.lang.Long, Operators.LongColumn](FilterApi.longColumn("doc_id"), ids)),
+      withText)
+  }
+
+  /** `docs/shard=N`'s rows that pass `filter`. Values equal what
+    * [[readDocs]] collects, `ts` included: it is decoded by the file's
+    * physical type, as Spark's parquet reader does it (see
+    * [[DocsReadSupport]]).
+    */
+  private def readDocRows(dir: String, shard: Int, filter: Option[FilterPredicate],
+      withText: Boolean): Array[IndexedTurn] =
+    readParquetDir(s"${docsPath(dir)}/shard=$shard", filter, new DocsReadSupport(withText)) {
+        (rs, g) =>
       def str(f: String): String =
         if (g.getFieldRepetitionCount(f) == 0) null else g.getString(f, 0)
       IndexedTurn(g.getLong("doc_id", 0), str("conv_id"), g.getInteger("turn_idx", 0),
@@ -528,7 +565,6 @@ object SegmentIO {
         else DateTimeUtils.toJavaTimestamp(rs.tsMicros(g)),
         g.getInteger("dl", 0), shard)
     }
-  }
 
   /** Docs-file read support: projects `text` away unless asked for,
     * and picks the `ts` decoder from the file's footer when the reader

@@ -52,13 +52,14 @@ object RouteProbe {
         docsPerShard = Some(dps), numPartitions = cpus))
     println(s"[route] corpus docs=${stats.numDocs} shards=${stats.numShards} dps=$dps")
 
-    // dictionary routing-size profile: the v6 bound in numbers
-    val dict = SegmentIO.readDict(spark, dir).collect()
+    // dictionary routing-size profile: the v6 bound in numbers, over
+    // the resident dictionary the searches below route with
+    val dict = SegmentIO.residentDict(dir, SegmentIO.generation(dir)).values
     val sentinel = dict.count(_.shards.isEmpty)
     val explicit = dict.filter(_.shards.nonEmpty).map(_.shards.size)
     val expMax = if (explicit.isEmpty) 0 else explicit.max
-    val expAvg = if (explicit.isEmpty) 0.0 else explicit.sum.toDouble / explicit.length
-    println(f"[route] dict terms=${dict.length} sentinel=$sentinel " +
+    val expAvg = if (explicit.isEmpty) 0.0 else explicit.sum.toDouble / explicit.size
+    println(f"[route] dict terms=${dict.size} sentinel=$sentinel " +
       f"explicit_max=$expMax explicit_avg=$expAvg%.1f")
 
     val taskCount = new AtomicLong()
@@ -77,7 +78,7 @@ object RouteProbe {
       ("mid-OR", "t02500 t03000", false))
     cases.foreach { case (label, q, conj) =>
       val routed = eng.routedShards(q, conj)
-      eng.retrieve(q, 10, conjunctive = conj).collect() // warm dict cache
+      eng.retrieve(q, 10, conjunctive = conj).collect() // warm the resident shards
       // settle, then measure the retrieve job's task count exactly
       Thread.sleep(200)
       taskCount.set(0)

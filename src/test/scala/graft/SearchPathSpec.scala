@@ -172,23 +172,29 @@ class SearchPathSpec extends SparkSpec {
       val noText = SegmentIO.readShardDocs(dir, 0, ids, withText = false).sortBy(_.doc_id).toSeq
       assert(noText == spark0.map(_.copy(text = null)), tsType)
       assert(SegmentIO.readShardDocs(dir, 1, ids).isEmpty)
+      // the resident rows are the whole shard, decoded the same way
+      val g = SegmentIO.generation(dir)
+      assert(SegmentIO.residentDocs(dir, g, 0) ==
+        SegmentIO.readDocs(spark, dir).collect().map(d => d.doc_id -> d).toMap, tsType)
+      assert(SegmentIO.residentDocs(dir, g, 1).isEmpty)
     }
   }
 
-  test("readShardDocs and readDictTerms == Spark's reads over a built index") {
+  test("resident docs and dictionary == Spark's reads over a built index") {
     val all = SegmentIO.readDocs(spark, indexDir).collect()
-    val dps = engine.stats.docsPerShard
-    val ids = all.map(_.doc_id).filter(_ % 7 == 3)
-    for ((shard, shardIds) <- ids.groupBy(_ / dps)) {
-      val expected = all.filter(d => shardIds.contains(d.doc_id)).sortBy(_.doc_id).toSeq
-      assert(SegmentIO.readShardDocs(indexDir, shard.toInt, shardIds).sortBy(_.doc_id).toSeq ==
-        expected)
+    val g = SegmentIO.generation(indexDir)
+    for ((shard, rows) <- all.groupBy(_.shard)) {
+      assert(SegmentIO.residentDocs(indexDir, g, shard) == rows.map(d => d.doc_id -> d).toMap)
+      // the direct doc_id-set read appendBuild keeps
+      val ids = rows.map(_.doc_id).filter(_ % 7 == 3)
+      assert(SegmentIO.readShardDocs(indexDir, shard, ids).sortBy(_.doc_id).toSeq ==
+        rows.filter(d => ids.contains(d.doc_id)).sortBy(_.doc_id).toSeq)
     }
-    val terms = Seq("t00000", "t00003", "t00777", "needle3alpha", "nosuchterm")
+    assert(all.map(_.shard).distinct.length == engine.stats.numShards)
     val dictSpark = SegmentIO.readDict(spark, indexDir).collect()
-      .filter(d => terms.contains(d.term)).sortBy(_.term).toSeq
-    assert(SegmentIO.readDictTerms(indexDir, terms).sortBy(_.term).toSeq == dictSpark)
-    assert(dictSpark.map(_.term) == Seq("needle3alpha", "t00000", "t00003", "t00777"))
+    assert(SegmentIO.residentDict(indexDir, g) == dictSpark.map(d => d.term -> d).toMap)
+    assert(Seq("needle3alpha", "t00000", "t00003", "t00777")
+      .forall(SegmentIO.residentDict(indexDir, g).contains))
   }
 
   // ---- plain-Scala rerank / boost == their column forms ----
@@ -441,5 +447,80 @@ class SearchPathSpec extends SparkSpec {
     val late = SegmentIO.residentShard(dir, g, 0)
     assert(late.postings.isEmpty && !(late eq before))
     assert(!(SegmentIO.residentShard(dir, g, 0) eq late))
+  }
+
+  /** Local-filesystem read operations and bytes read so far, by every
+    * thread of this JVM (the driver and the local executor's tasks).
+    */
+  private def localFsReads(): Long = {
+    @annotation.nowarn("cat=deprecation")
+    val all = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+    all.filter(_.getScheme == "file")
+      .map(st => st.getReadOps + st.getLargeReadOps + st.getBytesRead).sum
+  }
+
+  test("a warm search reads no file: dictionary, shards and doc store are resident") {
+    val spec = QuerySpec("t00000 needle3alpha t00005", rerank = true, boostTerms = Seq("t00001"),
+      roles = Seq("user", "assistant"))
+    val first = engine.search(spec)
+    assert(first.hits.nonEmpty)
+    val before = localFsReads()
+    val again = engine.search(spec)
+    assert(localFsReads() == before, "the repeated search read local files")
+    assert(again.hits == first.hits)
+    // the counter does see the reads a cold fill makes
+    SegmentIO.readShardDocs(indexDir, 0, Seq(0L))
+    assert(localFsReads() > before)
+  }
+
+  test("SegmentIO resident docs and dictionary: filled under generation g, re-read after appendBuild") {
+    import spark.implicits._
+    val dir = tempDir("graft-resident-docs")
+    IndexBuilder.build(spark, TranscriptGen.corpus(spark, 20), dir,
+      IndexBuilder.Config(blockSize = 16, numShards = 2, numPartitions = 2))
+    val g = SegmentIO.generation(dir)
+    val total0 = SegmentIO.residentTotalBytes
+    val docs = SegmentIO.residentDocs(dir, g, 0)
+    val dict = SegmentIO.residentDict(dir, g)
+    // a second lookup under g is served resident, and the entries'
+    // bytes count against the one resident cap
+    assert(SegmentIO.residentDocs(dir, g, 0) eq docs)
+    assert(SegmentIO.residentDict(dir, g) eq dict)
+    assert(docs.nonEmpty && dict.nonEmpty)
+    assert(SegmentIO.residentTotalBytes ==
+      total0 + SegmentIO.docsBytes(docs) + SegmentIO.dictBytes(dict))
+
+    // a live engine, warm under g, then an append of a turn whose term
+    // exists only in the delta
+    val live = new SearchEngine(spark, dir)
+    assert(live.search(QuerySpec("t00000")).hits.nonEmpty)
+    assert(live.search(QuerySpec("zebraquokka")).hits.isEmpty)
+    val ts = Timestamp.valueOf("2030-01-01 00:00:00")
+    val delta = Seq(graft.model.Turn("c99999999", 0, "Tool", "the zebraquokka was seen", "grep",
+      ts)).toDS()
+    val st = IndexBuilder.appendBuild(spark, delta, dir, numPartitions = 2)
+    val g1 = SegmentIO.generation(dir)
+    assert(g1 > g)
+    val hits = live.search(QuerySpec("zebraquokka", roles = Seq("tool"))).hits
+    assert(hits.map(h => (h.doc_id, h.conv_id, h.turn_idx, h.role, h.tool, h.ts)) ==
+      Seq((st.numDocs - 1, "c99999999", 0, "Tool", "grep", ts)))
+    assert(live.stats == st)
+    // g's entries left the resident total with the mutation; what the
+    // search filled under g1 is in it
+    val hitShard = ((st.numDocs - 1) / st.docsPerShard).toInt
+    assert(live.routedShards("zebraquokka").toSeq == Seq(hitShard))
+    val totalG1 = SegmentIO.residentTotalBytes
+    assert(totalG1 == total0 + SegmentIO.dictBytes(SegmentIO.residentDict(dir, g1)) +
+      SegmentIO.docsBytes(SegmentIO.residentDocs(dir, g1, hitShard)) +
+      SegmentIO.residentShard(dir, g1, hitShard).bytes)
+
+    // a reader planned under g that fills after the bump is not kept
+    val lateDocs = SegmentIO.residentDocs(dir, g, 0)
+    val lateDict = SegmentIO.residentDict(dir, g)
+    assert(!(lateDocs eq docs) && !(lateDict eq dict))
+    assert(lateDict.contains("zebraquokka")) // read from the files as they are now
+    assert(!(SegmentIO.residentDocs(dir, g, 0) eq lateDocs))
+    assert(!(SegmentIO.residentDict(dir, g) eq lateDict))
+    assert(SegmentIO.residentTotalBytes == totalG1)
   }
 }
