@@ -30,9 +30,10 @@ import graft.tokenize.Tokenizer
   * A search runs ONE Spark job: the routed fan-out, a pre-planned
   * `runJob` of at most `defaultParallelism` tasks that visit exactly
   * the routed shards, each running the [[graft.query.ShardSearch]]
-  * kernel that [[graft.query.LocalIndex]] runs too over its executor's
-  * generation-keyed resident copy of the shard; the driver merges the
-  * per-shard top-k lists (see [[fanOut]]). Everything around it is
+  * kernel over its executor's generation-keyed resident copy of the
+  * shard; the driver merges the per-shard top-k lists (see [[fanOut]]).
+  * The snapshot, plan, kernel and merge are the ones
+  * [[graft.query.LocalIndex]] runs in process. Everything around it is
   * bounded (at most MaxTopK candidates), so, as in the reference, it
   * runs in process: the dictionary and the doc-store rows come from
   * `SegmentIO`'s resident cache ([[SegmentIO.residentDict]],
@@ -46,57 +47,22 @@ import graft.tokenize.Tokenizer
   */
 class SearchEngine(spark: SparkSession, indexDir: String) {
   import spark.implicits._
-  import SearchEngine.Snapshot
+  import ShardSearch.Snapshot
 
   val MaxTopK = 10000 // reference MAX_TOP_K, config/config.py:271
   val OverFetchFactor = 5 // reference search_k = top_k * 5
 
-  /** The segment's stats under its current mutation generation, read
-    * again only when the generation moves (every in-place mutation —
-    * append, recovery, compaction — bumps it via
-    * `SegmentIO.invalidateDlCache`). A search takes one snapshot and
-    * uses its generation for the dictionary, the fan-out's resident
-    * shards and the doc store alike, so a query after an append sees
-    * the new stats, dictionary entries, routing lists and docs, and a
-    * query never mixes two generations' resident data.
-    */
-  @volatile private var current: Snapshot = _
-  private def snapshot(): Snapshot = {
-    val g = SegmentIO.generation(indexDir)
-    val s = current
-    if (s != null && s.gen == g) s
-    else synchronized {
-      if (current == null || current.gen != g) current = Snapshot(g, SegmentIO.readStats(indexDir))
-      current
-    }
-  }
+  private def snapshot(): Snapshot = ShardSearch.snapshot(indexDir)
   def stats: SegmentIO.IndexStats = snapshot().stats
-
-  /** The shard-level query and the shards it routes to, or None when
-    * no shard can match (no indexable term, no term in the dictionary,
-    * or an AND query with a zero-df term).
-    */
-  private def plan(
-      s: Snapshot,
-      queryText: String,
-      k: Int,
-      minScore: Double,
-      conjunctive: Boolean): Option[(ShardSearch.Query, Array[Int])] = {
-    val qTerms = Tokenizer.tokenize(queryText).distinct.sorted
-    if (qTerms.isEmpty) return None
-    val dict = SegmentIO.residentDict(indexDir, s.gen)
-    ShardSearch.query(qTerms, dict.get(_).map(ShardSearch.weights(_, s.stats)), s.stats, k,
-      minScore, conjunctive).map(q => q -> ShardSearch.route(q, s.stats.numShards)(dict(_).shards))
-  }
 
   /** The shard set a query fans out to: exactly the shards
     * [[retrieve]]'s tasks visit, packed into at most
     * `defaultParallelism` tasks ([[fanOut]]). Exposed for routing
-    * probes (RouteProbe evidences rare-vs-dense fan-out at high shard
-    * counts with exactly the serving path's routing).
+    * tests (SearchPathSpec's fan-out test checks rare-vs-dense routing
+    * at a shard count above the core count with it).
     */
   def routedShards(queryText: String, conjunctive: Boolean = false): Array[Int] =
-    plan(snapshot(), queryText, 0, 0.0, conjunctive).fold(Array.empty[Int])(_._2)
+    ShardSearch.plan(snapshot(), queryText, 0, 0.0, conjunctive).fold(Array.empty[Int])(_._2)
 
   /** Retrieval core: BM25 top-k as (doc_id, score) — exact scores,
     * no rounding (rounding is an output-boundary contract only) —
@@ -135,16 +101,14 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     *
     * Shard fan-out with NO scan stage and NO shuffle: the routed shards
     * are packed into `P = min(routed, defaultParallelism)` tasks, and a
-    * task runs [[ShardSearch.topK]] for each shard it holds over its
-    * executor's resident copy of that shard
-    * ([[SegmentIO.residentShard]], filled on first use from the shard's
-    * own postings/shard=N and norms/shard=N dirs) — the Lucene
+    * task runs [[ShardSearch.searchResident]] for each shard it holds,
+    * over its executor's resident copy of that shard — the Lucene
     * shard-replica serving model. A warm task runs WAND only. The
     * resident copy is keyed by the generation this query was planned
     * under, so no task serves a shard as it was before a mutation the
     * plan has seen. The closure captures locals only (never `this`)
-    * and ships just the [[ShardSearch.Query]]: the present terms'
-    * (idf, bound), not their routing lists.
+    * and ships just the [[ShardSearch.Query]] (the present terms'
+    * (idf, bound), not their routing lists) and the snapshot.
     *
     * The job is a pre-planned `runJob` over an RDD, not a Dataset:
     * planning, optimizing and code-generating a Dataset per query cost
@@ -156,15 +120,13 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     */
   private[graft] def fanOut(queryText: String, k: Int, minScore: Double,
       conjunctive: Boolean, s: Snapshot = snapshot()): Array[(Int, Array[(Long, Double)])] =
-    plan(s, queryText, k, minScore, conjunctive) match {
+    ShardSearch.plan(s, queryText, k, minScore, conjunctive) match {
       case Some((q, routed)) if routed.nonEmpty =>
-        val (dir, g) = (indexDir, s.gen) // the generation `plan` ran under
         val sc = spark.sparkContext
         sc.runJob(sc.parallelize(routed.toSeq, math.min(routed.length, sc.defaultParallelism)),
-          (shards: Iterator[Int]) => shards.map { shard =>
-            val r = SegmentIO.residentShard(dir, g, shard)
-            shard -> ShardSearch.topK(q, shard, r.postings.get, r.dlPages)
-          }.toArray).flatten
+          (shards: Iterator[Int]) =>
+            shards.map(shard => shard -> ShardSearch.searchResident(q, s, shard)).toArray)
+          .flatten
       case _ => Array.empty
     }
 
@@ -239,9 +201,6 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
 }
 
 object SearchEngine {
-
-  /** The segment generation a search runs under, and its stats. */
-  private[graft] final case class Snapshot(gen: Long, stats: SegmentIO.IndexStats)
 
   /** The session settings that Spark's expressions consult and the
     * plain-Scala path must follow: ICU vs JVM case mapping in `lower`,

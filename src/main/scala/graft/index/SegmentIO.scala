@@ -357,7 +357,7 @@ object SegmentIO {
     * two-level lookup [[graft.query.ShardSearch.topK]] runs); empty
     * when the shard has no rows.
     */
-  def decodeDlPages(rows: Array[NormsRow]): Array[Array[Int]] = {
+  private def decodeDlPages(rows: Array[NormsRow]): Array[Array[Int]] = {
     val arrs = new Array[Array[Int]](if (rows.isEmpty) 0 else rows.map(_.page).max + 1)
     rows.foreach(p => arrs(p.page) = Varbyte.decodeInts(p.dl_bytes, p.n))
     arrs
@@ -366,11 +366,14 @@ object SegmentIO {
   /** One shard's query-side working set, as a WAND task needs it: the
     * decoded dl pages and every posting block of the shard, per term in
     * block_id order, still compressed. `bytes` is what it holds: the
-    * blocks' doc/tf bytes plus 4 per decoded dl.
+    * blocks' doc/tf bytes plus 4 per decoded dl. `postings` is a hash
+    * table, filled once and never changed: a local query looks each of
+    * its terms up in every routed shard, and an immutable map's trie
+    * levels cost it a cache miss each.
     */
   final case class ResidentShard(
       dlPages: Array[Array[Int]],
-      postings: Map[String, Array[PostingBlock]]) {
+      postings: collection.Map[String, Array[PostingBlock]]) {
     val bytes: Long = dlPages.iterator.map(4L * _.length).sum +
       postings.valuesIterator.flatten.map(b => (b.doc_bytes.length + b.tf_bytes.length).toLong).sum
   }
@@ -378,10 +381,13 @@ object SegmentIO {
   /** Resident segment data, keyed (dir, generation, table, shard): the
     * serving analog of a Lucene node keeping its shards open across
     * queries, and of the reference's resident in-RAM index and id map
-    * (`src/search_engine.py:48-70`). It holds each shard's postings and
-    * norms ([[residentShard]], read by the search tasks), each shard's
-    * doc-store rows ([[residentDocs]]) and the dictionary
-    * ([[residentDict]], shard -1), so a warm search reads no file.
+    * (`src/search_engine.py:48-70`). It holds the stats
+    * ([[residentStats]], shard -1), the dictionary ([[residentDict]],
+    * shard -1), each shard's postings and norms ([[residentShard]]) and
+    * each shard's doc-store rows ([[residentDocs]]), so a warm query
+    * reads no file. It is the one resident copy of a segment: both
+    * serving paths, [[graft.query.LocalIndex]] and
+    * [[graft.api.SearchEngine]], read it.
     *
     * The generation in the key is the one the driver planned the query
     * under, so an entry filled before a mutation is never served after
@@ -394,8 +400,9 @@ object SegmentIO {
     * `residentBytes` and every insert or removal are guarded by the
     * map's monitor; lookups take no lock.
     */
-  private val resident =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, String, Int), (AnyRef, Long)]()
+  // a case class key compares gen and shard unboxed, unlike a tuple
+  private final case class Key(dir: String, gen: Long, table: String, shard: Int)
+  private val resident = new java.util.concurrent.ConcurrentHashMap[Key, (AnyRef, Long)]()
   private var residentBytes = 0L
   private val MaxResidentBytes = Runtime.getRuntime.maxMemory / 8
 
@@ -404,7 +411,7 @@ object SegmentIO {
     */
   private def residentEntry[V <: AnyRef](dir: String, gen: Long, table: String, shard: Int)(
       load: => V)(bytes: V => Long): V = {
-    val key = (dir, gen, table, shard)
+    val key = Key(dir, gen, table, shard)
     val hit = resident.get(key)
     if (hit != null) hit._1.asInstanceOf[V]
     else {
@@ -443,6 +450,13 @@ object SegmentIO {
   private[graft] def dictBytes(dict: Map[String, DictEntry]): Long =
     dict.valuesIterator.map(d => RowBytes + charBytes(d.term) + 4L * d.shards.length).sum
 
+  /** The stats of `dir` as of generation `gen`, read on first use from
+    * `stats.json`. Counted at no bytes: one small record per segment
+    * generation, beside entries of kilobytes to megabytes.
+    */
+  private[graft] def residentStats(dir: String, gen: Long): IndexStats =
+    residentEntry(dir, gen, "stats", -1)(readStats(dir))(_ => 0L)
+
   /** Shard `shard` of `dir` as of mutation generation `gen`, loaded on
     * first use from one unfiltered read of `postings/shard=N` plus the
     * shard's norms. A shard with no files is empty, and matches nothing.
@@ -461,7 +475,8 @@ object SegmentIO {
           g.getLong("sum_tf", 0), shard)
       }
       ResidentShard(decodeDlPages(readShardNorms(dir, shard)),
-        blocks.groupBy(_.term).map { case (t, bs) => t -> bs.sortBy(_.block_id) })
+        collection.mutable.HashMap.from(
+          blocks.groupBy(_.term).iterator.map { case (t, bs) => t -> bs.sortBy(_.block_id) }))
     }(_.bytes)
 
   /** Shard `shard`'s doc-store rows (text included) by doc_id, as of
@@ -497,12 +512,12 @@ object SegmentIO {
     * as new paths.
     */
   private[graft] def invalidateDlCache(dir: String): Unit = resident.synchronized {
-    // the generation doubles as the segment's change signal: the
-    // driver's stats snapshot (SearchEngine) re-validates against it
+    // the generation doubles as the segment's change signal: every
+    // query's snapshot (ShardSearch.snapshot) reads it first
     dirGeneration.merge(dir, java.lang.Long.valueOf(1L),
       (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
     resident.entrySet.removeIf { e =>
-      val drop = e.getKey._1 == dir
+      val drop = e.getKey.dir == dir
       if (drop) residentBytes -= e.getValue._2
       drop
     }

@@ -4,69 +4,67 @@ import org.apache.spark.sql.SparkSession
 
 import graft.index.SegmentIO
 import graft.index.SegmentIO.{DictEntry, PostingBlock}
-import graft.tokenize.Tokenizer
 
-/** In-memory serving copy of a segment: the analog of the reference
+/** In-process serving of a segment: the analog of the reference
   * keeping its FAISS index + id map resident in the Flask process
   * (`src/search_engine.py:48-70` lazy init, reused across requests).
   *
-  * On a cluster each serving node holds its shard subset in RAM
-  * (Lucene/ES model); in this sandbox one JVM holds all shards. Each
-  * query visits the shards [[ShardSearch.route]] picks from the
-  * dictionary's shard lists, each searched by the same [[ShardSearch]]
-  * kernel the distributed path's fan-out tasks run
-  * ([[graft.api.SearchEngine.retrieve]]), here fed the resident blocks
-  * and dl pages, and the per-shard lists go through the same
-  * [[ShardSearch.merge]]; this class is tested rank-identical to the
-  * distributed path and to the exact oracle.
+  * It keeps no copy of its own: it reads the one resident cache
+  * [[graft.api.SearchEngine]] reads too (`SegmentIO`'s, keyed by
+  * segment generation), so construction loads nothing and runs no Spark
+  * job, and a query after an append, recovery or compaction answers from
+  * the new generation. `spark` is not used; it keeps the constructor the
+  * same as SearchEngine's. Each query takes one [[ShardSearch.snapshot]],
+  * runs [[ShardSearch.plan]] and searches the routed shards in turn on
+  * the calling thread with the kernel the distributed path's fan-out
+  * tasks run, then [[ShardSearch.merge]]s them; this class is tested
+  * rank-identical to the distributed path and to the exact oracle.
   *
-  * Memory bound: postings are kept COMPRESSED (delta+varbyte blocks,
-  * ~1.5 bytes/posting); blocks decode on demand during traversal.
+  * Memory bound: the segment counts against the resident cache's one
+  * byte cap (1/8 of max heap), and a fill that would pass it clears the
+  * whole cache. Postings stay COMPRESSED there (delta+varbyte blocks,
+  * ~1.5 bytes/posting) and decode on demand during traversal.
   */
 class LocalIndex(spark: SparkSession, dir: String) {
 
-  val stats: SegmentIO.IndexStats = SegmentIO.readStats(dir)
+  def stats: SegmentIO.IndexStats = ShardSearch.snapshot(dir).stats
 
-  val dict: Map[String, DictEntry] =
-    SegmentIO.readDict(spark, dir).collect().map(d => d.term -> d).toMap
+  def dict: Map[String, DictEntry] = SegmentIO.residentDict(dir, SegmentIO.generation(dir))
 
-  /** shard -> page-indexed decoded dl arrays (two-level lookup:
-    * page = (doc - shardBase) / pageSize, then in-page offset).
+  /** shard -> page-indexed decoded dl arrays, for every shard with
+    * norms (two-level lookup: page = (doc - shardBase) / pageSize, then
+    * in-page offset).
     */
-  val norms: Map[Int, Array[Array[Int]]] =
-    SegmentIO.readNorms(spark, dir).collect()
-      .groupBy(_.shard)
-      .map { case (s, rows) => s -> SegmentIO.decodeDlPages(rows) }
+  def norms: Map[Int, Array[Array[Int]]] = {
+    val s = ShardSearch.snapshot(dir)
+    (0 until s.stats.numShards).map(sh => sh -> SegmentIO.residentShard(dir, s.gen, sh).dlPages)
+      .filter(_._2.nonEmpty).toMap
+  }
 
-  /** term -> shard -> blocks (block_id-sorted), compressed at rest */
-  val postings: Map[String, Map[Int, Array[PostingBlock]]] =
-    SegmentIO.readPostings(spark, dir).collect()
-      .groupBy(_.term)
-      .map { case (t, bs) =>
-        t -> bs.groupBy(_.shard).map { case (s, b) => s -> b.sortBy(_.block_id) }
-      }
+  /** shard -> `term`'s blocks (block_id-sorted), compressed at rest */
+  def postings(term: String): Map[Int, Array[PostingBlock]] = {
+    val s = ShardSearch.snapshot(dir)
+    (0 until s.stats.numShards).flatMap(sh =>
+      SegmentIO.residentShard(dir, s.gen, sh).postings.get(term).map(sh -> _)).toMap
+  }
 
   /** BM25 top-k, identical semantics to the distributed retrieve: the
-    * same routing, the same [[ShardSearch]] kernel per routed shard,
-    * the same merge.
+    * same plan, the same [[ShardSearch]] kernel per routed shard, the
+    * same merge.
     */
   def retrieve(
       queryText: String,
       k: Int,
       minScore: Double = 0.0,
-      conjunctive: Boolean = false): Array[(Long, Double)] =
-    ShardSearch.query(Tokenizer.tokenize(queryText).distinct.sorted,
-        dict.get(_).map(ShardSearch.weights(_, stats)), stats, k, minScore, conjunctive)
-      .fold(Array.empty[(Long, Double)]) { q =>
-        // shards run one after another on the calling thread: a shard's
-        // WAND takes tens of µs, so a thread-pool fan-out saves ~0.2 ms
-        // of a sub-ms call but makes it wait for the slowest pool
-        // thread, and under CPU contention that wait swings the call's
-        // latency from run to run
-        val routed = ShardSearch.route(q, stats.numShards)(dict(_).shards)
-        ShardSearch.merge(routed.map { shard =>
-          ShardSearch.topK(q, shard, postings(_).get(shard),
-            norms.getOrElse(shard, Array.empty[Array[Int]]))
-        }, k)
-      }
+      conjunctive: Boolean = false): Array[(Long, Double)] = {
+    val s = ShardSearch.snapshot(dir)
+    ShardSearch.plan(s, queryText, k, minScore, conjunctive).fold(Array.empty[(Long, Double)]) {
+      // shards run one after another on the calling thread: a shard's
+      // WAND takes tens of µs, so a thread-pool fan-out saves ~0.2 ms
+      // of a sub-ms call but makes it wait for the slowest pool
+      // thread, and under CPU contention that wait swings the call's
+      // latency from run to run
+      case (q, routed) => ShardSearch.merge(routed.map(ShardSearch.searchResident(q, s, _)), k)
+    }
+  }
 }

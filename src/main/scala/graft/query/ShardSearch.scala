@@ -1,15 +1,19 @@
 package graft.query
 
-import graft.index.SegmentIO.{DictEntry, IndexStats, PostingBlock}
+import graft.index.SegmentIO
+import graft.index.SegmentIO.{IndexStats, PostingBlock}
+import graft.tokenize.Tokenizer
 
-/** The shard-search kernel: the shards a query routes to, BM25 top-k
-  * of one query over one shard's posting blocks and dl pages, and the
-  * merge of per-shard top-k lists into the global one. Both serving
-  * paths run it — [[LocalIndex]] over its resident blocks,
-  * [[graft.api.SearchEngine]]'s fan-out tasks over their executor's
-  * resident shards — so the two route and rank identically by
-  * construction. Plays the part of the reference's
-  * bounded top-k search (`src/vector_index.py:115-147`).
+/** The shard-search kernel: a query's plan (its weighted terms and the
+  * shards it routes to), BM25 top-k of one query over one shard's
+  * posting blocks and dl pages, and the merge of per-shard top-k lists
+  * into the global one. Both serving paths take one [[snapshot]], run
+  * one [[plan]] and search each routed shard of `SegmentIO`'s one
+  * resident cache with [[searchResident]] — [[LocalIndex]] in a loop on
+  * the calling thread, [[graft.api.SearchEngine]] across Spark tasks —
+  * so the two route and rank identically by construction. Plays the
+  * part of the reference's bounded top-k search
+  * (`src/vector_index.py:115-147`).
   */
 object ShardSearch {
 
@@ -21,7 +25,7 @@ object ShardSearch {
   /** One query as every shard runs it: its present terms in
     * lexicographic order (the score fold order), plus the segment
     * constants the scorer and the dl lookup need. This is all a fan-out
-    * task receives besides its shard id.
+    * task receives besides its shards and the [[Snapshot]].
     */
   final case class Query(
       terms: Array[Term],
@@ -32,28 +36,49 @@ object ShardSearch {
       minScore: Double,
       conjunctive: Boolean)
 
-  /** A dictionary entry's (idf, WAND upper bound) under `stats`. */
-  def weights(d: DictEntry, stats: IndexStats): (Double, Double) = {
-    val idf = Bm25.idf(stats.numDocs, d.df)
-    (idf, Bm25.boundScore(idf, d.max_tf, d.min_dl, stats.avgdl))
+  /** A segment as one query reads it: the mutation generation that
+    * keys every resident lookup the query makes, and that generation's
+    * stats.
+    */
+  final case class Snapshot(dir: String, gen: Long, stats: IndexStats)
+
+  /** `dir` as of its current generation: one generation read and one
+    * resident stats lookup ([[SegmentIO.residentStats]]). Every in-place
+    * mutation (append, recovery, compaction) bumps the generation, so a
+    * query after it plans with the new stats, dictionary and routing
+    * lists and searches the new shards, and no query mixes two
+    * generations' data.
+    */
+  def snapshot(dir: String): Snapshot = {
+    val g = SegmentIO.generation(dir)
+    Snapshot(dir, g, SegmentIO.residentStats(dir, g))
   }
 
-  /** The shard-level query of `qTerms` (tokenized, distinct, sorted),
-    * or None when no shard can match: no term is in the dictionary, or
-    * an AND query has a term that is not. `weights(t)` is t's
-    * (idf, bound), None for a term the dictionary lacks.
+  /** The plan of `queryText` under `s`: its shard-level query (the
+    * present terms, tokenized, distinct and sorted, with their idf and
+    * WAND bound from the resident dictionary) and the shards it routes
+    * to ([[route]]). None when no shard can match: no indexable term, no
+    * term in the dictionary, or an AND query with a term it lacks.
     */
-  def query(
-      qTerms: Array[String],
-      weights: String => Option[(Double, Double)],
-      stats: IndexStats,
+  def plan(
+      s: Snapshot,
+      queryText: String,
       k: Int,
       minScore: Double,
-      conjunctive: Boolean): Option[Query] = {
-    val present = qTerms.flatMap(t => weights(t).map { case (idf, b) => Term(t, idf, b) })
+      conjunctive: Boolean): Option[(Query, Array[Int])] = {
+    val qTerms = Tokenizer.tokenize(queryText).distinct.sorted
+    if (qTerms.isEmpty) return None
+    val dict = SegmentIO.residentDict(s.dir, s.gen)
+    val present = qTerms.flatMap(t => dict.get(t).map { d =>
+      val idf = Bm25.idf(s.stats.numDocs, d.df)
+      Term(t, idf, Bm25.boundScore(idf, d.max_tf, d.min_dl, s.stats.avgdl))
+    })
     if (present.isEmpty || (conjunctive && present.length < qTerms.length)) None
-    else Some(Query(present, stats.avgdl, stats.docsPerShard, stats.normsPageSize, k,
-      minScore, conjunctive))
+    else {
+      val q = Query(present, s.stats.avgdl, s.stats.docsPerShard, s.stats.normsPageSize, k,
+        minScore, conjunctive)
+      Some(q -> route(q, s.stats.numShards)(dict(_).shards))
+    }
   }
 
   /** The shards `q` must visit, ascending, from the dictionary's
@@ -105,6 +130,15 @@ object ShardSearch {
       if (q.conjunctive) Wand.topKConjunctive(cursors, dl, q.avgdl, q.k, q.minScore)
       else Wand.topKDisjunctive(cursors, dl, q.avgdl, q.k, q.minScore)
     }
+  }
+
+  /** Top-k of `q` over shard `shard` of the resident copy under `s`
+    * ([[SegmentIO.residentShard]], filled on first use from the shard's
+    * own postings/shard=N and norms/shard=N dirs).
+    */
+  def searchResident(q: Query, s: Snapshot, shard: Int): Array[(Long, Double)] = {
+    val r = SegmentIO.residentShard(s.dir, s.gen, shard)
+    topK(q, shard, r.postings.get, r.dlPages)
   }
 
   /** Spark's order of doubles: -0.0 equals 0.0, NaN is the largest. */

@@ -50,6 +50,10 @@ class EngineParitySpec extends SparkSpec {
     // appended shards
     val appended = new SearchEngine(spark, dir)
     appended.retrieve(QuerySet.referenceQueries.head.text, 10).collect()
+    // a LocalIndex opened and queried before the append is live too: it
+    // reads the same generation-keyed resident segment
+    val local = new graft.query.LocalIndex(spark, dir)
+    local.retrieve(QuerySet.referenceQueries.head.text, 10)
     // and warm every shard with a dense query, so the boundary shard
     // the append re-encodes is resident on the executors when it lands
     val dense = "t00000 t00001"
@@ -65,6 +69,8 @@ class EngineParitySpec extends SparkSpec {
       val got = appended.retrieve(q.text, q.k, q.minScore, q.conjunctive)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toIndexedSeq
       assert(got == expected, s"[${q.id}] appended-index mismatch")
+      assert(local.retrieve(q.text, q.k, q.minScore, q.conjunctive).toIndexedSeq == expected,
+        s"[${q.id}] appended-index LocalIndex mismatch")
     }
   }
 

@@ -468,6 +468,28 @@ class SearchPathSpec extends SparkSpec {
     val again = engine.search(spec)
     assert(localFsReads() == before, "the repeated search read local files")
     assert(again.hits == first.hits)
+    // a LocalIndex loads nothing up front: constructing one runs no
+    // Spark job (a marker job after it is the first the listener sees;
+    // events arrive in submission order)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val li = try {
+      val li = new graft.query.LocalIndex(spark, indexDir)
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      val deadline = System.currentTimeMillis() + 10000
+      while (jobs.get == 0 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      li
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 1, "constructing a LocalIndex ran a Spark job")
+    // and a warm local query reads no file either
+    val local = li.retrieve(spec.text, 10)
+    assert(local.nonEmpty)
+    val beforeLocal = localFsReads()
+    assert(li.retrieve(spec.text, 10).toSeq == local.toSeq)
+    assert(localFsReads() == beforeLocal, "the repeated LocalIndex query read local files")
     // the counter does see the reads a cold fill makes
     SegmentIO.readShardDocs(indexDir, 0, Seq(0L))
     assert(localFsReads() > before)
