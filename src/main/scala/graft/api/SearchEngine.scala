@@ -30,8 +30,8 @@ import graft.tokenize.Tokenizer
   * A search runs ONE Spark job: the routed fan-out, a pre-planned
   * `runJob` of at most `defaultParallelism` tasks that visit exactly
   * the routed shards, each running the [[graft.query.ShardSearch]]
-  * kernel over its executor's generation-keyed resident copy of the
-  * shard; the driver merges the per-shard top-k lists (see [[fanOut]]).
+  * kernel over its executor's generation-keyed resident copy of its
+  * shards; the driver merges the per-task top-k lists (see [[fanOut]]).
   * The snapshot, plan, kernel and merge are the ones
   * [[graft.query.LocalIndex]] runs in process. Everything around it is
   * bounded (at most MaxTopK candidates), so, as in the reference, it
@@ -95,20 +95,21 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     ShardSearch.merge(fanOut(queryText, kk, minScore, conjunctive, s).map(_._2), kk)
   }
 
-  /** The search's one Spark job: each routed shard's top-k, as
-    * `(shard, hits)` for every visited shard (hits may be empty), in
-    * no particular order.
+  /** The search's one Spark job: one `(shards visited, top-k)` per
+    * task, the shards ascending, in no particular task order.
     *
     * Shard fan-out with NO scan stage and NO shuffle: the routed shards
-    * are packed into `P = min(routed, defaultParallelism)` tasks, and a
-    * task runs [[ShardSearch.searchResident]] for each shard it holds,
-    * over its executor's resident copy of that shard — the Lucene
-    * shard-replica serving model. A warm task runs WAND only. The
-    * resident copy is keyed by the generation this query was planned
-    * under, so no task serves a shard as it was before a mutation the
-    * plan has seen. The closure captures locals only (never `this`)
-    * and ships just the [[ShardSearch.Query]] (the present terms'
-    * (idf, bound), not their routing lists) and the snapshot.
+    * are packed into `P = min(routed, defaultParallelism)` tasks, each
+    * a contiguous ascending slice of `routed`, and a task runs
+    * [[ShardSearch.searchShards]] over its slice — the slice's shards in
+    * ascending order into one heap, over its executor's resident copy
+    * of each — the Lucene shard-replica serving model. A warm task runs
+    * WAND only, and the driver merges ≤ P lists. The resident copy is
+    * keyed by the generation this query was planned under, so no task
+    * serves a shard as it was before a mutation the plan has seen. The
+    * closure captures locals only (never `this`) and ships just the
+    * [[ShardSearch.Query]] (the present terms' (idf, bound), not their
+    * routing lists) and the snapshot.
     *
     * The job is a pre-planned `runJob` over an RDD, not a Dataset:
     * planning, optimizing and code-generating a Dataset per query cost
@@ -119,14 +120,15 @@ class SearchEngine(spark: SparkSession, indexDir: String) {
     * a warm shard's WAND.
     */
   private[graft] def fanOut(queryText: String, k: Int, minScore: Double,
-      conjunctive: Boolean, s: Snapshot = snapshot()): Array[(Int, Array[(Long, Double)])] =
+      conjunctive: Boolean, s: Snapshot = snapshot()): Array[(Array[Int], Array[(Long, Double)])] =
     ShardSearch.plan(s, queryText, k, minScore, conjunctive) match {
       case Some((q, routed)) if routed.nonEmpty =>
         val sc = spark.sparkContext
         sc.runJob(sc.parallelize(routed.toSeq, math.min(routed.length, sc.defaultParallelism)),
-          (shards: Iterator[Int]) =>
-            shards.map(shard => shard -> ShardSearch.searchResident(q, s, shard)).toArray)
-          .flatten
+          (slice: Iterator[Int]) => {
+            val shards = slice.toArray
+            shards -> ShardSearch.searchShards(q, s, shards)
+          })
       case _ => Array.empty
     }
 

@@ -354,7 +354,7 @@ object SegmentIO {
     }
 
   /** One shard's norms rows as page-indexed decoded dl arrays (the
-    * two-level lookup [[graft.query.ShardSearch.topK]] runs); empty
+    * two-level lookup [[graft.query.ShardSearch.searchShards]] runs); empty
     * when the shard has no rows.
     */
   private def decodeDlPages(rows: Array[NormsRow]): Array[Array[Int]] = {
@@ -540,7 +540,11 @@ object SegmentIO {
 
   /** ONE shard's postings for a fixed term set, answered from the
     * resident shard ([[residentShard]], at the segment's current
-    * generation): each present term's blocks in block_id order.
+    * generation): each present term's blocks in block_id order. The
+    * serving paths do not call it; it stays because the benchmark's
+    * traced `serve` probe (`perfbench` `ServeProbe.afterSearch`) times
+    * per-shard postings reads with it, and `perfbench` builds against
+    * this source.
     */
   def readShardPostings(dir: String, shard: Int, terms: Array[String]): Array[PostingBlock] = {
     val s = residentShard(dir, generation(dir), shard)

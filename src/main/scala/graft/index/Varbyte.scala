@@ -36,6 +36,14 @@ object Varbyte {
   /** Decode exactly n longs from bytes. */
   def decode(bytes: Array[Byte], n: Int): Array[Long] = {
     val out = new Array[Long](n)
+    decodeInto(bytes, n, out)
+    out
+  }
+
+  /** Decode exactly n longs from bytes into `out(0 until n)`; `out` is
+    * a caller-owned buffer reused across blocks.
+    */
+  def decodeInto(bytes: Array[Byte], n: Int, out: Array[Long]): Unit = {
     var i = 0
     var p = 0
     while (i < n) {
@@ -53,7 +61,6 @@ object Varbyte {
       out(i) = x
       i += 1
     }
-    out
   }
 
   /** Delta-encode sorted strictly-increasing doc ids: stores
@@ -74,10 +81,16 @@ object Varbyte {
   }
 
   def decodeDeltas(bytes: Array[Byte], n: Int): Array[Long] = {
-    val gaps = decode(bytes, n)
+    val out = new Array[Long](n)
+    decodeDeltasInto(bytes, n, out)
+    out
+  }
+
+  /** [[decodeDeltas]] into `out(0 until n)`, as [[decodeInto]]. */
+  def decodeDeltasInto(bytes: Array[Byte], n: Int, out: Array[Long]): Unit = {
+    decodeInto(bytes, n, out)
     var i = 1
-    while (i < n) { gaps(i) += gaps(i - 1); i += 1 }
-    gaps
+    while (i < n) { out(i) += out(i - 1); i += 1 }
   }
 
   def encodeInts(xs: Array[Int]): Array[Byte] =

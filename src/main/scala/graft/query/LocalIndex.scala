@@ -15,10 +15,12 @@ import graft.index.SegmentIO.{DictEntry, PostingBlock}
   * job, and a query after an append, recovery or compaction answers from
   * the new generation. `spark` is not used; it keeps the constructor the
   * same as SearchEngine's. Each query takes one [[ShardSearch.snapshot]],
-  * runs [[ShardSearch.plan]] and searches the routed shards in turn on
-  * the calling thread with the kernel the distributed path's fan-out
-  * tasks run, then [[ShardSearch.merge]]s them; this class is tested
-  * rank-identical to the distributed path and to the exact oracle.
+  * runs [[ShardSearch.plan]] and searches all its routed shards, in
+  * ascending order into one top-k heap, with [[ShardSearch.searchShards]]
+  * on the calling thread — the kernel each of the distributed path's
+  * fan-out tasks runs over its slice of the shards; this class is
+  * tested rank-identical to the distributed path and to the exact
+  * oracle.
   *
   * Memory bound: the segment counts against the resident cache's one
   * byte cap (1/8 of max heap), and a fill that would pass it clears the
@@ -49,8 +51,9 @@ class LocalIndex(spark: SparkSession, dir: String) {
   }
 
   /** BM25 top-k, identical semantics to the distributed retrieve: the
-    * same plan, the same [[ShardSearch]] kernel per routed shard, the
-    * same merge.
+    * same plan and the same [[ShardSearch.searchShards]] kernel, here
+    * over every routed shard in one call. k may exceed the number of
+    * matches (every match is returned; the heap grows on demand).
     */
   def retrieve(
       queryText: String,
@@ -59,12 +62,12 @@ class LocalIndex(spark: SparkSession, dir: String) {
       conjunctive: Boolean = false): Array[(Long, Double)] = {
     val s = ShardSearch.snapshot(dir)
     ShardSearch.plan(s, queryText, k, minScore, conjunctive).fold(Array.empty[(Long, Double)]) {
-      // shards run one after another on the calling thread: a shard's
-      // WAND takes tens of µs, so a thread-pool fan-out saves ~0.2 ms
-      // of a sub-ms call but makes it wait for the slowest pool
-      // thread, and under CPU contention that wait swings the call's
-      // latency from run to run
-      case (q, routed) => ShardSearch.merge(routed.map(ShardSearch.searchResident(q, s, _)), k)
+      // shards run one after another on the calling thread, into one
+      // heap: a shard's WAND takes a few µs, and the k-th best score of
+      // the shards before it prunes its blocks from the start, where a
+      // thread-pool fan-out would make the call wait for its slowest
+      // pool thread and swing with host load
+      case (q, routed) => ShardSearch.searchShards(q, s, routed)
     }
   }
 }

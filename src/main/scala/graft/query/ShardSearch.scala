@@ -1,18 +1,19 @@
 package graft.query
 
 import graft.index.SegmentIO
-import graft.index.SegmentIO.{IndexStats, PostingBlock}
+import graft.index.SegmentIO.{IndexStats, ResidentShard}
 import graft.tokenize.Tokenizer
 
 /** The shard-search kernel: a query's plan (its weighted terms and the
-  * shards it routes to), BM25 top-k of one query over one shard's
-  * posting blocks and dl pages, and the merge of per-shard top-k lists
-  * into the global one. Both serving paths take one [[snapshot]], run
-  * one [[plan]] and search each routed shard of `SegmentIO`'s one
-  * resident cache with [[searchResident]] — [[LocalIndex]] in a loop on
-  * the calling thread, [[graft.api.SearchEngine]] across Spark tasks —
-  * so the two route and rank identically by construction. Plays the
-  * part of the reference's bounded top-k search
+  * shards it routes to), BM25 top-k of one query over a run of shards
+  * into one bounded heap ([[searchShards]]), and the merge of such
+  * top-k lists into the global one. Both serving paths take one
+  * [[snapshot]], run one [[plan]] and search the routed shards of
+  * `SegmentIO`'s one resident cache with [[searchShards]] —
+  * [[LocalIndex]] all of them in one call on the calling thread,
+  * [[graft.api.SearchEngine]] one contiguous ascending slice per Spark
+  * task, then [[merge]] — so the two route and rank identically by
+  * construction. Plays the part of the reference's bounded top-k search
   * (`src/vector_index.py:115-147`).
   */
 object ShardSearch {
@@ -102,43 +103,50 @@ object ShardSearch {
     else routes.flatten.distinct.sorted
   }
 
-  /** Top-k of `q` over one shard, (score desc, doc_id asc).
+  /** Top-k of `q` over `shards` of the resident copy under `s`
+    * ([[SegmentIO.residentShard]], filled on first use from each
+    * shard's own postings/shard=N and norms/shard=N dirs): at most k
+    * hits, (score desc, doc_id asc).
     *
-    * @param blocks  the shard's posting blocks of a term, None when the
-    *                shard holds none
-    * @param dlPages the shard's decoded dl pages, indexed by page
+    * The shards are searched in ascending order into ONE bounded heap,
+    * so the k-th best score the earlier shards reached prunes the later
+    * shards' blocks and pivots from their first doc. This is exact:
+    * doc_id = shard × docsPerShard + offset, so docs reach the heap in
+    * ascending doc_id and an equal-score later doc never displaces an
+    * earlier one — the result equals [[merge]] of each shard's own
+    * top-k. A list that is not strictly ascending is sorted (and
+    * de-duplicated) first; splitting one heap's shards across threads
+    * or reordering them would break the tie rule.
     */
-  def topK(
-      q: Query,
-      shard: Int,
-      blocks: String => Option[Array[PostingBlock]],
-      dlPages: Array[Array[Int]]): Array[(Long, Double)] = {
-    val cursors = q.terms.flatMap(t =>
-      blocks(t.term).map(new Wand.TermCursor(t.term, t.idf, t.bound, _, q.avgdl)))
-    // an AND match lives in one doc, so this shard needs every term
-    if (cursors.isEmpty || dlPages.isEmpty || (q.conjunctive && cursors.length < q.terms.length))
-      Array.empty
-    else {
-      // two-level dl lookup: page = (doc - shardBase) / pageSize, then
-      // in-page offset — no array scales with shard size, and no Long
-      // difference is narrowed to Int before the page division
-      val shardBase = shard.toLong * q.docsPerShard
-      val dl = (d: Long) => {
-        val rel = d - shardBase
-        dlPages((rel / q.pageSize).toInt)((rel % q.pageSize).toInt)
-      }
-      if (q.conjunctive) Wand.topKConjunctive(cursors, dl, q.avgdl, q.k, q.minScore)
-      else Wand.topKDisjunctive(cursors, dl, q.avgdl, q.k, q.minScore)
-    }
-  }
+  def searchShards(q: Query, s: Snapshot, shards: Array[Int]): Array[(Long, Double)] =
+    searchIn(q, shards)(SegmentIO.residentShard(s.dir, s.gen, _))
 
-  /** Top-k of `q` over shard `shard` of the resident copy under `s`
-    * ([[SegmentIO.residentShard]], filled on first use from the shard's
-    * own postings/shard=N and norms/shard=N dirs).
-    */
-  def searchResident(q: Query, s: Snapshot, shard: Int): Array[(Long, Double)] = {
-    val r = SegmentIO.residentShard(s.dir, s.gen, shard)
-    topK(q, shard, r.postings.get, r.dlPages)
+  /** [[searchShards]] over the shards `shardOf` returns. */
+  private[graft] def searchIn(q: Query, shards: Array[Int])(
+      shardOf: Int => ResidentShard): Array[(Long, Double)] = {
+    val topk = new Wand.TopK(q.k)
+    val ascending = (1 until shards.length).forall(i => shards(i - 1) < shards(i))
+    if (q.k > 0) (if (ascending) shards else shards.distinct.sorted).foreach { shard =>
+      val r = shardOf(shard)
+      val cursors = q.terms.flatMap(t => r.postings.get(t.term).map(
+        new Wand.TermCursor(t.term, t.idf, t.bound, _, q.avgdl)))
+      // an AND match lives in one doc, so this shard needs every term
+      if (cursors.nonEmpty && r.dlPages.nonEmpty &&
+          !(q.conjunctive && cursors.length < q.terms.length)) {
+        // two-level dl lookup: page = (doc - shardBase) / pageSize, then
+        // in-page offset — no array scales with shard size, and no Long
+        // difference is narrowed to Int before the page division
+        val shardBase = shard.toLong * q.docsPerShard
+        val dlPages = r.dlPages
+        val dl = (d: Long) => {
+          val rel = d - shardBase
+          dlPages((rel / q.pageSize).toInt)((rel % q.pageSize).toInt)
+        }
+        if (q.conjunctive) Wand.conjunctive(cursors, dl, q.avgdl, topk, q.minScore)
+        else Wand.disjunctive(cursors, dl, q.avgdl, topk, q.minScore)
+      }
+    }
+    topk.result()
   }
 
   /** Spark's order of doubles: -0.0 equals 0.0, NaN is the largest. */
@@ -150,7 +158,7 @@ object ShardSearch {
     if (c != 0) c else java.lang.Long.compare(a._1, b._1)
   }
 
-  /** The global top-k of per-shard hit lists: score descending in
+  /** The global top-k of hit lists (one per fan-out task): score descending in
     * Spark's double order, then doc_id ascending, then the first k —
     * what `orderBy(desc("score"), asc("doc_id")).limit(k)` returns over
     * their union.

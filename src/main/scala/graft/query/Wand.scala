@@ -1,7 +1,5 @@
 package graft.query
 
-import scala.collection.mutable
-
 import graft.index.SegmentIO.PostingBlock
 import graft.index.Varbyte
 
@@ -17,6 +15,10 @@ import graft.index.Varbyte
   * Determinism (SURVEY §7.5): a doc's score is the sum of per-term
   * contributions in LEXICOGRAPHIC term order, ties broken
   * (score desc, doc_id asc) — identical to [[LocalOracle]].
+  *
+  * The traversal loops allocate nothing per doc or per round: cursors
+  * decode into buffers they own, the heap is two flat arrays, and the
+  * cursor order is kept by an insertion sort on the primitive doc id.
   */
 object Wand {
 
@@ -37,11 +39,17 @@ object Wand {
       blocksIn: Array[PostingBlock],
       avgdl: Double) {
 
-    private val blocks = blocksIn.sortBy(_.block_id)
+    // the resident cache already holds each term's blocks in block_id
+    // order; only a caller's unsorted list is sorted
+    private val blocks =
+      if ((1 until blocksIn.length).forall(i => blocksIn(i - 1).block_id <= blocksIn(i).block_id))
+        blocksIn
+      else blocksIn.sortBy(_.block_id)
     private var bi = 0
     private var pos = -1
-    private var ids: Array[Long] = null
-    private var tfs: Array[Int] = null
+    private var n = 0 // decoded entries of block bi
+    private var ids: Array[Long] = Array.emptyLongArray // reused across blocks
+    private var tfs: Array[Long] = Array.emptyLongArray
     private var blockBound = 0.0
     var curDoc: Long = Long.MaxValue
 
@@ -49,14 +57,16 @@ object Wand {
 
     private def decodeBlock(i: Int): Unit = {
       val b = blocks(i)
-      ids = Varbyte.decodeDeltas(b.doc_bytes, b.n)
-      tfs = Varbyte.decodeInts(b.tf_bytes, b.n)
+      if (ids.length < b.n) { ids = new Array[Long](b.n); tfs = new Array[Long](b.n) }
+      Varbyte.decodeDeltasInto(b.doc_bytes, b.n, ids)
+      Varbyte.decodeInto(b.tf_bytes, b.n, tfs)
+      n = b.n
       blockBound = idf * Bm25.tfNorm(b.block_max_tf, b.block_min_dl, avgdl)
       bi = i
     }
 
     def exhausted: Boolean = curDoc == Long.MaxValue
-    def curTf: Int = tfs(pos)
+    def curTf: Int = tfs(pos).toInt
 
     /** Upper bound of this term's score inside the current block. */
     def curBlockBound: Double =
@@ -65,7 +75,7 @@ object Wand {
     def next(): Unit = {
       if (exhausted) return
       pos += 1
-      if (pos >= ids.length) {
+      if (pos >= n) {
         if (bi + 1 < blocks.length) { decodeBlock(bi + 1); pos = 0 }
         else { curDoc = Long.MaxValue; return }
       }
@@ -86,7 +96,7 @@ object Wand {
       }
       // binary search for first id >= target in [pos, n)
       var lo = pos
-      var hi = ids.length - 1
+      var hi = n - 1
       if (ids(hi) < target) { curDoc = Long.MaxValue; return } // can't happen: last_doc >= target
       while (lo < hi) {
         val mid = (lo + hi) >>> 1
@@ -97,28 +107,96 @@ object Wand {
     }
   }
 
-  /** Bounded top-k heap with (score desc, doc_id asc) selection.
-    * Docs arrive in increasing doc_id, so an equal-score later doc
-    * never displaces an earlier one.
+  /** Bounded top-k heap with (score desc, doc_id asc) selection: a
+    * binary heap over a score array and a doc array whose root is the
+    * current worst, (score asc, doc_id desc) first. Docs must arrive in
+    * increasing doc_id, so an equal-score later doc never displaces an
+    * earlier one and the kept set is exactly the top k. The arrays grow
+    * on demand, so k may be as large as `Int.MaxValue`.
     */
   final class TopK(k: Int) {
-    private val heap = new mutable.PriorityQueue[(Double, Long)]()(
-      // min-heap on (score asc, doc_id desc): head = current worst
-      Ordering.by[(Double, Long), (Double, Long)] { case (s, d) => (-s, d) })
-    def size: Int = heap.size
-    def full: Boolean = heap.size >= k
-    def worst: Double = heap.head._1
+    private var scores = new Array[Double](math.max(0, math.min(k, 16)))
+    private var docs = new Array[Long](scores.length)
+    private var n = 0
+    def full: Boolean = n >= k
+    def worst: Double = scores(0)
     /** Bound check: can a doc with score upper bound `ub` still enter? */
     def canEnter(ub: Double, minScore: Double): Boolean =
-      if (full) ub > worst else ub >= minScore
+      if (full) n > 0 && ub > worst else ub >= minScore
     def offer(doc: Long, score: Double, minScore: Double): Unit = {
       if (score < minScore) return
-      if (!full) heap.enqueue((score, doc))
-      else if (score > worst) { heap.dequeue(); heap.enqueue((score, doc)) }
+      if (!full) {
+        if (n == scores.length) {
+          val cap = math.min(k.toLong, 2L * n).toInt
+          scores = java.util.Arrays.copyOf(scores, cap)
+          docs = java.util.Arrays.copyOf(docs, cap)
+        }
+        n += 1
+        siftUp(n - 1, score, doc)
+      } else if (n > 0 && score > worst) siftDown(score, doc)
     }
+
+    /** (s1, d1) ranks below (s2, d2): lower score, or equal score and
+      * higher doc_id.
+      */
+    private def below(s1: Double, d1: Long, s2: Double, d2: Long): Boolean =
+      s1 < s2 || (s1 == s2 && d1 > d2)
+
+    private def put(i: Int, score: Double, doc: Long): Unit = {
+      scores(i) = score
+      docs(i) = doc
+    }
+
+    private def siftUp(from: Int, score: Double, doc: Long): Unit = {
+      var i = from
+      while (i > 0 && below(score, doc, scores((i - 1) >>> 1), docs((i - 1) >>> 1))) {
+        val p = (i - 1) >>> 1
+        put(i, scores(p), docs(p))
+        i = p
+      }
+      put(i, score, doc)
+    }
+
+    /** Replace the root with (score, doc) and restore the heap. */
+    private def siftDown(score: Double, doc: Long): Unit = {
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        val c = if (l + 1 < n && below(scores(l + 1), docs(l + 1), scores(l), docs(l))) l + 1 else l
+        if (c < n && below(scores(c), docs(c), score, doc)) {
+          put(i, scores(c), docs(c))
+          i = c
+        } else done = true
+      }
+      put(i, score, doc)
+    }
+
+    /** The kept docs as (doc_id, score), score desc then doc_id asc.
+      * Empties the heap.
+      */
     def result(): Array[(Long, Double)] = {
-      val arr: Array[(Double, Long)] = heap.dequeueAll.toArray
-      arr.map(p => (p._2, p._1)).sortBy(p => (-p._2, p._1))
+      val out = new Array[(Long, Double)](n)
+      while (n > 0) {
+        out(n - 1) = (docs(0), scores(0))
+        n -= 1
+        if (n > 0) siftDown(scores(n), docs(n))
+      }
+      out
+    }
+  }
+
+  /** Stable insertion sort of `a` by curDoc: between rounds only the
+    * cursors that moved are out of place.
+    */
+  private def sortByCurDoc(a: Array[TermCursor]): Unit = {
+    var i = 1
+    while (i < a.length) {
+      val c = a(i)
+      var j = i - 1
+      while (j >= 0 && a(j).curDoc > c.curDoc) { a(j + 1) = a(j); j -= 1 }
+      a(j + 1) = c
+      i += 1
     }
   }
 
@@ -134,11 +212,24 @@ object Wand {
       k: Int,
       minScore: Double): Array[(Long, Double)] = {
     val topk = new TopK(k)
-    if (cursors.isEmpty || k <= 0) return topk.result()
+    if (k > 0) disjunctive(cursors, dl, avgdl, topk, minScore)
+    topk.result()
+  }
+
+  /** [[topKDisjunctive]] into `topk`, which may already hold docs of
+    * lower doc_id (earlier shards): its k-th best prunes from the start.
+    */
+  private[query] def disjunctive(
+      cursors: Array[TermCursor],
+      dl: Long => Int,
+      avgdl: Double,
+      topk: TopK,
+      minScore: Double): Unit = {
+    if (cursors.isEmpty) return
     val order = cursors.clone() // sorted by curDoc each round
     var running = true
     while (running) {
-      java.util.Arrays.sort(order, Ordering.by[TermCursor, Long](_.curDoc))
+      sortByCurDoc(order)
       if (order(0).exhausted) { running = false }
       else {
         // pivot: first prefix whose maxScore sum could still enter
@@ -194,7 +285,6 @@ object Wand {
         }
       }
     }
-    topk.result()
   }
 
   /** Conjunctive (AND) posting-list intersection with galloping
@@ -207,9 +297,28 @@ object Wand {
       k: Int,
       minScore: Double): Array[(Long, Double)] = {
     val topk = new TopK(k)
-    if (cursors.isEmpty || k <= 0 || cursors.exists(_.exhausted)) return topk.result()
-    var candidate = cursors.map(_.curDoc).max
-    var running = true
+    if (k > 0) conjunctive(cursors, dl, avgdl, topk, minScore)
+    topk.result()
+  }
+
+  /** The largest curDoc of `cursors`, Long.MaxValue if one is exhausted. */
+  private def maxCurDoc(cursors: Array[TermCursor]): Long = {
+    var max = Long.MinValue
+    var i = 0
+    while (i < cursors.length) { max = math.max(max, cursors(i).curDoc); i += 1 }
+    max
+  }
+
+  /** [[topKConjunctive]] into `topk`, as [[disjunctive]]. */
+  private[query] def conjunctive(
+      cursors: Array[TermCursor],
+      dl: Long => Int,
+      avgdl: Double,
+      topk: TopK,
+      minScore: Double): Unit = {
+    var candidate = maxCurDoc(cursors)
+    // an exhausted cursor sits on Long.MaxValue: nothing intersects
+    var running = cursors.nonEmpty && candidate != Long.MaxValue
     while (running) {
       var aligned = true
       var i = 0
@@ -233,13 +342,13 @@ object Wand {
           j += 1
         }
         topk.offer(candidate, score, minScore)
-        cursors.foreach(_.next())
-        if (cursors.exists(_.exhausted)) running = false
-        else candidate = cursors.map(_.curDoc).max
+        var m = 0
+        while (m < cursors.length) { cursors(m).next(); m += 1 }
+        candidate = maxCurDoc(cursors)
+        if (candidate == Long.MaxValue) running = false
       } else {
         candidate = maxDoc
       }
     }
-    topk.result()
   }
 }

@@ -150,7 +150,7 @@ object PipelinePlanProbe {
       taskCount.set(0)
       val hits = eng.retrieve(q, 10, conjunctive = conj).collect().length
       val tasks = settled()
-      val visited = eng.fanOut(q, 10, 0.0, conj).map(_._1).sorted
+      val visited = eng.fanOut(q, 10, 0.0, conj).flatMap(_._1).sorted
       println(s"[bm25-route] $label routed=${routed.length} tasks=$tasks " +
         s"visited=${visited.length} hits=$hits")
       assert(tasks == math.min(routed.length, p).toLong,

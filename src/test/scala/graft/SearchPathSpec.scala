@@ -409,7 +409,7 @@ class SearchPathSpec extends SparkSpec {
     // the shards the tasks report visiting are exactly the routed
     // ones, each once
     for ((s, r) <- specs.zip(routed)) {
-      val visited = wide.fanOut(s.text, 10, 0.0, s.conjunctive).map(_._1)
+      val visited = wide.fanOut(s.text, 10, 0.0, s.conjunctive).flatMap(_._1)
       assert(visited.sorted.toSeq == r, s.text)
     }
   }
