@@ -56,11 +56,7 @@ object Bench {
     // tmpfs: bench artifacts must not contend with the VM's single
     // virtual disk (see session() note)
     val d = s"/dev/shm/graft-bench-$tag"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    rm(new java.io.File(d))
+    IndexBuilder.deleteRecursively(java.nio.file.Paths.get(d))
     d
   }
 
@@ -253,8 +249,8 @@ object Bench {
     val dp95 = pct(dlat, 0.95)
 
     // ---- driver-contract per-query timings over sfDir ----
-    // pre-build the per-sfDir query-index cache so a format-version
-    // bump doesn't charge the one-time build to whichever bm25 query
+    // pre-build the per-sfDir query indexes (built once per process)
+    // so their one-time build isn't charged to whichever bm25 query
     // happens to run first (the r3 night run recorded 10 s on
     // q_bm25_and for exactly this; its warm time is ~0.6 s)
     try SparkEntry.warmQueryIndex(spark, sfDir)

@@ -1,6 +1,8 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,56 +28,55 @@ object SparkEntry {
 
   // ---------------- shared helpers ----------------
 
-  /** Index built once per sfDir (resume manifests make re-entry a
-    * no-op) and shared across engine-backed queries.
+  /** One temp root per JVM for the query-side indexes, deleted at exit.
+    * Each index is built at most once per (kind, sfDir) in this
+    * process, into its own fresh dir under the root, so a dir is only
+    * ever read by the code that wrote it: nothing is reused across
+    * processes, and a schema change needs no version key.
     */
-  private val idxCache = TrieMap[String, String]()
-  /** Bump when the segment schema changes — keys the on-disk cache so
-    * a stale index from an older build never gets read. v6: the
-    * dictionary's `shards` routing list stores the empty dense-term
-    * sentinel (= all shards) for terms in ≥ DenseRoutingFraction of
-    * shards.
+  private lazy val queryRoot: Path = {
+    val root = Files.createTempDirectory("graft-q")
+    sys.addShutdownHook(IndexBuilder.deleteRecursively(root))
+    root
+  }
+  private val queryIndexes = mutable.Map[(String, String), String]()
+  private def queryIndex(kind: String, sfDir: String)(build: String => Unit): String =
+    queryIndexes.synchronized {
+      queryIndexes.getOrElseUpdate((kind, sfDir), {
+        val dir = Files.createTempDirectory(queryRoot, kind).toString
+        build(dir)
+        dir
+      })
+    }
+
+  /** BM25 segment over the transcripts, shared by the engine-backed
+    * queries.
     */
-  private val SegmentFormatVersion = 6
   private def indexFor(spark: SparkSession, sfDir: String): String =
-    idxCache.getOrElseUpdate(sfDir, {
-      val dir = s"/tmp/graft-qidx-v$SegmentFormatVersion-" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes).map("%02x".format(_)).mkString.take(12)
+    queryIndex("idx", sfDir) { dir =>
       // postingsGroups=4: per-shard-group commit ON in the production
       // path (2 shards/group) — bounds postings re-work after a crash
       // to one group; measured fixed cost ~0.5s/extra wave at this SF
       IndexBuilder.build(spark, Corpus.transcripts(spark, sfDir), dir,
         IndexBuilder.Config(blockSize = 32, numShards = 8, numPartitions = 8,
           postingsGroups = 4))
-      dir
-    })
+    }
 
-  private val engineCache = TrieMap[String, SearchEngine]()
+  // SearchEngine holds no state (a search reads the generation-keyed
+  // resident segment), so each call gets one over its caller's session
   private def engine(spark: SparkSession, sfDir: String): SearchEngine =
-    engineCache.getOrElseUpdate(sfDir,
-      new SearchEngine(spark, indexFor(spark, sfDir)))
+    new SearchEngine(spark, indexFor(spark, sfDir))
 
   /** BM25 segment over the DOCUMENTS table (hybrid fusion's keyword
-    * side) — same builder, same resume-aware on-disk cache as the
-    * transcript index, keyed separately. Internal doc ids map back to
-    * original doc_ids via [[Corpus.docIdFromConv]].
+    * side) — same builder as the transcript index. Internal doc ids map
+    * back to original doc_ids via [[Corpus.docIdFromConv]].
     */
-  private val docsIdxCache = TrieMap[String, String]()
   private def docsIndexFor(spark: SparkSession, sfDir: String): String =
-    docsIdxCache.getOrElseUpdate(sfDir, {
-      val dir = s"/tmp/graft-qdidx-v$SegmentFormatVersion-" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes).map("%02x".format(_)).mkString.take(12)
+    queryIndex("didx", sfDir) { dir =>
       IndexBuilder.build(spark, Corpus.documentsAsTurns(spark, sfDir), dir,
         IndexBuilder.Config(blockSize = 32, numShards = 4, numPartitions = 4,
           postingsGroups = 1))
-      dir
-    })
-  private val docsEngineCache = TrieMap[String, SearchEngine]()
-  private def docsEngine(spark: SparkSession, sfDir: String): SearchEngine =
-    docsEngineCache.getOrElseUpdate(sfDir,
-      new SearchEngine(spark, docsIndexFor(spark, sfDir)))
+    }
 
   /** Index-backed BM25 top-N over documents as (orig doc_id, exact
     * score) rows — [[SearchEngine.retrieveMapped]] (the library's
@@ -84,31 +85,19 @@ object SparkEntry {
     */
   private def docsBm25TopN(
       spark: SparkSession, sfDir: String, queryText: String, n: Int): Array[(Long, Double)] =
-    docsEngine(spark, sfDir).retrieveMapped(queryText, n, Corpus.docIdFromConv)
+    new SearchEngine(spark, docsIndexFor(spark, sfDir))
+      .retrieveMapped(queryText, n, Corpus.docIdFromConv)
 
   /** Persisted IVF ANN index over the embeddings table (q_ann_ivf's
     * serving side + hybrid's semantic retriever): inverted lists
-    * partitioned by cid + centroid table, built once per sfDir. The
-    * centroids table is written LAST — its _SUCCESS marker doubles as
-    * the whole index's completeness predicate across process restarts.
+    * partitioned by cid + centroid table.
     */
   private val IvfStride = 25L
-  private val ivfCache = TrieMap[String, String]()
   private def ivfFor(spark: SparkSession, sfDir: String): String =
-    ivfCache.getOrElseUpdate(sfDir, {
-      // stride is part of the cache key: a stride change MUST miss the
-      // on-disk cache (same rule as SegmentFormatVersion for the BM25
-      // segment — a stale-quantizer index would silently diverge from
-      // the oracle, which replays the stride from source)
-      val dir = s"/tmp/graft-qivf-v1-s$IvfStride-" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes).map("%02x".format(_)).mkString.take(12)
-      if (!new java.io.File(s"$dir/centroids/_SUCCESS").exists) {
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        Similarity.ivfWrite(emb, col("vec_id"), col("embedding"), IvfStride, dir)
-      }
-      dir
-    })
+    queryIndex("ivf", sfDir) { dir =>
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      Similarity.ivfWrite(emb, col("vec_id"), col("embedding"), IvfStride, dir)
+    }
 
   /** Append-path IVF gate fixture: a persisted index built over the
     * corpus MINUS a deterministic holdout (vec_id ≡ 7 mod 10), then
@@ -122,40 +111,24 @@ object SparkEntry {
     * gate thereby exercises append + idempotency + serve end-to-end,
     * not just PipelineOpsSpec.
     */
-  private val ivfAppendCache = TrieMap[String, String]()
   private def ivfAppendedFor(spark: SparkSession, sfDir: String): String =
-    ivfAppendCache.getOrElseUpdate(sfDir, {
-      val dir = s"/tmp/graft-qivfapp-v1-s$IvfStride-" +
-        java.security.MessageDigest.getInstance("MD5")
-          .digest(sfDir.getBytes).map("%02x".format(_)).mkString.take(12)
-      if (!new java.io.File(s"$dir/_APPENDED").exists) {
-        // no marker = a previous attempt may have torn mid-append
-        // (parquet append commits per cid dir, not transactionally);
-        // rebuild from scratch rather than resume into unknown state
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete()
-        }
-        rm(new java.io.File(dir))
-        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        val holdout = pmod(col("vec_id"), lit(10)) === 7
-        Similarity.ivfWrite(emb.filter(!holdout),
-          col("vec_id"), col("embedding"), IvfStride, dir)
-        val n1 = Similarity.ivfAppend(spark, dir, emb.filter(holdout),
-          col("vec_id"), col("embedding"))
-        val n2 = Similarity.ivfAppend(spark, dir, emb.filter(holdout),
-          col("vec_id"), col("embedding"))
-        require(n1 > 0 && n2 == 0,
-          s"ivfAppend gate fixture: first append=$n1 (want >0), re-append=$n2 (want 0)")
-        new java.io.FileOutputStream(s"$dir/_APPENDED").close()
-      }
-      dir
-    })
+    queryIndex("ivfapp", sfDir) { dir =>
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val holdout = pmod(col("vec_id"), lit(10)) === 7
+      Similarity.ivfWrite(emb.filter(!holdout),
+        col("vec_id"), col("embedding"), IvfStride, dir)
+      val n1 = Similarity.ivfAppend(spark, dir, emb.filter(holdout),
+        col("vec_id"), col("embedding"))
+      val n2 = Similarity.ivfAppend(spark, dir, emb.filter(holdout),
+        col("vec_id"), col("embedding"))
+      require(n1 > 0 && n2 == 0,
+        s"ivfAppend gate fixture: first append=$n1 (want >0), re-append=$n2 (want 0)")
+    }
 
-  /** Pre-builds the per-sfDir query-side indexes (transcript BM25
-    * segment, documents BM25 segment, persisted IVF, appended-IVF
-    * fixture) — all no-ops when already on disk — so harnesses keep
-    * the one-time builds out of per-query timings.
+  /** Builds the per-sfDir query-side indexes (transcript BM25 segment,
+    * documents BM25 segment, persisted IVF, appended-IVF fixture) —
+    * no-ops once built in this process — so harnesses keep the
+    * one-time builds out of per-query timings.
     */
   def warmQueryIndex(spark: SparkSession, sfDir: String): Unit = {
     indexFor(spark, sfDir)

@@ -62,7 +62,7 @@ object HeavyHitters {
       pmod(Hashing.hash32(term), lit(buckets.toLong)).as("bucket"))
     // step 1-2: bounded sketch pass — ≤ buckets rows per stratum
     // cross the wire (map-side partial aggregation; asserted
-    // mechanically by PipelinePlanProbe)
+    // mechanically by PlanShapeSpec)
     val heavy = t.groupBy(col("stratum"), col("bucket"))
       .agg(count(lit(1)).as("ub"))
       .filter(col("ub") >= support)

@@ -286,8 +286,9 @@ object Similarity {
     * is the IVF index's routing structure (the analog of the BM25
     * driver dictionary cache) — √n-ish rows, collected once and
     * reused by every probe; whole-entry eviction on overwrite is the
-    * caller's job (q-index dirs are content-hashed per corpus, so
-    * entries are immutable in practice).
+    * caller's job (SparkEntry writes each q-index dir once, in its
+    * own process, before any probe reads it, so its entries never go
+    * stale).
     */
   private val centCache =
     new scala.collection.concurrent.TrieMap[String, Array[(Long, Array[Float])]]

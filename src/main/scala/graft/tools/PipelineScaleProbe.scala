@@ -21,14 +21,17 @@ import graft.tokenize.Tokenizer
   *  - pack: token counting + two-level prefix sum + bin rollup
   *
   * Usage: runMain graft.tools.PipelineScaleProbe [convs] [coresCsv]
+  * (cores default to this host's available processors)
   */
 object PipelineScaleProbe {
   def main(args: Array[String]): Unit = {
     val convs = if (args.length > 0) args(0).toLong else 100000L
-    val coresList = (if (args.length > 1) args(1) else "32").split(",").map(_.toInt)
+    val host = Runtime.getRuntime.availableProcessors
+    val coresList =
+      if (args.length > 1) args(1).split(",").map(_.toInt) else Array(host)
 
     val corpusPath = freshDir("psp-corpus")
-    val s0 = session(32)
+    val s0 = session(host)
     TranscriptGen.corpus(s0, convs).write.mode("overwrite").parquet(corpusPath)
     val n = s0.read.parquet(corpusPath).count()
     println(s"[psp] corpus staged: $n turns")

@@ -13,6 +13,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *        ("all" = every SparkEntry query). Runs in Bench's query
   * session (local[SPARK_GRAFT_CPUS], AQE on, zstd, shm dirs) so
   * numbers are comparable to the driver bench's per-query map.
+  * SPARK_GRAFT_CPUS defaults to this host's available processors.
   */
 object QueryProfiler {
   def main(args: Array[String]): Unit = {
@@ -21,7 +22,8 @@ object QueryProfiler {
     val names =
       if (args.length > 2 && args(2) != "all") args.drop(2).toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.Bench.session(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors))
 
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -1,7 +1,9 @@
 package graft
 
+import scala.util.Try
+
 /** Driver-contract smoke: entry() must return rows on sf0.001, and
-  * every query must have a matching oracle with aligned column names.
+  * every query must have a matching oracle and run to completion.
   */
 class EntrySpec extends SparkSpec {
 
@@ -14,9 +16,11 @@ class EntrySpec extends SparkSpec {
     val sqls = SparkEntry.oracleSql
     assert(qs.keySet == sqls.keySet,
       s"missing oracles: ${qs.keySet.diff(sqls.keySet)}; orphan oracles: ${sqls.keySet.diff(qs.keySet)}")
-    qs.foreach { case (name, fn) =>
+    val failed = qs.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val df = fn(spark, "/root/testdata/sf0.001")
       assert(df.columns.nonEmpty, s"$name returned no columns")
+      Try(df.collect()).failed.toOption.map(e => s"$name: $e")
     }
+    assert(failed.isEmpty, s"${failed.size} queries threw:\n${failed.mkString("\n")}")
   }
 }
