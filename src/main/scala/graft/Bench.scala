@@ -10,7 +10,8 @@ import graft.query.LocalIndex
 /** Per-round benchmark (driver contract: ONE JSON line to stdout).
   *
   * Reports the BASELINE.json metrics:
-  *  - indexed turns/sec (full build pipeline at local[cpus])
+  *  - indexed turns/sec (full build pipeline at local[cpus]; cpus is
+  *    SPARK_GRAFT_CPUS, default this host's available processors)
   *  - p95 BM25 top-10 query latency over the reference query set, on
   *    BOTH serving models: in-RAM LocalIndex (headline; the
   *    reference's resident-index analog) and the distributed
@@ -62,7 +63,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val benchConvs = sys.env.getOrElse("SPARK_GRAFT_BENCH_CONVS", "100000").toLong
     // The harness running this main has a hard timeout, and a bench
     // that exceeds it returns NOTHING (r04: rc=124, no metrics) — worse

@@ -1,5 +1,7 @@
 package graft.query
 
+import org.apache.spark.TaskContext
+
 import graft.index.SegmentIO
 import graft.index.SegmentIO.{IndexStats, ResidentShard}
 import graft.tokenize.Tokenizer
@@ -120,6 +122,24 @@ object ShardSearch {
     */
   def searchShards(q: Query, s: Snapshot, shards: Array[Int]): Array[(Long, Double)] =
     searchIn(q, shards)(SegmentIO.residentShard(s.dir, s.gen, _))
+
+  /** A search's fan-out task: [[searchShards]] over the task's slice of
+    * the routed shards, returning the slice with its top-k. A named class,
+    * not a lambda, so Spark's closure cleaner returns at once instead of
+    * parsing a class file per search; it carries only `q` and `s`.
+    */
+  final class Task(q: Query, s: Snapshot)
+      extends ((TaskContext, Iterator[Int]) => Task.Result) with Serializable {
+    def apply(ctx: TaskContext, slice: Iterator[Int]): Task.Result = {
+      val shards = slice.toArray
+      shards -> searchShards(q, s, shards)
+    }
+  }
+
+  object Task {
+    /** A task's shards, ascending, and their top-k. */
+    type Result = (Array[Int], Array[(Long, Double)])
+  }
 
   /** [[searchShards]] over the shards `shardOf` returns. */
   private[graft] def searchIn(q: Query, shards: Array[Int])(

@@ -414,6 +414,43 @@ class SearchPathSpec extends SparkSpec {
     }
   }
 
+  test("the fan-out task ships only its query and snapshot; fanOut returns tasks in shard order") {
+    // the task survives Java serialization, small, and searches as the kernel does
+    val s = ShardSearch.snapshot(indexDir)
+    val (q, routed) = ShardSearch.plan(s, "t00000 t00001 needle3alpha", 10, 0.0, false).get
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(new ShardSearch.Task(q, s))
+    out.close()
+    val shipped = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+      .readObject().asInstanceOf[ShardSearch.Task]
+    for (slice <- Seq(routed, routed.take(1), routed.drop(1))) {
+      val (visited, hits) = shipped(null, slice.iterator)
+      assert(visited.toSeq == slice.toSeq)
+      assert(hits.toSeq == ShardSearch.searchShards(q, s, slice).toSeq)
+    }
+    assert(bytes.size < 4096, s"${bytes.size} bytes")
+    val text = new String(bytes.toByteArray, java.nio.charset.StandardCharsets.ISO_8859_1)
+    for (name <- Seq("SearchEngine", "SparkSession", "SparkContext"))
+      assert(!text.contains(name), name)
+
+    // 16 shards over defaultParallelism (4) cores: the tasks' slices,
+    // in the order fanOut returns them, concatenate to the routed shards
+    val dir = tempDir("graft-searchpath-order")
+    IndexBuilder.build(spark, TranscriptGen.corpus(spark, 150), dir,
+      IndexBuilder.Config(blockSize = 16, numShards = 16, numPartitions = 8))
+    val wide = new SearchEngine(spark, dir)
+    val p = spark.sparkContext.defaultParallelism
+    for ((text, and) <- Seq("t00000 t00001" -> false, "needle3alpha needle11beta" -> false,
+        "needle5alpha needle5beta" -> true)) {
+      val r = wide.routedShards(text, and)
+      val tasks = wide.fanOut(text, 10, 0.0, and)
+      assert(tasks.length == math.min(r.length, p), text)
+      assert(tasks.forall(_._1.nonEmpty), text)
+      assert(tasks.flatMap(_._1).toSeq == r.toSeq, text)
+    }
+  }
+
   test("SegmentIO resident shard: filled under generation g, re-read after invalidateDlCache") {
     val dir = tempDir("graft-resident")
     IndexBuilder.build(spark, TranscriptGen.corpus(spark, 20), dir,
