@@ -138,14 +138,14 @@ object SparkEntry {
     ()
   }
 
-  /** Engine hits (doc_id, score) → canonical (conv_id, turn_idx,
-    * score rounded 4 dp) via the docs-table metadata join.
+  /** [[SearchEngine.search]]'s hits as canonical (conv_id, turn_idx,
+    * score) rows ordered by key: the keys come from the hits' resident
+    * doc-store rows, the score is the hit's 4-dp output score.
     */
-  private def hitsOut(spark: SparkSession, sfDir: String, hits: DataFrame): DataFrame = {
-    val docs = SegmentIO.readDocs(spark, indexFor(spark, sfDir))
-    docs.join(broadcast(hits), "doc_id")
-      .select(col("conv_id"), col("turn_idx"), round(col("score"), 4).as("score"))
-      .orderBy("conv_id", "turn_idx")
+  private def searchHits(spark: SparkSession, sfDir: String, spec: QuerySpec): DataFrame = {
+    import spark.implicits._
+    engine(spark, sfDir).search(spec).hits.map(h => (h.conv_id, h.turn_idx, h.score))
+      .toDF("conv_id", "turn_idx", "score").orderBy("conv_id", "turn_idx")
   }
 
   // ---- DuckDB BM25 oracle SQL builder (same math as graft.query.Bm25:
@@ -197,20 +197,19 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val sfDir = "/root/testdata/sf0.001"
-    hitsOut(spark, sfDir,
-      engine(spark, sfDir).retrieve("vector window stream", 10))
+    searchHits(spark, sfDir, QuerySpec("vector window stream", topK = 10))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- retrieval core (SURVEY §2.4): engine = index + WAND ----
     "q_bm25_topk" -> ((s, dir) =>
-      hitsOut(s, dir, engine(s, dir).retrieve("vector window stream", 10))),
+      searchHits(s, dir, QuerySpec("vector window stream", topK = 10))),
     "q_bm25_topk_large" -> ((s, dir) =>
-      hitsOut(s, dir, engine(s, dir).retrieve("merge join customer batch", 50))),
+      searchHits(s, dir, QuerySpec("merge join customer batch", topK = 50))),
     "q_bm25_and" -> ((s, dir) =>
-      hitsOut(s, dir, engine(s, dir).retrieve("merge sort join", 15, conjunctive = true))),
+      searchHits(s, dir, QuerySpec("merge sort join", topK = 15, conjunctive = true))),
     "q_bm25_minscore" -> ((s, dir) =>
-      hitsOut(s, dir, engine(s, dir).retrieve("hash scan", 100, minScore = 0.5))),
+      searchHits(s, dir, QuerySpec("hash scan", topK = 100, minScore = 0.5))),
     // Q7: secondary proximity rerank over the over-fetched candidates
     "q_bm25_reranked" -> ((s, dir) => {
       val qText = "table scan merge"
@@ -232,23 +231,15 @@ object SparkEntry {
         .orderBy("conv_id", "turn_idx")
     }),
     // full lifecycle: over-fetch + residual filters (F2/F3) + truncate
-    "q_bm25_filtered" -> ((s, dir) => {
-      import s.implicits._
-      val resp = engine(s, dir).search(QuerySpec("data table row", topK = 10,
+    "q_bm25_filtered" -> ((s, dir) =>
+      searchHits(s, dir, QuerySpec("data table row", topK = 10,
         roles = Seq("user", "assistant"),
         tsAfter = Some(java.sql.Timestamp.from(
-          java.time.Instant.parse("2026-01-01T00:01:00Z")))))
-      resp.hits.map(h => (h.conv_id, h.turn_idx, h.score))
-        .toDF("conv_id", "turn_idx", "score").orderBy("conv_id", "turn_idx")
-    }),
+          java.time.Instant.parse("2026-01-01T00:01:00Z")))))),
     // keyword boost/penalize rescoring (Q8, exact reference formula)
-    "q_bm25_boosted" -> ((s, dir) => {
-      import s.implicits._
-      val resp = engine(s, dir).search(QuerySpec("group agg window", topK = 15,
-        boostTerms = Seq("vector"), penalizeTerms = Seq("slow")))
-      resp.hits.map(h => (h.conv_id, h.turn_idx, h.score))
-        .toDF("conv_id", "turn_idx", "score").orderBy("conv_id", "turn_idx")
-    }),
+    "q_bm25_boosted" -> ((s, dir) =>
+      searchHits(s, dir, QuerySpec("group agg window", topK = 15,
+        boostTerms = Seq("vector"), penalizeTerms = Seq("slow")))),
     // ---- corpus statistics (A1/A2) ----
     "q_corpus_stats" -> ((s, dir) => {
       val toks = Corpus.transcripts(s, dir)
@@ -510,17 +501,20 @@ object SparkEntry {
           round(col("overlap"), 6).as("overlap"))
         .orderBy("id_a", "id_b")
     }),
-    // entity-resolution cascade (reference app.py:694-782): parse
-    // citation strings (app.py:530-567 field regexes), then
-    // exact-id -> normalized-title -> fuzzy-token-overlap, each stage
-    // consuming only what earlier stages missed. Citations are
-    // synthesized deterministically from the documents table: group A
-    // (qid%3==0) keeps its true id, groups B/C get a corrupt id;
-    // group B quotes the exact title (uppercased — exercises
-    // normalization); group C quotes an offset slice (only the fuzzy
-    // stage can match it).
+    // entity-resolution cascade (reference app.py:694-782) over
+    // citations that carry no DOI, author or year: parse citation
+    // strings (app.py:530-567 field regexes), then run the five-stage
+    // cascade with those keys empty, so its DOI and author+year stages
+    // match nothing and exact-id -> normalized-title ->
+    // fuzzy-token-overlap remain, each stage consuming only what
+    // earlier stages missed. Citations are synthesized
+    // deterministically from the documents table: group A (qid%3==0)
+    // keeps its true id, groups B/C get a corrupt id; group B quotes
+    // the exact title (uppercased — exercises normalization); group C
+    // quotes an offset slice (only the fuzzy stage can match it).
     "q_entity_resolution" -> ((s, dir) => {
       val docs = s.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") < 60)
+      val noKeys = Seq("doi_key", "author_key", "year").map(_ -> lit("")).toMap
       val cit = docs.select(col("doc_id").as("qid"),
         concat(lit("PMID: "),
           when(col("doc_id") % 3 === 0, (col("doc_id") + 1000000).cast("string"))
@@ -543,6 +537,7 @@ object SparkEntry {
           EntityResolution.normKey(col("p.title")).as("norm_key"),
           EntityResolution.tokenSet(col("p.title")).as("tk"))
         .localCheckpoint(true)
+        .withColumns(noKeys)
       // 60-row catalog: the broadcast hint propagates through the
       // cascade's projections/filters and pins every catalog-side join
       // to BHJ at plan time (guide §3.1) — caller-side knowledge, the
@@ -551,8 +546,9 @@ object SparkEntry {
         (col("doc_id") + 1000000).cast("string").as("exact_key"),
         EntityResolution.normKey(substring(col("text"), 1, 80)).as("norm_key"),
         EntityResolution.tokenSet(col("text")).as("tk"))
-        .localCheckpoint(true))
-      EntityResolution.resolveCascade(parsed, catalog, minInter = 3, minOverlap = 0.4)
+        .localCheckpoint(true)
+        .withColumns(noKeys))
+      EntityResolution.resolveCascadeFull(parsed, catalog, minInter = 3, minOverlap = 0.4)
         .select(col("qid"), col("cid"), col("method"),
           round(col("score"), 6).as("score"))
         .orderBy("qid")
@@ -795,12 +791,8 @@ object SparkEntry {
       import s.implicits._
       val included = Seq(("c00000000", 1), ("c00000001", 2), ("c00000062", 3),
         ("c00000040", 0), ("c00000055", 5)).toDF("conv_id", "turn_idx")
-      val top = engine(s, dir).retrieve("vector window stream", 10)
-      val docs = SegmentIO.readDocs(s, indexFor(s, dir))
-      val ranked = docs.join(broadcast(top), "doc_id")
-        .orderBy(desc("score"), asc("doc_id"))
-        .select(col("conv_id"), col("turn_idx"), round(col("score"), 4).as("score"))
-      included.join(ranked, Seq("conv_id", "turn_idx"), "left")
+      val top = searchHits(s, dir, QuerySpec("vector window stream", topK = 10))
+      included.join(top, Seq("conv_id", "turn_idx"), "left")
         .select(col("conv_id"), col("turn_idx"),
           when(col("score").isNotNull, lit("found")).otherwise(lit("not_found"))
             .as("status"),

@@ -32,17 +32,6 @@ object VectorMath {
     false
   }
 
-  /** Σ a[i]*b[i] over float arrays, promoted to double, sequential
-    * left-to-right fold (same order as `functions.aggregate`).
-    */
-  def dot(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) { s += a.getFloat(i).toDouble * b.getFloat(i).toDouble; i += 1 }
-    s
-  }
-
   /** cos(a,b) = dot/(|a|·|b|), each accumulator folded sequentially —
     * bit-identical to the former HOF formulation
     * dot(a,b)/(sqrt(dot(a,a))*sqrt(dot(b,b))).
@@ -85,9 +74,9 @@ object VectorMath {
     *
     *   plane(g)[d] = ((1103515245*(g*dim+d) + 12345) % 65536)/65536 - 0.5
     *
-    * Exactly [[graft.ops.Similarity.planeComponent]] and the DuckDB
-    * oracle's `list_transform(range(0,dim), ...)` formula; projection
-    * folds in d order, so buckets are engine-portable.
+    * Exactly the DuckDB oracle's `list_transform(range(0,dim), ...)`
+    * formula (`SparkEntry.lshTableBucketSql`); projection folds in d
+    * order, so buckets are engine-portable.
     */
   def lshBuckets(vec: ArrayData, dim: Int, tables: Int, planes: Int): ArrayData = {
     val n = math.min(dim, vec.numElements())

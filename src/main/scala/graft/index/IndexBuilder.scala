@@ -469,7 +469,7 @@ object IndexBuilder {
     }
 
     writeSnapshot(dir, Seq("docs", "stats", "dictionary", "postings", "norms"))
-    SegmentIO.invalidateDlCache(dir) // a rebuilt path must not serve stale shards
+    SegmentIO.invalidateResident(dir) // a rebuilt path must not serve stale shards
     stats
   }
 
@@ -655,7 +655,7 @@ object IndexBuilder {
     writeDocsAndStatsManifests(dir, newN, totalTokens, docsX0 ^ long0(docsObs("x")))
     writeSnapshot(dir, Seq("docs", "stats", "dictionary", "postings", "norms"))
     SegmentIO.clearAppendMarker(dir) // snapshot committed — append done
-    SegmentIO.invalidateDlCache(dir) // norms rewritten in place
+    SegmentIO.invalidateResident(dir) // norms rewritten in place
 
     deltaIds.unpersist()
     release()
@@ -764,7 +764,7 @@ object IndexBuilder {
       long0(readDocs(spark, dir).agg(docsChecksum).head().get(0)))
     writeSnapshot(dir, Seq("docs", "stats", "dictionary", "postings", "norms"))
     SegmentIO.clearAppendMarker(dir)
-    SegmentIO.invalidateDlCache(dir)
+    SegmentIO.invalidateResident(dir)
   }
 
   /** Encoder rows (doc_id, dl, shard, term, tfinc) of the boundary
@@ -832,7 +832,7 @@ object IndexBuilder {
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
       java.nio.file.Paths.get(dir))
     deleteRecursively(java.nio.file.Paths.get(old))
-    SegmentIO.invalidateDlCache(dir)
+    SegmentIO.invalidateResident(dir)
     st
   }
 

@@ -391,7 +391,7 @@ object SegmentIO {
     *
     * The generation in the key is the one the driver planned the query
     * under, so an entry filled before a mutation is never served after
-    * it — not even one a racing reader filled after [[invalidateDlCache]]
+    * it — not even one a racing reader filled after [[invalidateResident]]
     * ran: that entry carries the old generation, and a fill whose
     * generation is already superseded here is not kept at all.
     *
@@ -511,7 +511,7 @@ object SegmentIO {
     * dirs instead of mutating a live segment, so rewrites there arrive
     * as new paths.
     */
-  private[graft] def invalidateDlCache(dir: String): Unit = resident.synchronized {
+  private[graft] def invalidateResident(dir: String): Unit = resident.synchronized {
     // the generation doubles as the segment's change signal: every
     // query's snapshot (ShardSearch.snapshot) reads it first
     dirGeneration.merge(dir, java.lang.Long.valueOf(1L),
@@ -524,7 +524,7 @@ object SegmentIO {
   }
 
   /** Monotonic per-dir mutation counter, bumped by
-    * [[invalidateDlCache]]. 0 for a never-mutated dir.
+    * [[invalidateResident]]. 0 for a never-mutated dir.
     */
   private val dirGeneration =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]

@@ -9,20 +9,15 @@ import graft.tokenize.Tokenizer
 /** Entity-resolution cascade (reference `app.py:694-782`): match a
   * pasted/parsed citation against the canonical corpus by trying
   * progressively fuzzier keys, each stage consuming only the rows the
-  * previous stages failed to match:
+  * previous stages failed to match. [[resolveCascadeFull]] is the one
+  * cascade: exact id, normalized DOI, normalized title, fuzzy token
+  * overlap, author + year. A caller without some key passes it empty
+  * (`''`), and the stages keyed on it match nothing.
   *
-  *   1. exact identifier        (reference: exact PMID, `:714-722`)
-  *   2. normalized string key   (reference: normalized DOI / exact
-  *                               normalized title, `:724-747`)
-  *   3. fuzzy token overlap     (reference: fuzzy title >=0.4 and
-  *                               author+year fallbacks, `:749-782`,
-  *                               thresholds `:744,896`)
-  *
-  * Stage 3 is a shared-token EQUI-JOIN prefilter (explode distinct
-  * tokens, join on token, count intersections) — never a cross join —
-  * so the pair space scales with token-match fan-out, not |Q|x|C|.
-  * Every stage picks exactly one best match per query row
-  * deterministically.
+  * The overlap stages are shared-token EQUI-JOIN prefilters (explode
+  * distinct tokens, join on token) — never a cross join — so the pair
+  * space scales with token-match fan-out, not |Q|x|C|. Every stage
+  * picks exactly one best match per query row deterministically.
   */
 object EntityResolution {
 
@@ -45,76 +40,12 @@ object EntityResolution {
     */
   def normDoi(c: Column): Column = lower(trim(c))
 
-  /** Engine-portable string normalization for stage-2 keys. */
+  /** Engine-portable string normalization for the title and author keys. */
   def normKey(c: Column): Column =
     trim(regexp_replace(lower(c), "[^a-z0-9]+", " "))
 
-  /** Distinct meaningful tokens for the stage-3 overlap join. */
+  /** Distinct meaningful tokens for the overlap stages (4 and 5). */
   def tokenSet(c: Column): Column = array_distinct(Tokenizer.tokensCol(c))
-
-  /** Cascade resolve.
-    *
-    * @param queries (qid, exact_key, norm_key, tk: array<string>)
-    * @param catalog (cid, exact_key, norm_key, tk: array<string>)
-    * @return (qid, cid, method, score) — one row per matched query;
-    *         unmatched queries are absent (join with "left" outside if
-    *         a not-found marker is wanted)
-    */
-  def resolveCascade(
-      queries: DataFrame,
-      catalog: DataFrame,
-      minInter: Int = 3,
-      minOverlap: Double = 0.4): DataFrame = {
-    val q = queries.select(col("qid"), col("exact_key"), col("norm_key"), col("tk"))
-    val c = catalog.select(col("cid"),
-      col("exact_key").as("c_exact"), col("norm_key").as("c_norm"),
-      col("tk").as("c_tk"))
-
-    // Plan shape (see resolveCascadeFull for the full rationale): the
-    // cheap key stages run over the FULL query set and a single
-    // priority window at the end picks the earliest matching stage per
-    // qid — result-identical to anti-joining between every stage, but
-    // with one residual barrier instead of two and no per-stage
-    // subplan recompute. Only the expensive token-overlap stage is
-    // shielded by an anti-join (its input must stay residual-narrow at
-    // scale: most queries resolve on a key and must never reach the
-    // token explode).
-    val s1 = q.filter(length(col("exact_key")) > 0)
-      .join(c.filter(length(col("c_exact")) > 0),
-        col("exact_key") === col("c_exact"))
-      .select(col("qid"), col("cid"), lit("exact_id").as("method"),
-        lit(1.0).as("score"), lit(1).as("stage"))
-    val s2 = q.filter(length(col("norm_key")) > 0)
-      .join(c.filter(length(col("c_norm")) > 0),
-        col("norm_key") === col("c_norm"))
-      .select(col("qid"), col("cid"), lit("norm_key").as("method"),
-        lit(1.0).as("score"), lit(2).as("stage"))
-
-    // stage 3: fuzzy token overlap with equi-join prefilter, over the
-    // key-unmatched residual only
-    val r2 = q.join(s1.select("qid").unionByName(s2.select("qid")),
-      Seq("qid"), "left_anti")
-    val qTok = r2.select(col("qid"), size(col("tk")).as("qsz"),
-      explode(col("tk")).as("tok"))
-    val cTok = c.select(col("cid"), explode(col("c_tk")).as("tok"))
-    val s3 = qTok.join(cTok, "tok")
-      .groupBy(col("qid"), col("qsz"), col("cid"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("overlap", col("inter").cast("double") / col("qsz"))
-      .filter(col("inter") >= minInter && col("overlap") >= minOverlap)
-      .select(col("qid"), col("cid"), lit("fuzzy_overlap").as("method"),
-        col("overlap").as("score"), lit(3).as("stage"))
-
-    // one window resolves both the stage priority and each stage's own
-    // best-candidate order (key stages: min cid via the constant
-    // score; fuzzy: max overlap then min cid)
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("stage").asc, col("score").desc, col("cid").asc)
-    s1.unionByName(s2).unionByName(s3)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("qid"), col("cid"), col("method"), col("score"))
-  }
 
   /** Full five-stage cascade — the reference's complete fallback chain
     * (`app.py:694-782`):

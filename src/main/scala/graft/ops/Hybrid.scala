@@ -16,7 +16,8 @@ import graft.query.OracleEngine
   *      by EngineParitySpec; SparkEntry's q_hybrid_fusion wires that
   *      path);
   *   2. cosine top-N against a probe vector over (id, vec) — either
-  *      brute-force ([[cosineTopN]]) or the persisted-IVF probe path
+  *      brute-force ([[cosineTopN]], a collect of
+  *      `Similarity.cosineTopK`) or the persisted-IVF probe path
   *      (Similarity.ivfTopKPruned) for the at-scale serving stack;
   *   3. full-outer join of the two TOP LISTS (fusion happens over the
   *      retrieved lists, never the corpora — the standard serving
@@ -33,45 +34,33 @@ import graft.query.OracleEngine
   */
 object Hybrid {
 
-  /** Exhaustive BM25 scores over an arbitrary (id, text) relation —
-    * a thin wrapper over [[OracleEngine.scoreAllKeyed]] (the ONE copy
-    * of the bit-exactness-critical BM25 pipeline; the transcript
-    * corpus calls it keyed (conv_id, turn_idx), this one by id).
-    */
-  def bm25ScoreAll(
-      docs: DataFrame, id: Column, text: Column, queryText: String,
-      statsKey: Option[String] = None): DataFrame =
-    OracleEngine.scoreAllKeyed(
-      docs.select(id.as("id"), text.as("doc_text")),
-      Seq("id"), col("doc_text"), queryText, statsKey = statsKey)
-      .select(col("id"), col("score"))
-
-  /** Oracle-backed BM25 top-N list (score desc, id asc) — a per-query
-    * corpus scan by design: the ground-truth twin for the index-backed
-    * serving path, never the serving plan itself.
+  /** Oracle-backed BM25 top-N list (score desc, id asc) over an
+    * arbitrary (id, text) relation — a per-query corpus scan by
+    * design: the ground-truth twin for the index-backed serving path,
+    * never the serving plan itself. The scores come from
+    * [[OracleEngine.scoreAllKeyed]] (the ONE copy of the
+    * bit-exactness-critical BM25 pipeline; the transcript corpus calls
+    * it keyed (conv_id, turn_idx), this one by id).
     */
   def bm25TopN(
       docs: DataFrame, id: Column, text: Column, queryText: String,
       n: Int, statsKey: Option[String] = None): Array[(Long, Double)] =
-    bm25ScoreAll(docs, id, text, queryText, statsKey)
+    OracleEngine.scoreAllKeyed(
+      docs.select(id.as("id"), text.as("doc_text")),
+      Seq("id"), col("doc_text"), queryText, statsKey = statsKey)
+      .select(col("id"), col("score"))
       .orderBy(desc("score"), asc("id")).limit(n)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
 
-  /** Brute-force cosine top-N rows against one probe vector — the
-    * exactness baseline for the semantic side (same role as
-    * Similarity.knnJoin vs the IVF/LSH scale paths).
+  /** Brute-force cosine top-N list (cos desc, id asc) against one
+    * probe vector: [[Similarity.cosineTopK]], collected — the
+    * exactness baseline for the semantic side.
     */
   def cosineTopN(
       emb: DataFrame, embId: Column, vec: Column,
-      probeId: Long, n: Int): Array[(Long, Double)] = {
-    val probe = emb.filter(embId === probeId).select(vec.as("pvec"))
-    emb.select(embId.as("id"), vec.as("vec"))
-      .filter(col("id") =!= probeId)
-      .crossJoin(broadcast(probe))
-      .select(col("id"), Similarity.cosine(col("vec"), col("pvec")).as("cos"))
-      .orderBy(desc("cos"), asc("id")).limit(n)
+      probeId: Long, n: Int): Array[(Long, Double)] =
+    Similarity.cosineTopK(emb, embId, vec, probeId, n)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
-  }
 
   /** Steps 3-5 of the contract over two already-retrieved bounded
     * lists: full-outer merge, per-side min-max normalization, α-fusion,

@@ -15,18 +15,10 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Σ a[i]*b[i] with sequential fold (both arrays cast to double). */
-  def dot(va: Column, vb: Column): Column =
-    aggregate(zip_with(va, vb, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(v: Column): Column =
-    sqrt(aggregate(transform(v, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
-
-  /** Native codegen kernel (same sequential fold as the HOF
-    * formulation above, bit-identical output — see
-    * [[graft.functions.VectorMath.cosine]]).
+  /** cos(a, b) = Σ a[i]·b[i] / (√Σ a[i]² · √Σ b[i]²), each sum a
+    * sequential left-to-right fold over the elements promoted to
+    * double, as the DuckDB twin `SparkEntry.cosExpr` folds it. A
+    * native codegen kernel ([[graft.functions.VectorMath.cosine]]).
     */
   def cosine(va: Column, vb: Column): Column =
     graft.functions.VectorExpressions.cosineSim(va, vb)
@@ -59,19 +51,13 @@ object Similarity {
     scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
   }
 
-  /** Deterministic pseudo-random hyperplane component — engine-
-    * portable (same formula emitted in the DuckDB oracle):
-    * plane(j)[d] = ((1103515245*(j*dim+d) + 12345) % 65536) / 65536 - 0.5
-    */
-  def planeComponent(j: Int, dim: Int): Column => Column = d =>
-    ((lit(1103515245L) * (lit(j.toLong * dim) + d) + lit(12345L)) % lit(65536L))
-      .cast("double") / lit(65536.0) - lit(0.5)
-
   /** Random-hyperplane LSH bucket id: `planes` sign bits of
     * plane-projections packed into a long. Vectors in the same bucket
     * are near-duplicate candidates (verify with [[cosine]]). Native
-    * codegen kernel; plane formula = [[planeComponent]] with g = j
-    * (single table).
+    * codegen kernel; plane j's components are
+    * plane(j)[d] = ((1103515245*(j*dim+d) + 12345) % 65536) / 65536 - 0.5,
+    * the formula of the DuckDB twin `SparkEntry.lshBucketSql`
+    * (single table, g = j in [[graft.functions.VectorMath.lshBuckets]]).
     */
   def lshBucket(vec: Column, dim: Int, planes: Int): Column =
     element_at(
@@ -107,8 +93,8 @@ object Similarity {
     // (native codegen kernel — a single static call per row) and
     // posexploded to (id, vec, tbl, bucket): no exchange, no persist,
     // no row ever leaves its input partition before the bucket join.
-    // plane(g)[d] with g = tbl*planesPerTable + j mirrors
-    // planeComponent exactly.
+    // plane(g)[d] with g = tbl*planesPerTable + j is the DuckDB twin's
+    // formula (SparkEntry.lshTableBucketSql).
     //
     // Vectors ride THROUGH the bucket shuffle so the exact-cosine
     // verify happens inside pair generation — candidates and

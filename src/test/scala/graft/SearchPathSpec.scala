@@ -451,7 +451,7 @@ class SearchPathSpec extends SparkSpec {
     }
   }
 
-  test("SegmentIO resident shard: filled under generation g, re-read after invalidateDlCache") {
+  test("SegmentIO resident shard: filled under generation g, re-read after invalidateResident") {
     val dir = tempDir("graft-resident")
     IndexBuilder.build(spark, TranscriptGen.corpus(spark, 20), dir,
       IndexBuilder.Config(blockSize = 16, numShards = 2, numPartitions = 2))
@@ -474,7 +474,7 @@ class SearchPathSpec extends SparkSpec {
     // rewrite shard 0 in place, as an append re-encodes its boundary
     // shard, then bump the generation as every mutation path does
     IndexBuilder.deleteRecursively(java.nio.file.Paths.get(SegmentIO.postingsPath(dir), "shard=0"))
-    SegmentIO.invalidateDlCache(dir)
+    SegmentIO.invalidateResident(dir)
     val g1 = SegmentIO.generation(dir)
     assert(g1 == g + 1)
     val after = SegmentIO.residentShard(dir, g1, 0)
